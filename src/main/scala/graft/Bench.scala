@@ -48,18 +48,20 @@ import org.apache.spark.sql.SparkSession
   *  cannot diverge (round-8's "381 s" message vs the 461 s raw driver
   *  file). Both totals are recorded; `primary_total` stays raw.
   *
-  * Floor decomposition (round-8, graft.PlanProbe over an 80-query warm
-  * sample): planning (analyze+optimize+physical) is 0.052 s/query;
+  * Floor decomposition (round-8, a warm plan-vs-execute split over an
+  * 80-query sample; the benchmark's traced catalog run now reports the
+  * planning phases from `queryExecution.tracker`): planning
+  * (analyze+optimize+physical) is 0.052 s/query;
   * execution is 0.217 s/query at sf0.01 and 0.234 s/query at sf0.001 —
   * identical within noise, so the execution term is SCHEDULING, not
   * data. Of it, ~0.046 s/query is AQE's one re-plan barrier per
   * exchange (0.171 s/query with adaptive off); the residual ~0.12 is
   * job+stage launch at local[32]. The sf0.01 floor is launch-bound:
   * pushing it lower means fewer exchanges per query, not faster
-  * operators. AQE stays ON — the per-exchange barrier is exactly what
-  * buys skew-join handling and partition coalescing at the 100 TB
-  * target, and benching with a different conf than production would
-  * report a machine we don't ship.
+  * operators. AQE stays ON unconditionally: round-9's full sf0.01 passes
+  * put adaptive on (214.2 s) within cross-JVM noise of off (243.2 s,
+  * 216.7 s), since coalescing small shuffles repays the re-plan barrier,
+  * and the barrier is what buys skew-join handling at the 100 TB target.
   *    Full per-query detail for both passes goes to BENCH_LOCAL.json in
   *    the repo (the stdout line must stay within the driver's output
   *    window, so it carries the primary per-query map + both totals).
@@ -183,25 +185,7 @@ object Bench {
                       sfDir: String, tag: String): Seq[(String, QueryStats)] = {
     val parts = partitionsFor(sfDir, spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE regime knob for controlled A/Bs (round-9). MEASURED, full
-    // 665-query sf0.01 passes on one machine, fresh JVM each:
-    //   adaptive OFF  243.2 s, then 216.7 s   (two runs, same code)
-    //   adaptive ON   214.2 s
-    // i.e. the regimes are within cross-JVM noise of each other and the
-    // round-8 PlanProbe extrapolation ("AQE's re-plan barrier is
-    // ~0.05 s/query of pure floor") does NOT hold at suite level — the
-    // barrier cost is repaid by coalescing 4-partition shuffles to 1-2
-    // tasks. AQE therefore stays ON unconditionally (scale honesty: the
-    // 100 TB deployment runs it on), and the 29 s spread between the
-    // two OFF runs is a measured bound on cross-JVM total variance that
-    // future "regression" readings must clear before they count.
-    sys.env.get("SPARK_GRAFT_AQE") match {
-      case Some("on")  => spark.conf.set("spark.sql.adaptive.enabled", "true")
-      case Some("off") => spark.conf.set("spark.sql.adaptive.enabled", "false")
-      case _           => () // GraftSession default: on
-    }
-    System.err.println(s"[bench:$tag] shuffle.partitions=$parts " +
-      s"adaptive=${spark.conf.get("spark.sql.adaptive.enabled")} for $sfDir")
+    System.err.println(s"[bench:$tag] shuffle.partitions=$parts for $sfDir")
     selected.map { case (name, fn) =>
       cleanup(spark)
       val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / 1048576
@@ -256,38 +240,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // the generated-class cache defaults to 100 entries; ~600 distinct
-      // queries × several codegen stages each would evict continuously,
-      // re-running janino on plans the warm-up pass already compiled.
-      // Sized to hold the whole suite — the same conf any long-lived
-      // Spark service with a wide query population runs with.
-      // Round-9 resize: 690 queries × 5-20 codegen stages ≈ 3.5k-14k
-      // entries, so the former 10k bound could START evicting exactly
-      // in late-suite/recheck territory (the round-9 closing pass saw
-      // rechecks run SLOWER than their in-suite primaries — q590
-      // 11.8 s vs 7.6 s — the signature of end-of-pass recompilation
-      // pressure). 30k holds 2× the worst-case suite.
-      .config("spark.sql.codegen.cache.maxEntries", "40000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    // optional args: bench only the named queries (dev loop)
+    val selected = SparkEntry.select(args.toSeq)
+    val spark = GraftSession.local()
     spark.sparkContext.addSparkListener(tracker)
-    // optional args: bench only the named queries (dev loop); unknown
-    // names fail loudly — silently benching an empty set would print an
-    // empty-but-valid JSON result for a typo
-    val unknown = args.toSet.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
-        s"valid: ${SparkEntry.queries.keySet.toSeq.sorted.mkString(", ")}")
-    val selected =
-      (if (args.isEmpty) SparkEntry.queries
-       else SparkEntry.queries.view.filterKeys(args.toSet).toMap).toSeq.sortBy(_._1)
     // JVM/codegen warm-up: run EVERY query once at the smallest SF so the
     // timed numbers measure steady-state execution, not each query's
     // first-use class loading and janino compile (measured at 1-4 s per

@@ -1,24 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the registered queries
   * (or the subset named in args) — used to audit pushdown, broadcast
   * choices, codegen spans and shuffle counts. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.configure(spark)
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keySet.toSeq.sorted
-    names.foreach { name =>
+    val selected = SparkEntry.select(args.toSeq)
+    val spark = GraftSession.local()
+    selected.foreach { case (name, fn) =>
       println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -32,8 +32,8 @@ object GraftSession {
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
-  /** Apply graft's standard SQL confs to an existing session (e.g. the
-    * driver-created one in Verify/Bench). Safe to call repeatedly —
+  /** Apply graft's standard SQL confs to an existing session (e.g. one
+    * a caller built and handed to `Tables`). Safe to call repeatedly —
     * applies once per session instance. */
   def configure(spark: SparkSession): SparkSession = {
     if (!configured.add(spark)) return spark
@@ -59,18 +59,24 @@ object GraftSession {
     spark
   }
 
-  /** Standalone local session (tests / ad-hoc runs). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** The one session builder: Bench, Verify, Explain, the tests and the
+    * benchmark harness all start here. `cores` defaults to
+    * `SPARK_GRAFT_CPUS`, else every available core. */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // generated-class cache sized for the full query population (the
-      // 100-entry default evicts continuously under ~600 queries; static
-      // conf, so it must be set at session build — see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // generated-class cache sized for the whole catalog (static conf, so
+      // it must be set at session build): the 100-entry default evicts
+      // continuously, and round 9 measured 10000 evicting at ~690 queries
+      // x 5-20 codegen stages — late-suite rechecks ran slower than their
+      // in-suite primaries (q590 11.8 s vs 7.6 s). 40000 holds 2x the
+      // worst case.
+      .config("spark.sql.codegen.cache.maxEntries", "40000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     configure(spark)

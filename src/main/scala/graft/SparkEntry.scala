@@ -149,6 +149,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(d => d.name -> d.fn).toMap
 
+  /** The queries an entry point runs: the whole catalog in name order when
+    * `names` is empty, else the named ones in the order given. Unknown
+    * names fail loudly, all listed — a typo must never run an empty set. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val qs = queries
+    val wanted = names.distinct
+    val unknown = wanted.filterNot(qs.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (wanted.isEmpty) qs.toSeq.sortBy(_._1) else wanted.map(n => n -> qs(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,35 +8,17 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     // optional extra args: dump only the named queries (dev loop); the
-    // driver's 2-arg invocation dumps everything, unchanged
-    val only = args.drop(2).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // generated-class cache sized for the full query population (the
-      // 100-entry default evicts continuously under ~600 queries; 10k
-      // started evicting at 690 queries × 5-20 stages — the Bench A/B
-      // that root-caused the round-9 late-suite slowdown)
-      .config("spark.sql.codegen.cache.maxEntries", "40000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    // 2-arg invocation dumps everything
+    val selected = SparkEntry.select(args.toSeq.drop(2))
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

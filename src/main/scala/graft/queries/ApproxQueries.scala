@@ -220,21 +220,10 @@ object ApproxQueries extends QueryGroup {
           expr("CAST(regexp_extract(props, '[0-9]+', 0) AS BIGINT)").as("k"))
         .select(col("user_id"), expr("s div 86400 * 128 + k").as("cell"))
         .distinct()
-      // r14 (guide §2.4, the Backbone pairExplode discipline): one
-      // groupBy(cell) + sorted collect_set with a map-side i<j explode
-      // replaces the cell-keyed self-join — same (u < v) pair stream
-      // (per-cell co-engagement sets are bounded by the (day, key)
-      // blocking), one exchange instead of exchange + join.
-      val pairs = act
-        .groupBy(col("cell")).agg(sort_array(collect_set(col("user_id"))).as("us"))
-        .filter(size(col("us")) >= 2)
-        .select(explode(expr(
-          """flatten(transform(sequence(1, size(us) - 1),
-               i -> transform(sequence(i + 1, size(us)),
-                 j -> named_struct('u', element_at(us, i), 'v', element_at(us, j)))))"""))
-          .as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-        .groupBy(col("u"), col("v"))
+      val pairs = act.alias("a")
+        .join(act.alias("b"),
+          col("a.cell") === col("b.cell") && col("a.user_id") < col("b.user_id"))
+        .groupBy(col("a.user_id").as("u"), col("b.user_id").as("v"))
         .agg(count(lit(1)).as("shared_cells"))
         .filter(col("shared_cells") >= 5L)
       val edges = pairs.select(col("u"), col("v"))

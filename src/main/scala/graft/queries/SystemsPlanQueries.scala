@@ -842,7 +842,7 @@ object SystemsPlanQueries extends QueryGroup {
     * CACHE THRASH — Spark's codegen cache defaults to 100 entries, so
     * a 599-query suite evicts continuously and q521 re-ran janino on
     * plans the warm-up had already compiled. With the cache sized to
-    * the suite (spark.sql.codegen.cache.maxEntries=10000, Bench.scala)
+    * the suite (spark.sql.codegen.cache.maxEntries, GraftSession.local)
     * q521 is back to 1.83 s in-suite at sf0.1. The secondary term
     * (~0.4 s, measured with/without the guard) was the r6
     * always-clearCache honesty change; both effects were measurement

@@ -1,12 +1,11 @@
 package graft
 
-/** AQE regime independence (round-9): the bench harness A/Bs adaptive
-  * execution on and off (SPARK_GRAFT_AQE), which is only a valid
-  * experiment if query RESULTS are bit-identical across regimes. The
-  * round-9 measurement itself (three full 665-query sf0.01 passes — see
-  * Bench's scaladoc) found the regimes within cross-JVM noise, so AQE
-  * stays on unconditionally; this spec keeps the A/B honest if it is
-  * ever re-run.
+/** AQE regime independence (round-9): query RESULTS must be
+  * bit-identical with adaptive execution on and off. The round-9 timing
+  * A/B (three full 665-query sf0.01 passes — see Bench's scaladoc) found
+  * the regimes within cross-JVM noise, so AQE stays on unconditionally;
+  * this spec keeps the results independent of the planner regime, so
+  * that any future on/off timing comparison stays a valid experiment.
   */
 class AdaptivePolicySpec extends SparkSpec {
 

@@ -72,6 +72,22 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(missing.isEmpty, s"queries without oracle: $missing")
   }
 
+  test("select: no names selects the whole catalog in name order") {
+    assert(SparkEntry.select(Nil).map(_._1) == SparkEntry.queries.keySet.toSeq.sorted)
+  }
+
+  test("select: named queries come back as given") {
+    val names = Seq("q12_tpch_q3_shipping_priority", "q01_windowed_agg_sliding")
+    assert(SparkEntry.select(names).map(_._1) == names)
+  }
+
+  test("select: an unknown name fails and the error names it") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(Seq("q01_windowed_agg_sliding", "q_typo"))
+    }
+    assert(e.getMessage.contains("q_typo"))
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sfDir)
@@ -436,7 +452,11 @@ class QueriesSmokeSpec extends SparkSpec {
     "q712_dorfman_pooling_plan", "q713_fingerprint_truncation_audit",
     // q715's one-row boundary-breaks broadcast onto the one-row
     // in-block fold
-    "q715_natural_runs_census")
+    "q715_natural_runs_census",
+    // round-14: q348's covered sets cov1/cov2 are ONE row each — d1/d2
+    // are limit(1) picks joined back on the documents key doc_id — and
+    // each row holds the union of at most 3 docs' bigram-digest sets
+    "q348_max_coverage_greedy")
 
   test("query constructors are lazy: warm construction launches zero jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
