@@ -12,11 +12,11 @@ object Verify {
     val selected = SparkEntry.select(args.toSeq.drop(2))
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val failed = selected.flatMap { case (name, fn) =>
+      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,5 +35,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // one closing line, so a failure printed mid-run stays in the output tail
+    System.err.println(
+      if (failed.isEmpty) s"[verify] all ${selected.size} written"
+      else s"[verify] ${failed.size} of ${selected.size} failed: ${failed.mkString(", ")}")
   }
 }

@@ -59,16 +59,18 @@ object MinHashLSH {
       .filter(col("sig").isNotNull)
 
   /** Reference implementation of `signatures` in pure higher-order
-    * functions (slower: interpreted, recomputes shingles per hash). */
+    * functions (slower: interpreted). The shingle set is projected once
+    * and shared by all numHashes hashes: Catalyst does not collapse a
+    * non-cheap alias referenced more than once, so each document is
+    * tokenized once, not once per hash. */
   def signaturesHof(docs: DataFrame, idCol: String, textCol: String,
-                    cfg: Config = Config()): DataFrame = {
-    val sh = wordShingleSetHof(col(textCol), cfg.shingleK)
+                    cfg: Config = Config()): DataFrame =
     docs
       .filter(size(tokensHof(col(textCol))) >= cfg.shingleK)
+      .select(col(idCol), wordShingleSetHof(col(textCol), cfg.shingleK).as("sh"))
       .select(
         col(idCol),
-        array((0 until cfg.numHashes).map(j => minhashColumn(sh, j)): _*).as("sig"))
-  }
+        array((0 until cfg.numHashes).map(j => minhashColumn(col("sh"), j)): _*).as("sig"))
 
   /** Candidate near-duplicate pairs: docs sharing ≥1 band bucket, with
     * the signature-estimated Jaccard similarity. Output:

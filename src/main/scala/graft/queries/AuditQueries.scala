@@ -291,33 +291,16 @@ object AuditQueries extends QueryGroup {
 
   /** Benford first-digit audit: the leading-digit distribution of order
     * totals vs Benford's law, the classic forensic screen for fabricated
-    * or truncated financial data. Digits come from exact integer dollars
-    * (cents div 100 → string), never from double formatting; the Benford
-    * expectation log10(1+1/d) enters as 9 pre-scaled ppm literals, so no
-    * transcendental function runs in either engine and the deviation
-    * column is bit-exact.
-    *
-    * Scale shape: one scan → 9 groups; the grand total re-enters by
-    * broadcast cross join. Nothing but digit counts ever shuffles. */
+    * or truncated financial data. The same census as q198 under this
+    * query's column names: its oracle takes the first digit of integer
+    * dollars, q198's that of integer cents, and the two agree for every
+    * total of at least $1 (the smallest o_totalprice from sf0.001 to
+    * sf0.1 is $1001.91). */
   private val q155 = QueryDef(
     "q155_benford_audit",
-    (spark, dir) => {
-      val benford = "array(301030L, 176091L, 124939L, 96910L, 79181L, " +
-        "66947L, 57992L, 51153L, 45757L)"
-      val d = Tables.orders(spark, dir)
-        .select(expr("CAST(substring(CAST(" +
-          "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) div 100 AS STRING), 1, 1) " +
-          "AS BIGINT)").as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-      val tot = d.agg(sum(col("n")).as("t"))
-      d.crossJoin(broadcast(tot))
-        .select(col("digit"), col("n"),
-          expr("CAST(CAST(n AS DECIMAL(38,0)) * 1000000 DIV t AS BIGINT)").as("obs_ppm"),
-          expr(s"element_at($benford, CAST(digit AS INT))").as("benford_ppm"))
-        .withColumn("abs_dev_ppm",
-          expr("abs(obs_ppm - benford_ppm)"))
-        .orderBy(col("digit"))
-    },
+    (spark, dir) => benfordCensus(spark, dir)
+      .select(col("digit"), col("n"), col("share_ppm").as("obs_ppm"),
+        col("benford_ppm"), col("dev_ppm").as("abs_dev_ppm")),
     Some("""
       WITH d AS (
         SELECT CAST(substring(CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
@@ -591,28 +574,30 @@ object AuditQueries extends QueryGroup {
     * Scale shape: digit extraction is a narrow map over the scan; the
     * aggregate is 9 rows, and the total comes from a window over those
     * 9 rows — nothing global ever exceeds digit cardinality. */
+  private def benfordCensus(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.Deterministic.cents
+    val benford = "CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 " +
+      "WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181 " +
+      "WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153 " +
+      "ELSE 45757 END"
+    val everything = org.apache.spark.sql.expressions.Window
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    Tables.orders(spark, dir)
+      .select(cents(col("o_totalprice")).as("vc"))
+      .withColumn("digit", expr("CAST(substring(CAST(vc AS STRING), 1, 1) AS BIGINT)"))
+      .groupBy(col("digit")).agg(count(lit(1)).as("n"))
+      .withColumn("tot", sum(col("n")).over(everything))
+      .withColumn("share_ppm", expr("n * 1000000 div tot"))
+      .withColumn("benford_ppm", expr(s"CAST($benford AS BIGINT)"))
+      .select(col("digit"), col("n"), col("share_ppm"), col("benford_ppm"),
+        abs(col("share_ppm") - col("benford_ppm")).as("dev_ppm"))
+      .orderBy(col("digit"))
+  }
+
   private val q198 = QueryDef(
     "q198_benford_audit",
-    (spark, dir) => {
-      import graft.functions.Deterministic.cents
-      val benford = "CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 " +
-        "WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181 " +
-        "WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153 " +
-        "ELSE 45757 END"
-      val everything = org.apache.spark.sql.expressions.Window
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      Tables.orders(spark, dir)
-        .select(cents(col("o_totalprice")).as("vc"))
-        .withColumn("digit", expr("CAST(substring(CAST(vc AS STRING), 1, 1) AS BIGINT)"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-        .withColumn("tot", sum(col("n")).over(everything))
-        .withColumn("share_ppm", expr("n * 1000000 div tot"))
-        .withColumn("benford_ppm", expr(s"CAST($benford AS BIGINT)"))
-        .select(col("digit"), col("n"), col("share_ppm"), col("benford_ppm"),
-          abs(col("share_ppm") - col("benford_ppm")).as("dev_ppm"))
-        .orderBy(col("digit"))
-    },
+    benfordCensus,
     Some("""
       WITH v AS (
         SELECT CAST(floor(o_totalprice*100 + 0.5) AS BIGINT) AS vc FROM orders),

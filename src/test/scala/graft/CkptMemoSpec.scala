@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — and the bench recorded
   * time-to-failure as the query time. Two defenses, both tested here:
   * the memo validates a hit's storage level and rebuilds a dead entry,
-  * and Bench.cleanup skips checkpointed RDDs entirely.
+  * and Bench.cleanup spares only the checkpointed RDDs that live memo
+  * entries own (CkptMemo.liveRddIds).
   */
 class CkptMemoSpec extends SparkSpec {
 

@@ -136,7 +136,7 @@ class QueriesSmokeSpec extends SparkSpec {
     "q135_dup_size_histogram", "q136_temperature_allocation",
     "q139_norm_outliers", "q145_oov_rate_by_cutoff", "q146_robust_outliers",
     "q147_reference_calibration", "q149_k_anonymity", "q151_dow_seasonality",
-    "q152_gini_split_quality", "q153_churn_overdue", "q155_benford_audit",
+    "q152_gini_split_quality", "q153_churn_overdue",
     "q159_token_budget_plan", "q166_source_keyness", "q170_ivf_recall_sweep",
     "q172_dup_split_leakage", "q173_dim_truncation_recall",
     "q174_hybrid_rrf", "q175_recency_weights", "q189_rbo_rank_agreement",
@@ -689,6 +689,9 @@ class QueriesSmokeSpec extends SparkSpec {
     // q738's row_number ranks the ≤25-row per-nation trade totals to
     // pick the 4 lanes — dimension-bounded
     "q738_dedicated_lane_assignment",
+    // q155 is q198's census under other column names: its sum() OVER ()
+    // spans the ≤9-row first-digit aggregate — digit-bounded
+    "q155_benford_audit",
     // q757's sum() OVER () folds the 6-row bit-plane table into the
     // reconstructed total — bit-width-bounded
     "q757_bit_sliced_index_sum",
