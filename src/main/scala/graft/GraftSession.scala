@@ -79,6 +79,14 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "40000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Spark warns "No Partition Defined for Window operation" each time a
+    // partition-less window executes: thousands of lines per catalog run,
+    // burying the mains' own output. The plan-hygiene gate
+    // (QueriesSmokeSpec.boundedGlobalWindows) is the check on those
+    // windows. Only this logger, and only in sessions built here: a
+    // log4j2.properties in the jar would override every user's config.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
     configure(spark)
   }
 }

@@ -446,25 +446,52 @@ object GraftHash {
   /** Sign-random-projection LSH bucket (Charikar 2002) of a float
     * vector: quantize, project onto `planes` deterministic integer
     * hyperplanes (component(p,i) = (p·2654435761 + i·40503) mod 2001 −
-    * 1000), set bit p when the projection is positive. One fused
-    * planes×dims loop replacing 8 interpreted zip_with/aggregate passes.
+    * 1000), set bit p when the projection is positive. Each element is
+    * quantized once and the components come from a table built once per
+    * (planes, dims), so a call costs dims·planes multiply-adds — it runs
+    * once per matched pair where a join defers it (q250).
     */
   def signLshBucket(v: ArrayData, planes: Int): Long = {
     val n = v.numElements()
+    val coef = lshPlanes(planes, n)
+    val proj = new Array[Long](planes)
+    var i = 0
+    while (i < n) {
+      val q = math.floor(v.getFloat(i) * 512.0d + 0.5d).toLong
+      val row = i * planes
+      var p = 0
+      while (p < planes) { proj(p) += q * coef(row + p); p += 1 }
+      i += 1
+    }
     var bucket = 0L
     var p = 0
-    while (p < planes) {
-      var proj = 0L
+    while (p < planes) { if (proj(p) > 0) bucket |= 1L << p; p += 1 }
+    bucket
+  }
+
+  /** Hyperplane components of [[signLshBucket]], dims-major: entry
+    * i·planes + p is component(p, i). Keyed by (planes, dims), one table
+    * per vector shape in use. */
+  private val lshPlaneTables = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Int]]()
+
+  private def lshPlanes(planes: Int, n: Int): Array[Int] = {
+    val key = java.lang.Long.valueOf((planes.toLong << 32) | n.toLong)
+    val cached = lshPlaneTables.get(key)
+    if (cached != null) cached
+    else {
+      val t = new Array[Int](n * planes)
       var i = 0
       while (i < n) {
-        val q = math.floor(v.getFloat(i) * 512.0d + 0.5d).toLong
-        proj += q * ((p * 2654435761L + i * 40503L) % 2001L - 1000L)
+        var p = 0
+        while (p < planes) {
+          t(i * planes + p) = ((p * 2654435761L + i * 40503L) % 2001L - 1000L).toInt
+          p += 1
+        }
         i += 1
       }
-      if (proj > 0) bucket |= 1L << p
-      p += 1
+      val prev = lshPlaneTables.putIfAbsent(key, t)
+      if (prev != null) prev else t
     }
-    bucket
   }
 
   /** Quantize a float vector: floor(x·512 + 0.5) per element (512 is a

@@ -20,9 +20,10 @@ import graft.Tables
   * positions only (positions whose base K-gram is duplicated; any
   * longer duplicated gram implies its K-prefix is duplicated, so
   * candidacy loses nothing) and take per-position max over the
-  * duplicated lengths. Every step is a hash aggregation or a keyed
-  * join on 16-byte digests — no suffix sort, no gram-keyed window, no
-  * pairwise doc join — which is exactly what survives 100 TB where a
+  * duplicated lengths. Every step is keyed on an 8-byte digest or on
+  * the document — a per-digest occurrence count, a per-document regroup,
+  * a join of co-partitioned documents — with no suffix sort and no
+  * pairwise doc join, which is exactly what survives 100 TB where a
   * monolithic suffix array does not.
   */
 object SuffixDedupQueries extends QueryGroup {
@@ -82,122 +83,119 @@ object SuffixDedupQueries extends QueryGroup {
         ON e.doc_id = m.doc_id AND e.pos = m.pos AND e.l = m.len_p)"""
 
   /** Memo of the shared candidate/extension fold per (application,
-    * session, dir) — the graph.Backbone discipline: q742/q743/q744 all
-    * consume (lenp, maxdig), so the corpus-scanning part of the fold
-    * runs once per session and is `localCheckpoint(true)`-materialized
-    * (flat lineage, candidate-bounded rows), not rebuilt per query.
-    * Round-13: self-healing [[graft.CkptMemo]] — a cached tuple whose
-    * checkpoint blocks were dropped is rebuilt, never returned dead.
-    * The tuple adds docStats (doc_id, source, n_tok) so q742/q750 skip
-    * the per-query re-tokenize pass for totals. */
-  private val memo = new graft.CkptMemo[(org.apache.spark.sql.DataFrame,
-    org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
+    * session, dir) — the graph.Backbone discipline: q742/q743/q744/q748/
+    * q750 all consume it, so the corpus-scanning part of the fold runs
+    * once per session and is `localCheckpoint(true)`-materialized (flat
+    * lineage, one row per document), not rebuilt per query. A
+    * self-healing [[graft.CkptMemo]]: a cached frame whose checkpoint
+    * blocks were dropped is rebuilt, never returned dead. */
+  private val memo = new graft.CkptMemo[org.apache.spark.sql.DataFrame]()
 
-  /** The Spark mirror of [[repeatSql]]: (docStats, tot, lenp, maximal,
-    * maxdig) DataFrames, all riding the memoized checkpointed build. */
-  private def repeatFrames(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val (docStatsC, lenpC, maxdigC) = memo.getOrBuild(spark, dir)(
-      buildRepeatTables(spark, dir))(p => Seq(p._1, p._2, p._3))
-    val totOut = docStatsC.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens"))
-    val maximal = lenpC.join(
-        lenpC.select(col("doc_id"), (col("pos") + 1L).as("pos"),
-          (col("len_p") - 1L).as("cover_len")),
-        Seq("doc_id", "pos"), "left")
-      .filter(col("cover_len").isNull || col("len_p") > col("cover_len"))
-      .select(col("doc_id"), col("source"), col("pos"), col("len_p"))
-    (docStatsC, totOut, lenpC, maximal, maxdigC)
+  /** The Spark mirror of [[repeatSql]], as (docStats, tot, maxdig) views
+    * of the memoized per-document checkpoint:
+    *  - docStats (doc_id, source, n_tok, dup_tok): dup_tok is the
+    *    document's span-union coverage (the oracle's `cov`);
+    *  - tot (source, n_docs, tokens, dup_tokens, repeat_starts,
+    *    maximal_occurrences, max_repeat_len): the per-source rollup of
+    *    docStats and of `lenp` (repeat starts) and `maximal`;
+    *  - maxdig (source, len_p, dig), one row per maximal start. */
+  private[graft] def repeatFrames(spark: org.apache.spark.sql.SparkSession, dir: String) = {
+    val perDoc = memo.getOrBuild(spark, dir)(buildRepeatTables(spark, dir))(Seq(_))
+    val docStats = perDoc.select(col("doc_id"), col("source"), col("n_tok"), col("dup_tok"))
+    val tot = perDoc.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens"),
+        sum(col("dup_tok")).as("dup_tokens"),
+        sum(size(col("reps"))).as("repeat_starts"),
+        sum(size(filter(col("reps"), _("dig").isNotNull))).as("maximal_occurrences"),
+        coalesce(max(array_max(col("reps.len_p"))), lit(0L)).as("max_repeat_len"))
+    val maxdig = perDoc.select(col("source"), explode(col("reps")).as("r"))
+      .filter(col("r.dig").isNotNull)
+      .select(col("source"), col("r.len_p").as("len_p"), col("r.dig").as("dig"))
+    (docStats, tot, maxdig)
   }
 
-  /** One-time build of the checkpointed (docStats, lenp, maxdig) triple.
+  /** One-time build of the checkpointed per-document fold: (doc_id,
+    * source, n_tok, dup_tok, reps), where reps lists the document's
+    * repeat starts in position order as (pos, len_p, dig) and dig is set
+    * on the left-maximal starts only. One adaptive query and one
+    * materialisation. The corpus is read twice, as (doc_id, text) for
+    * the token hashes and as (doc_id, source, text) for the fold: column
+    * pruning gives the two reads different schemas, so they cannot share
+    * one exchange; every other step reuses one of the two.
     *
-    * Round-13 digest rewrite (guide §2.3 "narrower types" / §1.2
-    * per-task work): the duplicate-detection fold now runs on 8-byte
-    * chained-xxhash64 digests — per token a single xxhash64, per
-    * position/length one more chain step on precomputed token hashes —
-    * instead of md5 over a re-concatenated token string per (pos, L)
-    * (which re-built and re-hashed up to 24 tokens of text 17 times per
-    * candidate and shuffled 32-char hex keys). The OUTPUT digest (q743's
-    * `dig` column) stays md5-of-token-slice, recomputed for the
-    * candidate-bounded maximal rows only, so results are bit-identical
-    * to the oracle. Gate caveat (the q624 precedent): the engines no
-    * longer share a collision-equivalence relation on internal grams —
-    * a 64-bit chain collision (odds ~n²/2⁶⁵) would perturb dup8/dupd
-    * membership and fail the gate loudly, never silently. */
+    * The duplicate-detection fold runs on 8-byte chained-xxhash64
+    * digests — per token a single xxhash64, per position/length one
+    * more chain step on the token hashes (fused GraftHash kernels,
+    * bit-identical to their HOF forms: KernelParitySpec). The OUTPUT
+    * digest (q743's `dig`) stays md5-of-token-slice, computed for the
+    * maximal starts only, so results are bit-identical to the oracle.
+    * Gate caveat (the q624 precedent): the engines no longer share a
+    * collision-equivalence relation on internal grams — a 64-bit chain
+    * collision (odds ~n²/2⁶⁵) would perturb dup8/dupd membership and
+    * fail the gate loudly, never silently.
+    *
+    * Scale shape: the corpus is hash-partitioned by doc_id, so the
+    * extension join and the final per-document fold are co-partitioned
+    * with it (no further shuffle of text or token hashes); the two
+    * duplicate tests are occurrence counts over digest-keyed windows;
+    * the per-document regroups are doc-keyed aggregates of
+    * candidate-bounded rows. */
   private def buildRepeatTables(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val tk = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-        graft.functions.expressions.tokens_native(col("text")).as("tk"))
-    val docStats = tk
-      .select(col("doc_id"), col("source"), size(col("tk")).cast("long").as("n_tok"))
-      .localCheckpoint(true)
-    // the corpus parquet is a single row group at every test SF, so the
-    // scan is ONE split and every per-doc kernel below would run on one
-    // task — fan out to the session's core count first (guide §2.5,
-    // unsplittable input: "repartition immediately after the read"; at
-    // real scale the scan already exceeds the core count and the
-    // round-robin is a cheap rebalance of the hash arrays)
-    //
-    // Round-14 codegen rewrite (r13 verdict #1): the three per-document
-    // kernels — token xxhashes, per-position K-gram chain digests, and
-    // the candidate extension fold — move from interpreted HOF chains
-    // (transform/aggregate lambdas never enter whole-stage codegen, and
-    // the extension fold rebuilt its output array by concat per step:
-    // O(M²) allocations per candidate, ~97 s of task CPU at sf0.1) to
-    // fused GraftHash kernels behind codegen'd Expressions. Digest
-    // arithmetic is IDENTICAL (same xxhash64 chain — KernelParitySpec
-    // asserts bit-parity with the HOF forms), so dup8/dupd membership
-    // and every downstream result are unchanged.
-    val tkh = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), col("source"),
-        graft.functions.expressions.token_xxhashes(col("text")).as("hs"))
-    // the digest stream carries no source string — (doc_id, pos, dig)
-    // only; source re-attaches once at the candidate-bounded lenp fold
-    // from the checkpointed docStats (guide §2.3 project-before-exchange)
-    val pos8 = tkh.filter(size(col("hs")) >= K)
+    import graft.functions.expressions.{gram_chain_digests, repeat_extensions,
+      token_xxhashes, tokens_native}
+    // hash-partitioned by document: the two per-document joins
+    // below read their sides in place (shuffled hash joins on co-
+    // partitioned inputs — no sort, no further shuffle of text, no
+    // broadcast of corpus-sized sets). The partition count is the one
+    // the aggregates' exchanges use, and, being explicit, adaptive
+    // execution keeps it: the test corpora are one parquet row group,
+    // so this is also what fans the per-document kernels out
+    val docs = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("source"), col("text"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
+    val hs = docs.select(col("doc_id"), token_xxhashes(col("text")).as("hs"))
+    // candidate positions: those whose K-gram occurs >= 2 times
+    // corpus-wide, grouped per document so the extension join moves one
+    // row per document
+    val candByDoc = hs
       .select(col("doc_id"),
-        posexplode(graft.functions.expressions.gram_chain_digests(col("hs"), K))
-          .as(Seq("p0", "g8")))
-      .select(col("doc_id"), (col("p0") + 1L).cast("long").as("pos"), col("g8"))
-    val dup8 = pos8.groupBy(col("g8")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2L).select(col("g8"))
-    // candidate positions grouped per doc: the extension join moves ONE
-    // row per document instead of one per candidate position
-    val candByDoc = pos8.join(dup8, Seq("g8"))
+        posexplode(gram_chain_digests(col("hs"), K)).as(Seq("p0", "g8")))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("g8"))))
+      .filter(col("n") >= 2L)
       .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("pos"))).as("ps"))
-    val ext = candByDoc
-      .join(tkh.select(col("doc_id"), col("hs")), Seq("doc_id"))
+      .agg(sort_array(collect_list((col("p0") + 1L).cast("long"))).as("ps"))
+    // len_p per candidate position: the longest extension gram that
+    // occurs >= 2 times, regrouped per document in position order (the
+    // outer join keeps hs's scan identical to the one above; documents
+    // without candidates emit no extensions)
+    val lenpByDoc = hs.join(candByDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        explode(graft.functions.expressions.repeat_extensions(
-          col("hs"), col("ps"), K, M)).as("e"))
-      .select(col("doc_id"), col("e.pos").as("pos"),
-        col("e.l").as("l"), col("e.dig").as("dig"))
-      .persist()
-    val dupd = ext.groupBy(col("dig")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2L).select(col("dig"))
-    val lenp = ext.join(dupd, Seq("dig"))
-      .groupBy(col("doc_id"), col("pos"))
-      .agg(max(col("l")).as("len_p"))
-      .join(docStats.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .select(col("doc_id"), col("source"), col("pos"), col("len_p"))
+        explode(repeat_extensions(col("hs"), col("ps"), K, M)).as("e"))
+      .select(col("doc_id"), col("e.pos").as("pos"), col("e.l").as("l"),
+        col("e.dig").as("dig"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("dig"))))
+      .filter(col("n") >= 2L)
+      .repartition(col("doc_id"))
+      .groupBy(col("doc_id"), col("pos")).agg(max(col("l")).as("l"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("pos"), col("l")))).as("lp"))
+    // per document: a start is left-maximal unless position pos−1
+    // reaches one token further (the oracle's `maximal`); dup_tok is the
+    // union of the spans (the oracle's `cov`)
+    docs.join(lenpByDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"), tokens_native(col("text")).as("tk"), col("lp"))
+      .select(col("doc_id"), col("source"),
+        size(col("tk")).cast("long").as("n_tok"),
+        coalesce(expr("""aggregate(lp, named_struct('cov', 0L, 'end', 0L),
+          (a, e) -> named_struct(
+            'cov', a.cov + greatest(0L, e.pos + e.l - 1 - greatest(a.end, e.pos - 1)),
+            'end', greatest(a.end, e.pos + e.l - 1)),
+          a -> a.cov)"""), lit(0L)).as("dup_tok"),
+        expr("""coalesce(transform(lp, (e, i) -> named_struct('pos', e.pos, 'len_p', e.l,
+          'dig', CASE WHEN i = 0 OR lp[i - 1].pos <> e.pos - 1 OR e.l > lp[i - 1].l - 1
+            THEN md5(concat_ws(' ', slice(tk, CAST(e.pos AS INT), CAST(e.l AS INT)))) END)),
+          array())""").as("reps"))
       .localCheckpoint(true)
-    val maximal = lenp.join(
-        lenp.select(col("doc_id"), (col("pos") + 1L).as("pos"),
-          (col("len_p") - 1L).as("cover_len")),
-        Seq("doc_id", "pos"), "left")
-      .filter(col("cover_len").isNull || col("len_p") > col("cover_len"))
-      .select(col("doc_id"), col("source"), col("pos"), col("len_p"))
-    // q743 reports the repeat's digest: md5 of the actual token slice
-    // (the oracle's definition), computed for the maximal rows only
-    val maxdig = maximal
-      .join(tk.select(col("doc_id"), col("tk")), Seq("doc_id"))
-      .select(col("source"), col("len_p"),
-        expr("md5(concat_ws(' ', slice(tk, CAST(pos AS INT), CAST(len_p AS INT))))")
-          .as("dig"))
-      .localCheckpoint(true)
-    ext.unpersist(false)
-    (docStats, lenp, maxdig)
   }
 
   // ---------------------------------------------------------------- q742
@@ -212,43 +210,24 @@ object SuffixDedupQueries extends QueryGroup {
     * blocks and deletes nothing) and the inventory q404's positional
     * coverage cannot name.
     *
-    * Scale shape: one token scan; K-gram digests hash-aggregate with
-    * map-side partials; extension grams exist only for candidate
-    * positions (≥ 2-occurrence K-grams), ≤ M−K+1 digests each; the
-    * duplicated-length fold and left-shadow test are keyed aggregates
-    * and a (doc, pos−1) self-join; the coverage union is a doc-keyed
-    * window (bounded by document length). Digests shuffle, text never
-    * does. */
+    * Scale shape: one token scan in the memoized fold; extension grams
+    * exist only for candidate positions (≥ 2-occurrence K-grams),
+    * ≤ M−K+1 digests each; the duplicated-length fold, left-shadow test
+    * and coverage union are per-document (bounded by document length);
+    * the census is source-keyed aggregation over the fold's views. */
   private val q742 = QueryDef(
     "q742_maximal_repeat_census",
     (spark, dir) => {
-      val (_, tot, lenp, maximal, maxdig) = repeatFrames(spark, dir)
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val cov = lenp
-        .withColumn("end", col("pos") + col("len_p") - 1L)
-        .withColumn("prev_end", max(col("end"))
-          .over(wDoc.rowsBetween(Window.unboundedPreceding, -1)))
-        .select(col("source"), greatest(lit(0L),
-          col("end") - greatest(coalesce(col("prev_end"), lit(0L)),
-            col("pos") - 1L)).as("covered"))
-        .groupBy(col("source")).agg(sum(col("covered")).as("dup_tokens"))
-      val starts = lenp.groupBy(col("source"))
-        .agg(count(lit(1)).as("repeat_starts"), max(col("len_p")).as("max_repeat_len"))
-      val mx = maximal.groupBy(col("source"))
-        .agg(count(lit(1)).as("maximal_occurrences"))
+      val (_, tot, maxdig) = repeatFrames(spark, dir)
       val dg = maxdig.groupBy(col("source"))
         .agg(countDistinct(col("dig")).as("distinct_repeats"))
-      tot.join(starts, Seq("source"), "left")
-        .join(mx, Seq("source"), "left")
-        .join(dg, Seq("source"), "left")
-        .join(cov, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("tokens"),
-          coalesce(col("repeat_starts"), lit(0L)).as("repeat_starts"),
-          coalesce(col("maximal_occurrences"), lit(0L)).as("maximal_occurrences"),
+      tot.join(dg, Seq("source"), "left")
+        .select(col("source"), col("n_docs"), col("tokens"), col("repeat_starts"),
+          col("maximal_occurrences"),
           coalesce(col("distinct_repeats"), lit(0L)).as("distinct_repeats"),
-          coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
-          expr("coalesce(dup_tokens, 0) * 1000000 div tokens").as("dup_ppm"),
-          coalesce(col("max_repeat_len"), lit(0L)).as("max_repeat_len"))
+          col("dup_tokens"),
+          expr("dup_tokens * 1000000 div tokens").as("dup_ppm"),
+          col("max_repeat_len"))
         .orderBy(col("source"))
     },
     Some(s"""
@@ -300,7 +279,7 @@ object SuffixDedupQueries extends QueryGroup {
   private val q743 = QueryDef(
     "q743_maximal_repeat_inventory",
     (spark, dir) => {
-      val (_, _, _, _, maxdig) = repeatFrames(spark, dir)
+      val (_, _, maxdig) = repeatFrames(spark, dir)
       maxdig.groupBy(col("dig"), col("len_p"))
         .agg(count(lit(1)).as("n_occurrences"),
           countDistinct(col("source")).as("n_sources"))
@@ -332,12 +311,12 @@ object SuffixDedupQueries extends QueryGroup {
     * misaligned corpus; this query measures it on real data).
     *
     * Scale shape: the block ledger is q476's digest-grouped min-ord
-    * election; the span side reuses the candidate/extension fold; both
-    * join on the bounded per-source rollup. */
+    * election; the span side is the memoized fold's per-source
+    * coverage; both join on the bounded per-source rollup. */
   private val q744 = QueryDef(
     "q744_block_vs_span_recall",
     (spark, dir) => {
-      val (_, tot, lenp, _, _) = repeatFrames(spark, dir)
+      val (_, tot, _) = repeatFrames(spark, dir)
       // the block ledger needs the token arrays themselves — the one
       // q74x consumer that re-tokenizes (its block digests are its own
       // corpus pass by definition)
@@ -359,20 +338,10 @@ object SuffixDedupQueries extends QueryGroup {
         .groupBy(col("source"))
         .agg(sum(when(col("ord") =!= col("keep_ord"), col("blen")).otherwise(0L))
           .as("block_dup_tokens"))
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val spanCov = lenp
-        .withColumn("end", col("pos") + col("len_p") - 1L)
-        .withColumn("prev_end", max(col("end"))
-          .over(wDoc.rowsBetween(Window.unboundedPreceding, -1)))
-        .select(col("source"), greatest(lit(0L),
-          col("end") - greatest(coalesce(col("prev_end"), lit(0L)),
-            col("pos") - 1L)).as("covered"))
-        .groupBy(col("source")).agg(sum(col("covered")).as("var_dup_tokens"))
       tot.join(blockDel, Seq("source"), "left")
-        .join(spanCov, Seq("source"), "left")
         .select(col("source"), col("tokens"),
           coalesce(col("block_dup_tokens"), lit(0L)).as("block_dup_tokens"),
-          coalesce(col("var_dup_tokens"), lit(0L)).as("var_dup_tokens"))
+          col("dup_tokens").as("var_dup_tokens"))
         .withColumn("recall_gain_tokens",
           col("var_dup_tokens") - col("block_dup_tokens"))
         .withColumn("gain_ppm",
@@ -431,7 +400,7 @@ object SuffixDedupQueries extends QueryGroup {
   private val q748 = QueryDef(
     "q748_repeat_source_leakage",
     (spark, dir) => {
-      val (_, _, _, _, maxdig) = repeatFrames(spark, dir)
+      val (_, _, maxdig) = repeatFrames(spark, dir)
       val bySrc = maxdig.select(col("source"), col("dig"), col("len_p")).distinct()
       bySrc.as("a").join(bySrc.as("b"),
           col("a.dig") === col("b.dig") && col("a.source") < col("b.source"))
@@ -468,33 +437,18 @@ object SuffixDedupQueries extends QueryGroup {
     * what-if readout a curator reads before committing a dedup run at
     * 100 TB.
     *
-    * Scale shape: per-document span-union coverage via the doc-keyed
-    * window (bounded by document length) over the memoized lenp fold;
-    * everything after is a source-keyed rollup. */
+    * Scale shape: per-document token counts and span-union coverage
+    * come from the memoized fold; everything after is a source-keyed
+    * rollup. */
   private val q750 = QueryDef(
     "q750_dedup_impact_projection",
     (spark, dir) => {
-      val (docStats, _, lenp, _, _) = repeatFrames(spark, dir)
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val docCov = lenp
-        .withColumn("end", col("pos") + col("len_p") - 1L)
-        .withColumn("prev_end", max(col("end"))
-          .over(wDoc.rowsBetween(Window.unboundedPreceding, -1)))
-        .select(col("doc_id"), greatest(lit(0L),
-          col("end") - greatest(coalesce(col("prev_end"), lit(0L)),
-            col("pos") - 1L)).as("covered"))
-        .groupBy(col("doc_id")).agg(sum(col("covered")).as("cov"))
-      // r13: per-doc token counts ride the memoized docStats checkpoint —
-      // this query no longer re-tokenizes the corpus at all
-      val perDoc = docStats
-        .join(docCov, Seq("doc_id"), "left")
-        .select(col("source"), col("n_tok"),
-          coalesce(col("cov"), lit(0L)).as("cov"))
-      perDoc.groupBy(col("source"))
+      val (docStats, _, _) = repeatFrames(spark, dir)
+      docStats.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tok")).as("tokens_before"),
-          sum(col("n_tok") - col("cov")).as("tokens_after"),
-          sum(when(col("n_tok") - col("cov") < 10L, 1L).otherwise(0L))
+          sum(col("n_tok") - col("dup_tok")).as("tokens_after"),
+          sum(when(col("n_tok") - col("dup_tok") < 10L, 1L).otherwise(0L))
             .as("docs_below_floor"))
         .withColumn("deleted_ppm",
           expr("(tokens_before - tokens_after) * 1000000 div tokens_before"))
