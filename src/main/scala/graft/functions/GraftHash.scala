@@ -448,7 +448,7 @@ object GraftHash {
     * hyperplanes (component(p,i) = (p·2654435761 + i·40503) mod 2001 −
     * 1000), set bit p when the projection is positive. Each element is
     * quantized once and the components come from a table built once per
-    * (planes, dims), so a call costs dims·planes multiply-adds — it runs
+    * plane count, so a call costs dims·planes multiply-adds — it runs
     * once per matched pair where a join defers it (q250).
     */
   def signLshBucket(v: ArrayData, planes: Int): Long = {
@@ -470,28 +470,20 @@ object GraftHash {
   }
 
   /** Hyperplane components of [[signLshBucket]], dims-major: entry
-    * i·planes + p is component(p, i). Keyed by (planes, dims), one table
-    * per vector shape in use. */
-  private val lshPlaneTables = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Int]]()
+    * i·planes + p is component(p, i), which depends on (i, p) only, so
+    * the table for fewer dims is a prefix of the one for more. One table
+    * per plane count, grown (copied, never shrunk) to the longest vector
+    * seen. */
+  private val lshPlaneTables = new java.util.concurrent.atomic.AtomicReferenceArray[Array[Int]](64)
 
   private def lshPlanes(planes: Int, n: Int): Array[Int] = {
-    val key = java.lang.Long.valueOf((planes.toLong << 32) | n.toLong)
-    val cached = lshPlaneTables.get(key)
-    if (cached != null) cached
-    else {
-      val t = new Array[Int](n * planes)
-      var i = 0
-      while (i < n) {
-        var p = 0
-        while (p < planes) {
-          t(i * planes + p) = ((p * 2654435761L + i * 40503L) % 2001L - 1000L).toInt
-          p += 1
-        }
-        i += 1
-      }
-      val prev = lshPlaneTables.putIfAbsent(key, t)
-      if (prev != null) prev else t
-    }
+    val t = lshPlaneTables.get(planes)
+    if (t != null && t.length >= n * planes) t
+    else lshPlaneTables.updateAndGet(planes, cur =>
+      if (cur != null && cur.length >= n * planes) cur
+      else Array.tabulate(n * planes) { j =>
+        ((j % planes * 2654435761L + j / planes * 40503L) % 2001L - 1000L).toInt
+      })
   }
 
   /** Quantize a float vector: floor(x·512 + 0.5) per element (512 is a

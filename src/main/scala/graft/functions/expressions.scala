@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
@@ -175,10 +177,21 @@ object expressions {
     require(planes >= 1 && planes <= 63,
       s"graft_lsh_bucket: planes must be in [1, 63] (bucket fits a long), got $planes")
     override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      GraftHash.signLshBucket(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], planes)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$G.signLshBucket($c, $planes)")
+    // a NULL vector sets no bit: bucket 0, as in Knn.lshBucketHof and the
+    // oracle SQL (every projection is NULL, so none is positive)
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = {
+      val v = child.eval(input)
+      if (v == null) 0L
+      else GraftHash.signLshBucket(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], planes)
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        long ${ev.value} = ${c.isNull} ? 0L : $G.signLshBucket(${c.value}, $planes);""",
+        isNull = FalseLiteral)
+    }
     override protected def withNewChildInternal(c: Expression): SignLshBucket = copy(child = c)
   }
 

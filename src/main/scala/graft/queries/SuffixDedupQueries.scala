@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,11 +19,10 @@ import graft.Tables
   * positions only (positions whose base K-gram is duplicated; any
   * longer duplicated gram implies its K-prefix is duplicated, so
   * candidacy loses nothing) and take per-position max over the
-  * duplicated lengths. Every step is keyed on an 8-byte digest or on
-  * the document — a per-digest occurrence count, a per-document regroup,
-  * a join of co-partitioned documents — with no suffix sort and no
-  * pairwise doc join, which is exactly what survives 100 TB where a
-  * monolithic suffix array does not.
+  * duplicated lengths. Every step is a hash aggregation or a keyed
+  * join, on 8-byte digests or on the document — no suffix sort, no
+  * gram-keyed window, no pairwise doc join — which is exactly what
+  * survives 100 TB where a monolithic suffix array does not.
   */
 object SuffixDedupQueries extends QueryGroup {
 
@@ -118,10 +116,20 @@ object SuffixDedupQueries extends QueryGroup {
     * source, n_tok, dup_tok, reps), where reps lists the document's
     * repeat starts in position order as (pos, len_p, dig) and dig is set
     * on the left-maximal starts only. One adaptive query and one
-    * materialisation. The corpus is read twice, as (doc_id, text) for
-    * the token hashes and as (doc_id, source, text) for the fold: column
-    * pruning gives the two reads different schemas, so they cannot share
-    * one exchange; every other step reuses one of the two.
+    * materialisation of [[repeatFold]]. */
+  private def buildRepeatTables(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    repeatFold(spark, dir).localCheckpoint(true)
+
+  /** The per-document fold behind the memo, unmaterialised (the plan
+    * hygiene gates read it here: the memo's consumers see only the
+    * checkpoint). The corpus is read three times. Column pruning gives
+    * the token-hash reads, (doc_id, text), and the fold's read, (doc_id,
+    * source, text), different schemas, so they cannot share one exchange.
+    * The token-hash reads split in two: the joins back to the documents
+    * infer a `doc_id IS NOT NULL` filter that reaches the candidate and
+    * extension paths' reads but not the reads the two occurrence counts
+    * take (they must count the grams of every document, as the oracle
+    * does). Every other step reuses one of the three exchanges.
     *
     * The duplicate-detection fold runs on 8-byte chained-xxhash64
     * digests — per token a single xxhash64, per position/length one
@@ -137,10 +145,11 @@ object SuffixDedupQueries extends QueryGroup {
     * Scale shape: the corpus is hash-partitioned by doc_id, so the
     * extension join and the final per-document fold are co-partitioned
     * with it (no further shuffle of text or token hashes); the two
-    * duplicate tests are occurrence counts over digest-keyed windows;
+    * duplicate tests are digest-keyed hash aggregates and semi joins;
     * the per-document regroups are doc-keyed aggregates of
     * candidate-bounded rows. */
-  private def buildRepeatTables(spark: org.apache.spark.sql.SparkSession, dir: String) = {
+  private[graft] def repeatFold(spark: org.apache.spark.sql.SparkSession,
+                                dir: String): org.apache.spark.sql.DataFrame = {
     import graft.functions.expressions.{gram_chain_digests, repeat_extensions,
       token_xxhashes, tokens_native}
     // hash-partitioned by document: the two per-document joins
@@ -157,24 +166,20 @@ object SuffixDedupQueries extends QueryGroup {
     // candidate positions: those whose K-gram occurs >= 2 times
     // corpus-wide, grouped per document so the extension join moves one
     // row per document
-    val candByDoc = hs
-      .select(col("doc_id"),
-        posexplode(gram_chain_digests(col("hs"), K)).as(Seq("p0", "g8")))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("g8"))))
-      .filter(col("n") >= 2L)
+    val grams = hs.select(col("doc_id"),
+      posexplode(gram_chain_digests(col("hs"), K)).as(Seq("p0", "g8")))
+    val candByDoc = grams.join(repeated(grams, "g8"), Seq("g8"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list((col("p0") + 1L).cast("long"))).as("ps"))
     // len_p per candidate position: the longest extension gram that
-    // occurs >= 2 times, regrouped per document in position order (the
-    // outer join keeps hs's scan identical to the one above; documents
-    // without candidates emit no extensions)
-    val lenpByDoc = hs.join(candByDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
+    // occurs >= 2 times, regrouped per document in position order
+    // (documents without candidates emit no extensions)
+    val ext = hs.join(candByDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         explode(repeat_extensions(col("hs"), col("ps"), K, M)).as("e"))
       .select(col("doc_id"), col("e.pos").as("pos"), col("e.l").as("l"),
         col("e.dig").as("dig"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("dig"))))
-      .filter(col("n") >= 2L)
+    val lenpByDoc = ext.join(repeated(ext, "dig"), Seq("dig"), "left_semi")
       .repartition(col("doc_id"))
       .groupBy(col("doc_id"), col("pos")).agg(max(col("l")).as("l"))
       .groupBy(col("doc_id"))
@@ -195,8 +200,16 @@ object SuffixDedupQueries extends QueryGroup {
           'dig', CASE WHEN i = 0 OR lp[i - 1].pos <> e.pos - 1 OR e.l > lp[i - 1].l - 1
             THEN md5(concat_ws(' ', slice(tk, CAST(e.pos AS INT), CAST(e.l AS INT)))) END)),
           array())""").as("reps"))
-      .localCheckpoint(true)
   }
+
+  /** The values of digest column `key` occurring ≥ 2 times in `df`: a
+    * hash aggregate with map-side partials, read back through a keyed
+    * semi join — not a window partitioned by the digest, where one
+    * boilerplate gram (a license footer) puts every corpus-wide
+    * occurrence into one window partition (the LinkageQueries round-9
+    * rule, gated by QueriesSmokeSpec's generator-keyed window check). */
+  private def repeated(df: org.apache.spark.sql.DataFrame, key: String) =
+    df.groupBy(col(key)).count().filter(col("count") >= 2L).select(col(key))
 
   // ---------------------------------------------------------------- q742
 

@@ -113,13 +113,14 @@ class KernelParitySpec extends SparkSpec {
 
   test("SignLshBucket kernel == HOF hyperplane pipeline") {
     import graft.similarity.Knn
-    // the kernel caches its hyperplane table per (planes, dims): every
-    // plane count meets both vector lengths in this one session, the
-    // shorter first, so a table reused for another shape reads too few
-    // or misplaced components and fails the parity below
+    // the kernel caches one hyperplane table per plane count, grown to
+    // the longest vector seen: every plane count meets the short vectors,
+    // the long ones (the table grows) and the short ones again (a grown
+    // table serves a prefix) in this one session, so a table read with
+    // the wrong stride or length fails the parity below
     val emb = Tables.embeddings(spark, sfDir).select(col("embedding").as("v"))
     val planes = Seq(1, 8, 63)
-    for (n <- Seq(17, 64)) {
+    for (n <- Seq(17, 64, 17)) {
       val vecs = emb.select(slice(col("v"), 1, n).as("v"))
         .unionByName(emb.limit(1).select(array_repeat(lit(0.0f), n).as("v")))
         .unionByName(emb.limit(1).select(lit(null).cast("array<float>").as("v")))
@@ -129,15 +130,11 @@ class KernelParitySpec extends SparkSpec {
       assert(rows.length === 500 + 2)
       for (r <- rows; (p, i) <- planes.zipWithIndex) {
         val (hof, fast) = (r.get(1 + 2 * i), r.get(2 + 2 * i))
-        if (r.isNullAt(0))
-          // the kernel is strict (NULL in, NULL out); the HOF form's
-          // projections are all NULL there, so it sets no bit
-          assert(fast == null && hof == 0L, s"null vector, planes=$p")
-        else {
-          assert(hof == fast, s"planes=$p dims=$n")
-          // a zero vector projects to 0 on every plane: no bit set
-          if (r.getSeq[Float](0).forall(_ == 0.0f)) assert(fast == 0L, s"zero vector, planes=$p")
-        }
+        assert(hof == fast, s"planes=$p dims=$n")
+        // a zero vector projects to 0 on every plane, a NULL one to NULL:
+        // no bit set either way
+        if (r.isNullAt(0) || r.getSeq[Float](0).forall(_ == 0.0f))
+          assert(fast == 0L, s"zero or NULL vector, planes=$p")
       }
     }
   }

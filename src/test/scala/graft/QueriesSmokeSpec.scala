@@ -3,6 +3,7 @@ package graft
 /** Every registered query runs at sf0.001 and produces a sane result;
   * the flagship entry produces rows (the driver's smoke check). */
 class QueriesSmokeSpec extends SparkSpec {
+  import QueriesSmokeSpec.generatorKeyedWindowCount
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -630,44 +631,6 @@ class QueriesSmokeSpec extends SparkSpec {
     }.size
   }
 
-  /** Windows whose partition keys ALL trace to a Generate (explode)
-    * output column below them: a generator-derived key can DEGENERATE
-    * to one hot value over corpus rows — a stop word's `token`
-    * partition is the entire corpus in one task sort (the q657 class;
-    * round-9 gate from the round-8 judge's task 4). MIXED keys like
-    * (token, doc_id div S) pass: the non-generator component bounds
-    * the partition by construction. Windows over per-key AGGREGATES
-    * still flag (the trace runs through Aggregate grouping keys) and
-    * go on the sanction list below with a per-query row-bound audit. */
-  private def generatorKeyedWindowCount(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet}
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def retrace(wanted: AttributeSet,
-                outs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]): AttributeSet =
-      outs.collect {
-        case a: Alias if wanted.contains(a.toAttribute) => a.child.references
-        case a: Attribute if wanted.contains(a) => AttributeSet(a)
-      }.foldLeft(AttributeSet.empty)(_ ++ _)
-    def fromGenerator(node: LogicalPlan, wanted: AttributeSet): Boolean =
-      if (wanted.isEmpty) false
-      else node match {
-        case p: Project   => fromGenerator(p.child, retrace(wanted, p.projectList))
-        case a: Aggregate => fromGenerator(a.child, retrace(wanted, a.aggregateExpressions))
-        case g: Generate =>
-          val genOut = AttributeSet(g.generatorOutput)
-          if (wanted.subsetOf(genOut)) true
-          else if (wanted.intersect(genOut).nonEmpty) false // mixed key — bounded
-          else fromGenerator(g.child, wanted)
-        case u: UnaryNode => fromGenerator(u.child, wanted)
-        case other => other.children.find(c => wanted.subsetOf(c.outputSet))
-          .exists(fromGenerator(_, wanted))
-      }
-    df.queryExecution.optimizedPlan.collect {
-      case w: Window if w.partitionSpec.nonEmpty &&
-        fromGenerator(w.child, AttributeSet(w.partitionSpec.flatMap(_.references))) => w
-    }.size
-  }
-
   /** Node count of the largest single expression tree in the optimized
     * plan. A builder that folds an accumulator into BOTH branches of a
     * conditional doubles the tree per step — ten steps is a 2¹⁰-leaf
@@ -1064,5 +1027,47 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(canarySql.length > OracleTextBudget,
       "the canary bomb no longer exceeds the budget — the gate's " +
         "threshold or the canary's construction drifted")
+  }
+}
+
+object QueriesSmokeSpec {
+
+  /** Windows whose partition keys ALL trace to a Generate (explode)
+    * output column below them: a generator-derived key can DEGENERATE
+    * to one hot value over corpus rows — a stop word's `token`
+    * partition is the entire corpus in one task sort (the q657 class;
+    * round-9 gate from the round-8 judge's task 4). MIXED keys like
+    * (token, doc_id div S) pass: the non-generator component bounds
+    * the partition by construction. Windows over per-key AGGREGATES
+    * still flag (the trace runs through Aggregate grouping keys) and
+    * go on the class's `boundedGeneratorKeyedWindows` list with a
+    * per-query row-bound audit. */
+  private[graft] def generatorKeyedWindowCount(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def retrace(wanted: AttributeSet,
+                outs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]): AttributeSet =
+      outs.collect {
+        case a: Alias if wanted.contains(a.toAttribute) => a.child.references
+        case a: Attribute if wanted.contains(a) => AttributeSet(a)
+      }.foldLeft(AttributeSet.empty)(_ ++ _)
+    def fromGenerator(node: LogicalPlan, wanted: AttributeSet): Boolean =
+      if (wanted.isEmpty) false
+      else node match {
+        case p: Project   => fromGenerator(p.child, retrace(wanted, p.projectList))
+        case a: Aggregate => fromGenerator(a.child, retrace(wanted, a.aggregateExpressions))
+        case g: Generate =>
+          val genOut = AttributeSet(g.generatorOutput)
+          if (wanted.subsetOf(genOut)) true
+          else if (wanted.intersect(genOut).nonEmpty) false // mixed key — bounded
+          else fromGenerator(g.child, wanted)
+        case u: UnaryNode => fromGenerator(u.child, wanted)
+        case other => other.children.find(c => wanted.subsetOf(c.outputSet))
+          .exists(fromGenerator(_, wanted))
+      }
+    df.queryExecution.optimizedPlan.collect {
+      case w: Window if w.partitionSpec.nonEmpty &&
+        fromGenerator(w.child, AttributeSet(w.partitionSpec.flatMap(_.references))) => w
+    }.size
   }
 }
