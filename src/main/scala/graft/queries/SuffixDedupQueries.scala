@@ -206,8 +206,8 @@ object SuffixDedupQueries extends QueryGroup {
     * hash aggregate with map-side partials, read back through a keyed
     * semi join — not a window partitioned by the digest, where one
     * boilerplate gram (a license footer) puts every corpus-wide
-    * occurrence into one window partition (the LinkageQueries round-9
-    * rule, gated by QueriesSmokeSpec's generator-keyed window check). */
+    * occurrence into one window partition (the LinkageQueries rule,
+    * gated by QueriesSmokeSpec's generator-keyed window check). */
   private def repeated(df: org.apache.spark.sql.DataFrame, key: String) =
     df.groupBy(col(key)).count().filter(col("count") >= 2L).select(col(key))
 

@@ -1035,8 +1035,8 @@ object QueriesSmokeSpec {
   /** Windows whose partition keys ALL trace to a Generate (explode)
     * output column below them: a generator-derived key can DEGENERATE
     * to one hot value over corpus rows — a stop word's `token`
-    * partition is the entire corpus in one task sort (the q657 class;
-    * round-9 gate from the round-8 judge's task 4). MIXED keys like
+    * partition is the entire corpus in one task sort (the q657
+    * class). MIXED keys like
     * (token, doc_id div S) pass: the non-generator component bounds
     * the partition by construction. Windows over per-key AGGREGATES
     * still flag (the trace runs through Aggregate grouping keys) and
