@@ -223,8 +223,9 @@ object SuffixDedupQueries extends QueryGroup {
     * blocks and deletes nothing) and the inventory q404's positional
     * coverage cannot name.
     *
-    * Scale shape: one token scan in the memoized fold; extension grams
-    * exist only for candidate positions (≥ 2-occurrence K-grams),
+    * Scale shape: the memoized fold; K-gram and extension-gram
+    * occurrences are counted by digest-keyed hash aggregates; extension
+    * grams exist only for candidate positions (≥ 2-occurrence K-grams),
     * ≤ M−K+1 digests each; the duplicated-length fold, left-shadow test
     * and coverage union are per-document (bounded by document length);
     * the census is source-keyed aggregation over the fold's views. */
