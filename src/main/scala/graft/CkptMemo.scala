@@ -44,7 +44,7 @@ final class CkptMemo[V] {
   private val map = new ConcurrentHashMap[String, Entry]()
   CkptMemo.instances.add(this)
 
-  private def leafRdds(df: DataFrame): Seq[RDD[_]] =
+  private[graft] def leafRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.logical.collectLeaves().collect { case l: LogicalRDD => l.rdd }
 
   private def alive(e: Entry): Boolean =

@@ -16,27 +16,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  // Tables.table calls configure on every loader hit (so ad-hoc sessions
-  // are always correctly configured), which is thousands of calls per
-  // bench pass; each conf.set walks SQLConf validation, so short-circuit
-  // per session object. Keyed on the session itself through weak
-  // references — identityHashCode is NOT unique and is reused after GC,
-  // so a long-lived process creating many sessions (tests, notebooks)
-  // could silently skip configuring a fresh session that collides with
-  // a dead one's hash, leaving ANSI on / nanosAsLong off and changing
-  // query semantics. SparkSession does not override equals, so a
-  // WeakHashMap compares keys by reference, which is exactly the
-  // per-instance memo needed; dead sessions un-memo themselves.
-  private val configured: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
   /** Apply graft's standard SQL confs to an existing session (e.g. one
-    * a caller built and handed to `Tables`). Safe to call repeatedly —
-    * applies once per session instance. */
+    * a caller built and handed to `Tables`). Each call re-applies them,
+    * so it also restores a conf an operator re-pinned (the state store
+    * provider `Stateful.runningTotals` sets). */
   def configure(spark: SparkSession): SparkSession = {
-    if (!configured.add(spark)) return spark
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // events.parquet stores TIMESTAMP(NANOS); Spark has no nanos timestamp
     // type, so read as long and convert (Tables.events).

@@ -55,10 +55,10 @@ object Tables {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.configure(spark)
     val perSession = cache.synchronized {
       var e = cache.get(spark)
       if (e == null) {
+        GraftSession.configure(spark)
         val listener = new org.apache.spark.scheduler.SparkListener {
           override def onApplicationEnd(
               end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =

@@ -143,9 +143,7 @@ object Backbone {
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
         .localCheckpoint(true)
       val edges = thresholdEdges(weighted).localCheckpoint(true)
-      weighted.queryExecution.logical.collectLeaves()
-        .collect { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-        .foreach(_.unpersist(blocking = false))
+      memo.leafRdds(weighted).foreach(_.unpersist(blocking = false))
       edges
     }
 
@@ -173,6 +171,9 @@ object Backbone {
     * high-degree hub blows up to O(deg²) rows from a single key.
     * Persisted: every caller joins it against itself. */
   def orientByDegree(edges: DataFrame, deg: DataFrame): DataFrame =
+    orient(edges, deg).persist()
+
+  private def orient(edges: DataFrame, deg: DataFrame): DataFrame =
     edges
       .join(deg.select(col("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("u").as("v"), col("d").as("dv")), Seq("v"))
@@ -181,7 +182,6 @@ object Backbone {
           col("u")).otherwise(col("v")).as("u"),
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           col("v")).otherwise(col("u")).as("v"))
-      .persist()
 
   /** The degree-oriented ship-year co-supply edge list, memoized and
     * checkpointed — q95 and q551 run their wedge joins off this one
@@ -189,15 +189,7 @@ object Backbone {
   def coSupplyOriented(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, dir, "coSupplyOriented") {
       val canon = coSupplyCanon(spark, dir)
-      canon
-        .join(symDegrees(canon).select(col("u"), col("d").as("du")), Seq("u"))
-        .join(symDegrees(canon).select(col("u").as("v"), col("d").as("dv")), Seq("v"))
-        .select(
-          when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-            col("u")).otherwise(col("v")).as("u"),
-          when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-            col("v")).otherwise(col("u")).as("v"))
-        .localCheckpoint(true)
+      orient(canon, symDegrees(canon)).localCheckpoint(true)
     }
 
   /** The ship-year co-supply triangle count (one checkpointed row) —

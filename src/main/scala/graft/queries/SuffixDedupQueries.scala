@@ -116,13 +116,7 @@ object SuffixDedupQueries extends QueryGroup {
     * source, n_tok, dup_tok, reps), where reps lists the document's
     * repeat starts in position order as (pos, len_p, dig) and dig is set
     * on the left-maximal starts only. One adaptive query and one
-    * materialisation of [[repeatFold]]. */
-  private def buildRepeatTables(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    repeatFold(spark, dir).localCheckpoint(true)
-
-  /** The per-document fold behind the memo, unmaterialised (the plan
-    * hygiene gates read it here: the memo's consumers see only the
-    * checkpoint). The corpus is read three times. Column pruning gives
+    * materialisation. The corpus is read three times. Column pruning gives
     * the token-hash reads, (doc_id, text), and the fold's read, (doc_id,
     * source, text), different schemas, so they cannot share one exchange.
     * The token-hash reads split in two: the joins back to the documents
@@ -148,7 +142,7 @@ object SuffixDedupQueries extends QueryGroup {
     * duplicate tests are digest-keyed hash aggregates and semi joins;
     * the per-document regroups are doc-keyed aggregates of
     * candidate-bounded rows. */
-  private[graft] def repeatFold(spark: org.apache.spark.sql.SparkSession,
+  private def buildRepeatTables(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): org.apache.spark.sql.DataFrame = {
     import graft.functions.expressions.{gram_chain_digests, repeat_extensions,
       token_xxhashes, tokens_native}
@@ -200,14 +194,15 @@ object SuffixDedupQueries extends QueryGroup {
           'dig', CASE WHEN i = 0 OR lp[i - 1].pos <> e.pos - 1 OR e.l > lp[i - 1].l - 1
             THEN md5(concat_ws(' ', slice(tk, CAST(e.pos AS INT), CAST(e.l AS INT)))) END)),
           array())""").as("reps"))
+      .localCheckpoint(true)
   }
 
   /** The values of digest column `key` occurring ≥ 2 times in `df`: a
     * hash aggregate with map-side partials, read back through a keyed
     * semi join — not a window partitioned by the digest, where one
     * boilerplate gram (a license footer) puts every corpus-wide
-    * occurrence into one window partition (the LinkageQueries rule,
-    * gated by QueriesSmokeSpec's generator-keyed window check). */
+    * occurrence into one window partition (the LinkageQueries rule;
+    * QueriesSmokeSpec's plan gate checks this build's plan for it). */
   private def repeated(df: org.apache.spark.sql.DataFrame, key: String) =
     df.groupBy(col(key)).count().filter(col("count") >= 2L).select(col(key))
 

@@ -181,7 +181,7 @@ class ScaleOpsSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         val s = df.agg(sum(col("v") + col("tier"))).head().getLong(0)
-        Thread.sleep(1000) // listener bus is async; let task-end events drain
+        org.apache.spark.TestBus.drain(spark.sparkContext)
         (s, maxRows.get())
       } finally spark.sparkContext.removeSparkListener(listener)
     }

