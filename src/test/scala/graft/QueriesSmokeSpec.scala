@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Generate, Join,
-  LogicalPlan, Project, UnaryNode, Window => WindowNode}
+import graft.PlanShapes._
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Every registered query runs at sf0.001 and produces a sane result;
@@ -104,67 +102,6 @@ class QueriesSmokeSpec extends SparkSpec {
   private case object Cartesian extends Rule("CartesianProduct")
   private case object ExprBomb extends Rule("expression tree over 4000 nodes")
 
-  /** Windows whose partition keys all trace back, through projections
-    * and aggregates, to one origin below them. `origin` decides at the
-    * node that starts or breaks a key (Some), or lets the trace go on
-    * (None). A bounded partition COUNT over corpus rows is a
-    * corpus-sized single-task sort. */
-  private def keyedWindows(plan: LogicalPlan,
-                           origin: (LogicalPlan, AttributeSet) => Option[Boolean]): Int = {
-    def retrace(wanted: AttributeSet, outs: Seq[NamedExpression]): AttributeSet =
-      AttributeSet(outs.flatMap {
-        case a: Alias if wanted.contains(a.toAttribute) => a.child.references.toSeq
-        case a: Attribute if wanted.contains(a) => Seq(a)
-        case _ => Nil
-      })
-    def traces(node: LogicalPlan, wanted: AttributeSet): Boolean =
-      wanted.nonEmpty && origin(node, wanted).getOrElse(node match {
-        case p: Project   => traces(p.child, retrace(wanted, p.projectList))
-        case a: Aggregate => traces(a.child, retrace(wanted, a.aggregateExpressions))
-        case u: UnaryNode => traces(u.child, wanted)
-        case other => other.children.find(c => wanted.subsetOf(c.outputSet))
-          .exists(traces(_, wanted))
-      })
-    plan.collect {
-      case w: WindowNode if w.partitionSpec.nonEmpty &&
-        traces(w.child, AttributeSet(w.partitionSpec.flatMap(_.references))) => w
-    }.size
-  }
-
-  /** Keys that all come from the broadcast side of a join: the partition
-    * count is the broadcast row count (a probe panel, a grid, one row). */
-  private def broadcastSide(node: LogicalPlan, wanted: AttributeSet): Option[Boolean] =
-    node match {
-      case j: Join if Seq(j.hint.leftHint -> j.left, j.hint.rightHint -> j.right).exists {
-          case (hint, side) => hint.exists(_.strategy.contains(BROADCAST)) &&
-            wanted.subsetOf(side.outputSet)
-        } => Some(true)
-      case _ => None
-    }
-
-  /** Keys that all come from a Generate (explode): one hot value (a stop
-    * word) makes a corpus-sized partition. A mixed key such as (token,
-    * doc_id div S) is bounded by its other part. */
-  private def generatorOutput(node: LogicalPlan, wanted: AttributeSet): Option[Boolean] =
-    node match {
-      case g: Generate =>
-        val out = AttributeSet(g.generatorOutput)
-        if (wanted.subsetOf(out)) Some(true)
-        else if (wanted.intersect(out).nonEmpty) Some(false)
-        else None
-      case _ => None
-    }
-
-  /** A `Window.orderBy(...)` with no partitionBy sorts on ONE task. */
-  private def globalWindows(plan: LogicalPlan): Int =
-    plan.collect { case w: WindowNode if w.partitionSpec.isEmpty => w }.size
-
-  /** The largest single expression tree: a builder that folds an
-    * accumulator into BOTH branches of a conditional doubles the tree per
-    * step (round 6's q547 compile bomb). */
-  private def maxExpressionNodes(plan: LogicalPlan): Int =
-    (0 +: plan.flatMap(_.expressions.map(_.collect { case _ => 1 }.size))).max
-
   private def shapes(qe: QueryExecution): Set[Rule] = {
     val plan = qe.optimizedPlan
     val physical = qe.executedPlan.toString
@@ -177,7 +114,10 @@ class QueriesSmokeSpec extends SparkSpec {
       ExprBomb -> (maxExpressionNodes(plan) > 4000)).collect { case (r, true) => r }
   }
 
-  test("plan gates: only sanctioned shapes, no stale sanctions") {
+  /** The shapes each query shows, in its construction steps or its final
+    * plan, from two construction passes of the catalog; both plan gates
+    * below judge this one record. */
+  private lazy val shown: Map[String, Set[Rule]] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val steps = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val recorder = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -188,13 +128,13 @@ class QueriesSmokeSpec extends SparkSpec {
     val counter = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    val shown = scala.collection.mutable.Map[String, Set[Rule]]().withDefaultValue(Set.empty)
+    val seen = scala.collection.mutable.Map[String, Set[Rule]]().withDefaultValue(Set.empty)
     // every action a builder ran (memo builds, eager checkpoints, driver
     // collects) has reached the recorder once the bus is drained
     def construct(name: String) = {
       val df = SparkEntry.queries(name)(spark, sfDir)
       org.apache.spark.TestBus.drain(spark.sparkContext)
-      shown(name) ++= Iterator.continually(steps.poll()).takeWhile(_ != null).flatMap(shapes)
+      seen(name) ++= Iterator.continually(steps.poll()).takeWhile(_ != null).flatMap(shapes)
       df
     }
     spark.listenerManager.register(recorder)
@@ -209,20 +149,38 @@ class QueriesSmokeSpec extends SparkSpec {
       for ((name, _) <- catalog) {
         val before = jobs.get()
         val df = construct(name)
-        if (jobs.get() > before) shown(name) += Eager
-        shown(name) ++= shapes(df.queryExecution)
+        if (jobs.get() > before) seen(name) += Eager
+        seen(name) ++= shapes(df.queryExecution)
       }
     } finally {
       spark.listenerManager.unregister(recorder)
       spark.sparkContext.removeSparkListener(counter)
     }
-    val unsanctioned = for ((q, rules) <- shown.toSeq; r <- rules
-      if !sanctions.contains((q, r))) yield s"$q: unsanctioned ${r.shape}"
-    val stale = for ((q, r) <- sanctions.keys.toSeq if r != Empty && !shown(q)(r))
+    seen.toMap.withDefaultValue(Set.empty)
+  }
+
+  /** Fails on a shape among `rules` that the table does not sanction for
+    * the query, and on an entry among `rules` whose query no longer shows
+    * its shape. */
+  private def gate(rules: Set[Rule]): Unit = {
+    val unsanctioned = for ((q, rs) <- shown.toSeq; r <- rs
+      if rules(r) && !sanctions.contains((q, r))) yield s"$q: unsanctioned ${r.shape}"
+    val stale = for ((q, r) <- sanctions.keys.toSeq if rules(r) && !shown(q)(r))
       yield s"$q: stale sanction, no longer shows ${r.shape}"
     val failures = (unsanctioned ++ stale).sorted
     if (failures.nonEmpty) fail(failures.mkString("; ") + " — rewrite the query, " +
       "or add (with its row bound) or delete its entry in the sanction table")
+  }
+
+  test("query constructors are lazy: warm construction launches zero jobs") {
+    gate(Set(Eager))
+  }
+
+  test("plan hygiene: no cartesian products, no unsanctioned nested loops, " +
+    "no unsanctioned partition-less, broadcast-keyed, or generator-keyed " +
+    "windows, no expression compile bombs") {
+    gate(Set(Cartesian, CrossJoin, GlobalWindow, BroadcastKeyedWindow,
+      GeneratorKeyedWindow, ExprBomb))
   }
 
   test("generator-keyed window canary: the unsharded posting-list form IS " +

@@ -209,4 +209,29 @@ class SuffixDedupSpec extends SparkSpec {
     assert(run("q742_maximal_repeat_census", dir).toSeq === c1,
       "rebuilt suffix memo diverged from the original")
   }
+
+  test("the memo build plans no generator-keyed window") {
+    // the memo's consumers read its checkpoint, so no query's final plan
+    // shows the build: record its plans. Each duplicate test must stay a
+    // hash aggregate and a keyed semi join, not a window partitioned by
+    // the exploded digest
+    import org.apache.spark.sql.execution.QueryExecution
+    val dir = java.nio.file.Files.createTempDirectory("graft_sfx6").toString
+    writeDocs(dir, phraseDocs(8))
+    // a new session is a new memo key, so the build below is cold
+    val s2 = spark.newSession()
+    val steps = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val recorder = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = steps.add(qe)
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s2.listenerManager.register(recorder)
+    try {
+      queries.SuffixDedupQueries.repeatFrames(s2, dir)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally s2.listenerManager.unregister(recorder)
+    val plans = steps.toArray(Array.empty[QueryExecution]).map(_.optimizedPlan)
+    assert(plans.nonEmpty, "the cold memo build recorded no plan")
+    assert(plans.map(PlanShapes.keyedWindows(_, PlanShapes.generatorOutput)).sum === 0)
+  }
 }
