@@ -63,9 +63,12 @@ object Bench {
     }
     // ALWAYS drop the SQL cache: a lazily-cached table registered by
     // query N but never materialized has no persistent RDD yet, and
-    // would otherwise materialize inside query N+1's timing. clearCache
-    // on an empty cache is a no-op-cheap map clear — only System.gc()
-    // was the fixed-floor cost worth gating.
+    // would otherwise materialize inside query N+1's timing. The
+    // builders that still leave a cache entry are the `Cached` entries
+    // of QueriesSmokeSpec's sanction table, each with the measured
+    // reason its persist stays. clearCache on an empty cache is a
+    // no-op-cheap map clear — only System.gc() was the fixed-floor cost
+    // worth gating.
     spark.catalog.clearCache()
     if (usedHeap - heapAfterGc > (2L << 30)) {
       System.gc() // don't charge query N for query N-1's garbage

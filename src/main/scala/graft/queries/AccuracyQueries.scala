@@ -34,7 +34,6 @@ object AccuracyQueries extends QueryGroup {
       val vhist = Tables.orders(spark, dir)
         .select(cents(col("o_totalprice")).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-        .persist() // one scan feeds stats, exact ranks, and all 3 bin sweeps
       val stats = vhist.agg(sum(col("cnt")).as("n"), min(col("v")).as("vmin"),
         max(col("v")).as("vmax"))
       val ps = Seq(50L, 90L, 99L)

@@ -220,8 +220,8 @@ object AdvancedQueries extends QueryGroup {
     * be 10/10 (the q32 "nprobe=all ≡ exact" identity, now measured
     * rather than assumed).
     *
-    * Scale shape: one IVF build (narrow argmax assignment, persisted and
-    * shared by all four probes), each probe touching only its cells'
+    * Scale shape: one IVF build (narrow argmax assignment, read by all
+    * four probes), each probe touching only its cells'
     * vectors with the query broadcast; the brute-force truth is one
     * TakeOrdered over the corpus. The recall join compares two 10-row
     * sets per probe — nothing. Counts are integers; recall in exact
@@ -231,11 +231,10 @@ object AdvancedQueries extends QueryGroup {
     (spark, dir) => {
       val emb = Tables.embeddings(spark, dir)
       val (assignments, centroids) = Ivf.build(emb, "vec_id", "embedding", k = 8)
-      val a = assignments.persist() // four probes share the assignment pass
       val brute = Knn.bruteForceTopK(emb, "vec_id", "embedding", queryId = 0L, k = 10)
         .select(col("vec_id"))
       val per = Seq(1, 2, 4, 8).map { p =>
-        Ivf.probeTopK(a, centroids, queryId = 0L, k = 10, nprobe = p)
+        Ivf.probeTopK(assignments, centroids, queryId = 0L, k = 10, nprobe = p)
           .select(lit(p.toLong).as("nprobe"), col("id").as("vec_id"))
       }.reduce(_ unionAll _)
       val hits = per.join(brute, Seq("vec_id"), "left_semi")
@@ -323,7 +322,7 @@ object AdvancedQueries extends QueryGroup {
     * when the recall curve says the tail dims don't pay their way. The
     * d=64 row is a self-check: recall must be 10/10.
     *
-    * Scale shape: the (id, vector) base is persisted once and shared by
+    * Scale shape: the (id, vector) base is one narrow scan read by
     * all five rankings; each ranking is a narrow sliced-dot projection
     * with the one-row query broadcast, collapsing to
     * TakeOrderedAndProject (per-partition top-10 heaps — no global
@@ -332,7 +331,7 @@ object AdvancedQueries extends QueryGroup {
     "q173_dim_truncation_recall",
     (spark, dir) => {
       val base = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding")).persist()
+        .select(col("vec_id"), col("embedding"))
       val dims = Seq(8, 16, 32, 64)
       def topk(d: Int) = {
         val q = base.filter(col("vec_id") === 0L)

@@ -105,14 +105,11 @@ object BehaviorQueries extends QueryGroup {
           count(lit(1)).as("f_orders"),
           sum(cents(col("o_totalprice"))).as("mon_cents"))
       val maxd = cust0.agg(max(col("last_day")).as("maxd"))
-      // four consumers (three histograms + the final join chain): persist
-      // lazily so the orders scan + per-customer aggregate runs once
       val cust = cust0.crossJoin(broadcast(maxd))
         .select(col("o_custkey"),
           (col("maxd") - col("last_day")).cast("long").as("r_days"),
           col("f_orders"),
           expr("mon_cents div 10000").as("m_hund"))
-        .persist()
       cust
         .join(broadcast(quartileMap(cust, "r_days")), Seq("r_days"))
         .join(broadcast(quartileMap(cust, "f_orders")), Seq("f_orders"))
@@ -277,7 +274,7 @@ object BehaviorQueries extends QueryGroup {
         .filter(col("ts_s") > col("t2"))
         .groupBy(col("user_id"))
         .agg(expr("(min(ts_s) - min(t1m)) div 60").as("lat_min"))
-      val hist = p.groupBy(col("lat_min")).agg(count(lit(1)).as("c")).persist()
+      val hist = p.groupBy(col("lat_min")).agg(count(lit(1)).as("c"))
       val w = Window.orderBy(col("lat_min"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = hist.select(col("lat_min"), sum(col("c")).over(w).as("cum"))
@@ -378,7 +375,6 @@ object BehaviorQueries extends QueryGroup {
           datediff(col("l_shipdate").cast("date"), col("o_orderdate").cast("date"))
             .cast("long").as("d"))
         .groupBy(col("pr"), col("d")).agg(count(lit(1)).as("c"))
-        .persist() // cumulative pass + per-group totals
       val w = Window.partitionBy(col("pr")).orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = hist.select(col("pr"), col("d"), sum(col("c")).over(w).as("cum"))
@@ -431,7 +427,6 @@ object BehaviorQueries extends QueryGroup {
           expr("CAST(CAST(ts AS TIMESTAMP) AS LONG) div 86400").as("day"),
           cents(col("value")).as("vc"))
       val first = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-        .persist() // sizes + the revenue join
       val sizes = first.groupBy(col("cohort_day")).agg(count(lit(1)).as("n_users"))
       val cells = ev.filter(col("event_type") === "purchase")
         .join(first, Seq("user_id"))

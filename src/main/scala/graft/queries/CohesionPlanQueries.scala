@@ -41,7 +41,7 @@ object CohesionPlanQueries extends QueryGroup {
       val grid = Seq(500L, 750L, 900L).toDF("cut_permille")
       val edges = graft.graph.Backbone.coPurchase(spark, dir)
       val deg = edges.select(col("u")).union(edges.select(col("v").as("u")))
-        .groupBy(col("u")).agg(count(lit(1)).as("d")).persist()
+        .groupBy(col("u")).agg(count(lit(1)).as("d"))
       val dcut = deg.groupBy(col("d")).agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(Window.orderBy(col("d"))
           .rowsBetween(Window.unboundedPreceding, 0)))
@@ -151,7 +151,6 @@ object CohesionPlanQueries extends QueryGroup {
           expr("CAST(month(CAST(l_shipdate AS DATE)) AS BIGINT)").as("m"),
           graft.functions.Deterministic.cents(col("l_extendedprice")).as("c"))
         .groupBy(col("brand"), col("m")).agg(sum(col("c")).as("rev"))
-        .persist()
       val duels = cells.as("a")
         .join(cells.as("b").withColumnRenamed("brand", "brand_b")
           .withColumnRenamed("rev", "rev_b"), Seq("m"))

@@ -163,10 +163,7 @@ object ConductancePlanQueries extends QueryGroup {
       val spark0 = spark
       import spark0.implicits._
       val edges = Backbone.coPurchase(spark, dir)
-      // persisted: the histogram, the membership flags and BOTH sides
-      // of the cut join read it, and AQE's per-exchange jobs would
-      // otherwise re-run the degree aggregation up to four times
-      val deg = Backbone.symDegrees(edges).persist()
+      val deg = Backbone.symDegrees(edges)
       val n = deg.agg(count(lit(1)).as("n_nodes"))
       val wd = Window.orderBy(col("d").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -570,8 +570,8 @@ object CorpusQueries extends QueryGroup {
     * candidates at full scale.
     *
     * Scale shape: the candidate set is already bucket-capped (bounded
-    * fan-out) and persisted (three consumers: the pair rows + both id
-    * sides of the semi-join), so the deliberate join-back to the corpus
+    * fan-out; its three consumers, the pair rows and both id sides of
+    * the semi-join, read the memo's checkpoint), so the deliberate join-back to the corpus
     * for exact shingle sets — the very thing the production LSH path
     * avoids — computes and shuffles shingle arrays ONLY for candidate
     * docs (left-semi first); set algebra is per-row array intersection,
@@ -583,7 +583,6 @@ object CorpusQueries extends QueryGroup {
       val cand = MinHashLSH.corpusNearDuplicates(spark, dir)
         .select(col("doc_a"), col("doc_b"),
           (expr("CAST(est_jaccard * 16 AS BIGINT)") * 62500L).as("est_ppm"))
-        .persist()
       val candIds = cand.select(col("doc_a").as("doc_id"))
         .union(cand.select(col("doc_b").as("doc_id"))).distinct()
       val sh = Tables.documents(spark, dir)

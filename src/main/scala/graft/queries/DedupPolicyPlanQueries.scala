@@ -120,7 +120,7 @@ object DedupPolicyPlanQueries extends QueryGroup {
         .filter(size(col("tk")) >= 4)
         .select(md5(expr("array_join(slice(tk, 1, 4), ' ')")).as("digest"),
           col("source"))
-        .distinct().persist()
+        .distinct()
       ds.as("a").join(ds.as("b"),
           col("a.digest") === col("b.digest")
             && col("a.source") < col("b.source"))

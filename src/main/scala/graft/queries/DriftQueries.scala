@@ -39,7 +39,6 @@ object DriftQueries extends QueryGroup {
       val tok = Tables.documents(spark, dir)
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
       val nst = tok.groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n_st"))
-        .persist() // three consumers: marginals ×2 + the grid join
       val nt = nst.groupBy(col("tok")).agg(sum(col("n_st")).as("n_t"))
       val tsrc = nst.groupBy(col("source")).agg(sum(col("n_st")).as("t_s"))
       val tot = tsrc.agg(sum(col("t_s")).as("t"))
@@ -89,7 +88,6 @@ object DriftQueries extends QueryGroup {
     (spark, dir) => {
       val cells = Tables.documents(spark, dir)
         .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-        .persist() // marginals ×3 + grid join
       val rl = cells.groupBy(col("lang")).agg(sum(col("o")).as("r"))
       val cs = cells.groupBy(col("source")).agg(sum(col("o")).as("cc"))
       val tot = cells.agg(sum(col("o")).as("t"))
@@ -145,7 +143,6 @@ object DriftQueries extends QueryGroup {
         .groupBy(col("d")).agg(
           sum(when(col("pr") === "1-URGENT", 1L).otherwise(0L)).as("c1"),
           sum(when(col("pr") === "5-LOW", 1L).otherwise(0L)).as("c2"))
-        .persist() // cumulative pass + the totals aggregate
       val w = Window.orderBy(col("d")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = h.select(col("d"),
         sum(col("c1")).over(w).as("a1"), sum(col("c2")).over(w).as("a2"))
@@ -237,7 +234,6 @@ object DriftQueries extends QueryGroup {
       val freq = Tables.documents(spark, dir)
         .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-        .persist() // ranked pass + the corpus-total aggregate
       val ord = Window.orderBy(col("n").desc, col("tok"))
       val ranked = freq.select(col("tok"), col("n"),
         row_number().over(ord).as("top_k"),
@@ -285,7 +281,6 @@ object DriftQueries extends QueryGroup {
       val st = Tables.documents(spark, dir)
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
         .distinct()
-        .persist() // sizes + both sides of the pair join
       val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val inter = st.as("a").join(st.as("b"), Seq("tok"))
         .filter(col("a.source") < col("b.source"))
@@ -331,7 +326,6 @@ object DriftQueries extends QueryGroup {
       val freq = Tables.documents(spark, dir)
         .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-        .persist() // totals + the cutoff grid
       val tot = freq.agg(sum(col("n")).as("t"))
       val cuts = Seq(2L, 5L, 10L, 100L).toDF("cutoff")
       freq.crossJoin(broadcast(cuts))
@@ -528,7 +522,6 @@ object DriftQueries extends QueryGroup {
       val st = Tables.documents(spark, dir)
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
         .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c_src"))
-        .persist() // global counts + per-source totals derive from it
       val glob = st.groupBy(col("tok")).agg(sum(col("c_src")).as("c_all"))
       val srcTot = st.groupBy(col("source")).agg(sum(col("c_src")).as("t_src"))
       val allTot = srcTot.agg(sum(col("t_src")).as("t_all"))
@@ -668,7 +661,6 @@ object DriftQueries extends QueryGroup {
           expr("CAST(CAST(o_orderdate AS TIMESTAMP) AS BIGINT) div 86400").as("day"),
           graft.functions.Deterministic.cents(col("o_totalprice")).as("c"))
         .groupBy(col("prio"), col("day")).agg(sum(col("c")).as("v"))
-        .persist()
       val contrib = daily
         .select(col("prio"), col("day"), col("v"),
           explode(expr("sequence(0, 7)")).as("k"))

@@ -219,7 +219,7 @@ object EncodingPlanQueries extends QueryGroup {
         .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
         .groupBy(expr("CAST(datediff(o_orderdate, DATE '1995-01-01') AS BIGINT)")
           .as("day"))
-        .agg(count(lit(1)).as("cnt")).persist()
+        .agg(count(lit(1)).as("cnt"))
       val med = daily
         .withColumn("rn", row_number().over(Window.orderBy(col("cnt"), col("day"))))
         .withColumn("nn", count(lit(1)).over(

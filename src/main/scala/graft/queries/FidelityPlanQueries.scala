@@ -45,7 +45,6 @@ object FidelityPlanQueries extends QueryGroup {
         .select(explode(tokens_native(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .select(col("term"), col("cnt"), poly_hash(col("term")).as("ph"))
-        .persist()
       val hashed = terms.crossJoin(broadcast(grid))
         .withColumn("h", expr("((ph % 2147483648) * (2654435761 + 2 * d)) % 4294967296"))
         .select(col("term"), col("cnt"), col("d"),
@@ -122,7 +121,6 @@ object FidelityPlanQueries extends QueryGroup {
     (spark, dir) => {
       val cells = Tables.documents(spark, dir)
         .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
-        .persist()
       val bySrc = cells.groupBy(col("source")).agg(sum(col("n")).as("n_src"))
       val byLang = cells.groupBy(col("lang")).agg(sum(col("n")).as("n_lang"))
       val tot = cells.agg(sum(col("n")).as("n_all"))

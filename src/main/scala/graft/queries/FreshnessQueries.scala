@@ -156,7 +156,6 @@ object FreshnessQueries extends QueryGroup {
         .join(idx, Seq("d"), "left")
         .select(col("d"), coalesce(col("rev_c"), lit(0L)).as("v"))
         .withColumn("cum", sum(col("v")).over(Window.orderBy(col("d"))))
-        .persist() // live values and every cadence's view read this
       val cad = dense.select(col("d"), col("cum"),
         explode(expr("array(1L, 7L, 28L)")).as("c"))
         .withColumn("refresh_d", expr("d div c * c"))

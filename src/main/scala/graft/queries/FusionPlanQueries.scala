@@ -135,7 +135,6 @@ object FusionPlanQueries extends QueryGroup {
       val top = scored(spark, dir, 5).groupBy(col("pid")).agg(
         topk_pairs(col("dot").cast("double"), col("vec_id"), 10).as("td"),
         topk_pairs(col("ms").cast("double"), col("vec_id"), 10).as("tm"))
-        .persist()
       val d = top.select(col("pid"), posexplode(col("td")).as(Seq("p", "e")))
         .select(col("pid"), col("e.id").as("vid"), (col("p") + 1L).as("rd"))
       val m = top.select(col("pid"), posexplode(col("tm")).as(Seq("p", "e")))
@@ -195,7 +194,6 @@ object FusionPlanQueries extends QueryGroup {
       val top = scored(spark, dir, 8).groupBy(col("pid")).agg(
         topk_pairs(col("dot").cast("double"), col("vec_id"), 20).as("td"),
         topk_pairs(col("ms").cast("double"), col("vec_id"), 20).as("tm"))
-        .persist()
       val d = top.select(col("pid"), posexplode(col("td")).as(Seq("p", "e")))
         .select(col("pid"), col("e.id").as("vid"), (col("p") + 1L).as("rd"))
       val m = top.select(col("pid"), posexplode(col("tm")).as(Seq("p", "e")))

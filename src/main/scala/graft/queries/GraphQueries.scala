@@ -265,7 +265,6 @@ object GraphQueries extends QueryGroup {
       val cells = assignments.select(col("id"), col("cluster"))
         .join(emb.select(col("vec_id").as("id"), col("label")), Seq("id"))
         .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("c"))
-        .persist() // majority pick + per-cell rollup
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("cluster")).orderBy(col("c").desc, col("label"))
       val maj = cells
@@ -354,7 +353,7 @@ object GraphQueries extends QueryGroup {
     "q185_two_hop_reach",
     (spark, dir) => {
       // r13: symmetric edges from the memoized graph.Backbone canon
-      val edges = graft.graph.Backbone.coSupplySym(spark, dir).persist()
+      val edges = graft.graph.Backbone.coSupplySym(spark, dir)
       val seeds = Tables.supplier(spark, dir)
         .filter(col("s_suppkey") <= 10)
         .select(col("s_suppkey").as("seed"))

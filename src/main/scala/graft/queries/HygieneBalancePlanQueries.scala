@@ -110,7 +110,6 @@ object HygieneBalancePlanQueries extends QueryGroup {
     (spark, dir) => {
       val counts = Tables.documents(spark, dir)
         .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n_sl"))
-        .persist()
       val perLang = counts.groupBy(col("lang")).agg(sum(col("n_sl")).as("n_l"))
       val perSrc = counts.groupBy(col("source")).agg(sum(col("n_sl")).as("n_s"))
       val total = counts.agg(sum(col("n_sl")).as("n_tot"))

@@ -104,7 +104,6 @@ object InventoryPlanQueries extends QueryGroup {
     (spark, dir) => {
       val byDay = demand(spark, dir)
         .groupBy(col("brand"), col("day")).agg(sum(col("q")).as("dq"))
-        .persist()
       // daily moments over the FULL 365-day calendar (zero-demand days
       // count — demand variance on observed-only days understates)
       val mom = byDay.groupBy(col("brand"))
@@ -203,7 +202,6 @@ object InventoryPlanQueries extends QueryGroup {
           expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01') AS BIGINT)")
             .as("day"))
         .agg(count(lit(1)).as("dq"))
-        .persist()
       // sd in CENTI units: integer flooring at unit resolution can
       // invert subadditivity on sparse series (floor(sd_i) = 0 while
       // the pooled floor survives); centi keeps the error < 0.01/term

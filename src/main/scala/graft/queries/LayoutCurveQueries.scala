@@ -250,7 +250,7 @@ object LayoutCurveQueries extends QueryGroup {
         .agg(expr("sum(digest) % 4294967296").as("digest"), sum(col("n")).as("n"))
         .select(lit(3L - l).as("level"), col("node"), col("digest"), col("n"))
       def tree(df: org.apache.spark.sql.DataFrame) = {
-        val lv = leaves(df).persist() // ≤ keyspace/1024 rows feed 4 levels
+        val lv = leaves(df)
         (0 to 3).map(l => level(lv, l)).reduce(_ unionAll _)
       }
       val a = tree(snapA)

@@ -37,7 +37,7 @@ object NominalAssocPlanQueries extends QueryGroup {
     (spark, dir) => {
       val ct = Tables.documents(spark, dir)
         .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n")).persist()
+        .agg(count(lit(1)).as("n"))
       def lambdaOf(x: String, y: String, tag: String) = {
         val modelCorrect = ct.groupBy(col(x)).agg(max(col("n")).as("mx"))
           .agg(sum(col("mx")).as("model_correct"))
@@ -98,7 +98,7 @@ object NominalAssocPlanQueries extends QueryGroup {
     (spark, dir) => {
       val ct = Tables.documents(spark, dir)
         .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n")).persist()
+        .agg(count(lit(1)).as("n"))
       // quadratic-sum and ppm terms in DECIMAL(38,0) (HUGEINT on the
       // oracle side): sx·10⁶ in raw BIGINT wraps past ~3·10⁶ docs per
       // class under ANSI-off (the q653 discipline; round-8 advice).

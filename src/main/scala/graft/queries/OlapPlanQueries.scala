@@ -45,7 +45,6 @@ object OlapPlanQueries extends QueryGroup {
       val dense = frame.join(idx, Seq("d"), "left")
         .select(col("d0"), col("d"), coalesce(col("rev_c"), lit(0L)).as("v"))
         .withColumn("blk", expr("d div 7"))
-        .persist() // feeds prefix, suffix, direct, and the join probe
       val wBlkAsc = Window.partitionBy(col("blk")).orderBy(col("d"))
       val wBlkDesc = Window.partitionBy(col("blk")).orderBy(col("d").desc)
       val folds = dense

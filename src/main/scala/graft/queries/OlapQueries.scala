@@ -2109,7 +2109,6 @@ object OlapQueries extends QueryGroup {
         .select(col("doc_id"),
           array_distinct(bigram_xxhashes(col("text"))).as("bg"))
         .filter(size(col("bg")) >= 1)
-        .persist() // all three greedy rounds re-read the per-doc sets
       def argmaxDoc(gains: DataFrame) = gains
         .filter(col("gain") >= 1L) // a fully-covered doc is not a candidate
         .orderBy(col("gain").desc, col("doc_id")).limit(1)

@@ -242,7 +242,7 @@ object OpsPlanQueries extends QueryGroup {
             lit(2147483648L)) * 2654435761L, lit(4294967296L)) % 8L
         )).as(Seq("policy", "expert")))
       val cells = routed.groupBy(col("policy"), col("batch"), col("expert"))
-        .agg(count(lit(1)).as("n")).persist()
+        .agg(count(lit(1)).as("n"))
       val batchTot = cells.groupBy(col("policy"), col("batch"))
         .agg(sum(col("n")).as("t_b"))
       val totals = cells.groupBy(col("policy")).agg(sum(col("n")).as("total_tokens"))

@@ -202,7 +202,6 @@ object PlanningQueries extends QueryGroup {
         .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
         .select(col("user_id"), col("c"),
           expr("CAST(c AS DECIMAL(38,0)) * c").as("c2"))
-        .persist() // total + top-k
       val tot = counts.agg(sum(col("c2")).as("total_pairs"))
       counts.crossJoin(broadcast(tot))
         .select(col("user_id"), col("c"),
@@ -240,7 +239,6 @@ object PlanningQueries extends QueryGroup {
       val hist = clusters.groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))
         .select(col("sz"), col("n_clusters"), (col("sz") * col("n_clusters")).as("n_docs"),
           ((col("sz") - 1) * col("n_clusters")).as("n_removable"))
-        .persist() // total + output
       val tot = hist.agg(sum(col("n_docs")).as("n_total"))
       hist.crossJoin(broadcast(tot))
         .select(col("sz").as("cluster_size"), col("n_clusters"), col("n_docs"),
@@ -281,7 +279,6 @@ object PlanningQueries extends QueryGroup {
         .groupBy(col("source")).agg(sum(col("tc")).as("n_tokens"))
         .select(col("source"), col("n_tokens"),
           expr("CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)").as("w"))
-        .persist() // totals + output
       val tot = src.agg(sum(col("n_tokens")).as("t"), sum(col("w")).as("sw"))
       src.crossJoin(broadcast(tot))
         .select(col("source"), col("n_tokens"),
@@ -377,7 +374,7 @@ object PlanningQueries extends QueryGroup {
       }
       val vals = Tables.orders(spark, dir)
         .select(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) div 100").as("v"))
-      val hist = vals.groupBy(col("v")).agg(count(lit(1)).as("c")).persist()
+      val hist = vals.groupBy(col("v")).agg(count(lit(1)).as("c"))
       val med = medianOf(hist, "v")
       val devHist = hist.crossJoin(broadcast(med))
         .select(abs(col("v") - col("med")).as("d"), col("c"))

@@ -298,7 +298,6 @@ object ProjectionPlanQueries extends QueryGroup {
           expr("h2 div 2147483648").as("half"))
         .groupBy(col("arm16"), col("half"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
-        .persist()
       val spark0 = spark
       import spark0.implicits._
       val grid = Seq(4L, 8L, 16L).toDF("n_arms")

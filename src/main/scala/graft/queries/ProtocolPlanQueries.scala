@@ -151,7 +151,6 @@ object ProtocolPlanQueries extends QueryGroup {
         .withColumn("y", expr("p + 5000000 * m"))
         .groupBy(col("t"), col("m"))
         .agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
-        .persist()
       val one = cells.agg(
         expr("sum(CASE WHEN t = 1 THEN n ELSE 0 END)").as("n1"),
         expr("sum(CASE WHEN t = 0 THEN n ELSE 0 END)").as("n0"),
@@ -269,7 +268,6 @@ object ProtocolPlanQueries extends QueryGroup {
           "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
           .as("bg"))
         .groupBy(col("source"), col("bg")).agg(count(lit(1)).as("c"))
-        .persist()
       val ranked = bigrams.withColumn("rk", row_number().over(
           Window.partitionBy(col("source")).orderBy(col("c").desc, col("bg"))))
       val summaries = ranked.filter(col("rk") <= 8)

@@ -209,8 +209,8 @@ object ReliabilityPlanQueries extends QueryGroup {
     * error collapsing as k grows is the budget dial for "how many
     * rows must the sample keep so downstream sums stay trustworthy".
     *
-    * Scale shape: priorities are one narrow projection (persisted
-    * once for the 3 sweeps); each k needs only the (k+1) largest
+    * Scale shape: priorities are one narrow projection, read by the
+    * 3 sweeps; each k needs only the (k+1) largest
     * priorities — a TakeOrdered top-k, never a global sort — and τ
     * re-enters the full scan as a ONE-ROW broadcast (the repo's
     * sanctioned bounded-BNLJ pattern: O(n) work, nothing corpus-sized
@@ -227,7 +227,6 @@ object ReliabilityPlanQueries extends QueryGroup {
           (Sampling.keyHash(expr("l_orderkey * 10 + l_linenumber"))
             % 999983L + 1L).as("u"))
         .select(col("w"), expr("w * 1000000 div u").as("q"))
-        .persist()
       val tot = pri.agg(sum(col("w")).as("true_sum_cents"))
       val perK = Seq(64, 256, 1024).map { k =>
         val tau = pri.orderBy(col("q").desc).limit(k + 1)

@@ -40,7 +40,7 @@ object RobustLocationPlanQueries extends QueryGroup {
     "q636_hodges_lehmann_location",
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = daily(spark, dir).persist()
+      val d = daily(spark, dir)
       val walsh = d.as("a").join(d.as("b"), col("a.day") <= col("b.day"))
         .select(expr("(a.rev + b.rev) div 2").as("w"))
       val hist = walsh.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -112,7 +112,7 @@ object RobustLocationPlanQueries extends QueryGroup {
     "q637_siegel_repeated_median",
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = daily(spark, dir).persist()
+      val d = daily(spark, dir)
       val slopes = d.as("a").join(d.as("b"), col("a.day") =!= col("b.day"))
         .select(col("a.day").as("day"),
           expr("(b.rev - a.rev) * 1000000 div (b.day - a.day)").as("s"))

@@ -43,7 +43,6 @@ object RobustnessPlanQueries extends QueryGroup {
         .select(cents(col("o_totalprice")).as("v"),
           Sampling.keyHash(col("o_orderkey"), 2246822519L).as("h"))
         .select(col("v"), expr("h div 4096").as("u")) // 20 high-ish bits
-        .persist()
       val clean = base.agg(expr("sum(v) div count(1)").as("clean_mean"))
       val dirty = base.crossJoin(broadcast(grid))
         .select(col("rate_ppm"),
@@ -247,7 +246,6 @@ object RobustnessPlanQueries extends QueryGroup {
               * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
               div 100""").as("net"))
         .groupBy(col("d")).agg(count(lit(1)).as("n"), sum(col("net")).as("s"))
-        .persist()
       val global = cells.agg(
         expr("sum(CASE WHEN d >= 5 THEN s ELSE 0 END) " +
           "div greatest(sum(CASE WHEN d >= 5 THEN n ELSE 0 END), 1)")

@@ -44,7 +44,7 @@ object SelectionPlanQueries extends QueryGroup {
         .select(col("region"), col("segment"),
           (expr("h div 1073741824") === 0L).as("in_sample"))
       val pop = cust.groupBy(col("region"), col("segment"))
-        .agg(count(lit(1)).as("n_pop")).persist()
+        .agg(count(lit(1)).as("n_pop"))
       val samp = cust.filter(col("in_sample"))
         .groupBy(col("region"), col("segment"))
         .agg(count(lit(1)).as("n_samp"))

@@ -185,11 +185,12 @@ object SequenceQueries extends QueryGroup {
         .localCheckpoint(true)
       val supps = Tables.supplier(spark, dir).select(col("s_suppkey").as("s"))
       // the normalized vector is read twice (its own max + the next
-      // join) — persist it or round r's plan embeds 2^r copies of
-      // round 1's subtree. The UN-normalized hub vector is read once,
-      // so it needs neither persist nor its own max barrier.
+      // join) — checkpoint it or round r's plan embeds 2^r copies of
+      // round 1's subtree (a supplier-sized frame per round, the
+      // q558/q600/q602 loop discipline). The UN-normalized hub vector
+      // is read once, so it needs no checkpoint and no max barrier.
       def normalize(df: DataFrame, k: String): DataFrame = {
-        val p = df.persist()
+        val p = df.localCheckpoint(true)
         val mx = p.agg(max(col(k)).as("mx"))
         p.crossJoin(broadcast(mx))
           .select(p.columns.filter(_ != k).map(col) :+

@@ -39,7 +39,7 @@ object SeriesDependencePlanQueries extends QueryGroup {
           .as("day"))
         .agg(sum(expr("CAST(floor(o_totalprice) AS BIGINT)")).as("rev"))
       val seg = daily.groupBy(expr("day div 5").as("seg"))
-        .agg(expr("sum(rev) div count(1)").as("m")).persist()
+        .agg(expr("sum(rev) div count(1)").as("m"))
       val brk = seg
         .withColumn("rn", row_number().over(Window.orderBy(col("m"), col("seg"))))
         .withColumn("nn", count(lit(1)).over(

@@ -234,7 +234,6 @@ object ServingQueries extends QueryGroup {
         .join(idx, Seq("i"), "left")
         .select(col("i"), coalesce(col("rev_c"), lit(0L)).as("v"))
         .withColumn("cum", sum(col("v")).over(Window.orderBy(col("i"))))
-        .persist() // the tree and every direct sum read this
       // t[i] = cum[i] - cum[i - lowbit(i)]; join the cum at the parent
       val t = grid.alias("g")
         .join(grid.select(col("i").as("pi"), col("cum").as("pcum")).alias("p"),

@@ -229,7 +229,7 @@ object TopologyPlanQueries extends QueryGroup {
       val grid = Seq(100L, 250L, 500L).toDF("top_pml")
       val edges = backbone(spark, dir)
       val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d")).persist()
+      val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
       val cut = deg.groupBy(col("d")).agg(count(lit(1)).as("c"))
         .withColumn("cumd", sum(col("c")).over(Window.orderBy(col("d").desc)
           .rowsBetween(Window.unboundedPreceding, 0)))

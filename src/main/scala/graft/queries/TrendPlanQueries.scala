@@ -40,7 +40,7 @@ object TrendPlanQueries extends QueryGroup {
   private val q611 = QueryDef(
     "q611_mann_kendall_trend",
     (spark, dir) => {
-      val d = dailyRevenue(spark, dir).persist()
+      val d = dailyRevenue(spark, dir)
       val s = d.as("a").join(d.as("b"), col("a.day") < col("b.day"))
         .agg(sum(expr("CAST(sign(b.rev - a.rev) AS BIGINT)")).as("s_stat"))
       val n = d.agg(count(lit(1)).as("n"))

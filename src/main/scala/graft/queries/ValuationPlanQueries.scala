@@ -33,7 +33,7 @@ object ValuationPlanQueries extends QueryGroup {
     (spark, dir) => {
       import graft.functions.Deterministic.cents
       val vals = Tables.orders(spark, dir)
-        .select(cents(col("o_totalprice")).as("v")).persist()
+        .select(cents(col("o_totalprice")).as("v"))
       val everything = Window.partitionBy()
       val coarse = vals.groupBy(expr("v div 65536").as("bin"))
         .agg(count(lit(1)).as("c"))
