@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.expressions._
 
-/** graft's custom Catalyst expressions as SQL functions.
+/** graft's kernels (graft.functions.expressions) as SQL functions.
   *
   * Two ways in, same registrations:
   *  - config: `spark.sql.extensions=graft.GraftExtensions` at session
@@ -29,41 +29,36 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"$arg must be an integer literal, got $other")
   }
+  private def intOf(c: Column, arg: String): Int = intOf(Bridge.expression(c), arg)
+
+  /** A SQL function over the kernel's Column-level declaration. */
+  private def sql(f: Seq[Column] => Column): Seq[Expression] => Expression =
+    args => Bridge.expression(f(args.map(Bridge.column)))
 
   /** Every graft SQL function: name → expression builder. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_poly_hash" -> (args => PolyHash(args.head)),
-    "graft_fingerprint" -> (args => Fingerprint(args.head)),
-    "graft_minhash" -> (args =>
-      MinHashSignature(args(0), intOf(args(1), "numHashes"), intOf(args(2), "shingleK"))),
-    "graft_simhash" -> (args => SimHash64(args(0), intOf(args(1), "bits"))),
-    "graft_cosine" -> (args => QuantizedCosine(args(0), args(1))),
-    "graft_ngram_jaccard" -> (args => NGramJaccard(args(0), args(1), intOf(args(2), "n"))),
-    "graft_tokens" -> (args => Tokens(args.head)),
-    "graft_token_count" -> (args => TokenCount(args.head)),
-    "graft_distinct_token_count" -> (args => DistinctTokenCount(args.head)),
-    "graft_quantize" -> (args => QuantizeVec(args.head)),
-    "graft_zorder" -> (args => ZOrderKey(
-      org.apache.spark.sql.catalyst.expressions.Cast(args(0), org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.catalyst.expressions.Cast(args(1), org.apache.spark.sql.types.LongType))),
-    "graft_lsh_bucket" -> (args => SignLshBucket(args(0), intOf(args(1), "planes"))),
-    "graft_ngram_containment" -> (args =>
-      NGramContainment(args(0), args(1), intOf(args(2), "n"))),
-    "graft_sig_match_count" -> (args => SigMatchCount(args(0), args(1))),
-    "graft_bloom_contains" -> (args =>
-      BloomContains(args(0),
-        org.apache.spark.sql.catalyst.expressions.Cast(args(1), org.apache.spark.sql.types.LongType),
-        intOf(args(2), "numHashes"))),
-    "graft_char_shingles" -> (args =>
-      CharShingleSet(args(0), intOf(args(1), "k"))),
-    "graft_word_shingles" -> (args =>
-      WordShingleSet(args(0), intOf(args(1), "k"))),
-    "graft_suffix_loop_period" -> (args =>
-      SuffixLoopPeriod(args(0), intOf(args(1), "maxP"))),
-    "graft_long_dot" -> (args => LongDot(args(0), args(1))),
-    "graft_l2sq" -> (args => L2SqLong(args(0), args(1))),
-    "graft_maxsim" -> (args =>
-      MaxSimBlocks(args(0), args(1), intOf(args(2), "blocks"))),
+    "graft_poly_hash" -> sql(a => poly_hash(a.head)),
+    "graft_fingerprint" -> sql(a => text_fingerprint(a.head)),
+    "graft_minhash" -> sql(a =>
+      minhash_signature(a(0), intOf(a(1), "numHashes"), intOf(a(2), "shingleK"))),
+    "graft_simhash" -> sql(a => simhash64(a(0), intOf(a(1), "bits"))),
+    "graft_cosine" -> sql(a => quantized_cosine(a(0), a(1))),
+    "graft_ngram_jaccard" -> sql(a => ngram_jaccard(a(0), a(1), intOf(a(2), "n"))),
+    "graft_tokens" -> sql(a => tokens_native(a.head)),
+    "graft_token_count" -> sql(a => token_count(a.head)),
+    "graft_distinct_token_count" -> sql(a => distinct_token_count(a.head)),
+    "graft_quantize" -> sql(a => quantize_vec(a.head)),
+    "graft_zorder" -> sql(a => zorder_key(a(0), a(1))),
+    "graft_lsh_bucket" -> sql(a => sign_lsh_bucket(a(0), intOf(a(1), "planes"))),
+    "graft_ngram_containment" -> sql(a => ngram_containment(a(0), a(1), intOf(a(2), "n"))),
+    "graft_sig_match_count" -> sql(a => sig_match_count(a(0), a(1))),
+    "graft_bloom_contains" -> sql(a => bloom_contains(a(0), a(1), intOf(a(2), "numHashes"))),
+    "graft_char_shingles" -> sql(a => char_shingle_set(a(0), intOf(a(1), "k"))),
+    "graft_word_shingles" -> sql(a => word_shingle_set(a(0), intOf(a(1), "k"))),
+    "graft_suffix_loop_period" -> sql(a => suffix_loop_period(a(0), intOf(a(1), "maxP"))),
+    "graft_long_dot" -> sql(a => long_dot(a(0), a(1))),
+    "graft_l2sq" -> sql(a => l2sq_long(a(0), a(1))),
+    "graft_maxsim" -> sql(a => maxsim_blocks(a(0), a(1), intOf(a(2), "blocks"))),
     // mergeable quantile sketch: graft_sketch_quantile(v, p [, k])
     "graft_sketch_quantile" -> (args =>
       graft.functions.QuantileSketch(args(0),

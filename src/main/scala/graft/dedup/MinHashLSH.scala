@@ -46,8 +46,9 @@ object MinHashLSH {
 
   /** doc id + minhash signature (array<long>, length numHashes).
     * Documents with fewer than shingleK tokens are dropped (no shingles).
-    * Computed by the codegen'd MinHashSignature expression — one fused
-    * pass per document (see graft.functions.GraftHash.minhashSig); the
+    * Computed by the `minhash_signature` kernel — one fused pass per
+    * document, a static call to graft.functions.GraftHash.minhashSig
+    * from generated code; the
     * HOF composition below (signaturesHof) is the executable spec it is
     * tested against. */
   def signatures(docs: DataFrame, idCol: String, textCol: String,

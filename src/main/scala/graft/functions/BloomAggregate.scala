@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   *
   * Buffer = one long[words] bitset per partition; update sets the key's
   * double-hashed bits (GraftHash.bloomSet — identical arithmetic to the
-  * BloomContains probe), merge ORs word-wise. OR is commutative and
+  * bloom_contains probe), merge ORs word-wise. OR is commutative and
   * associative, so the result is partitioning-independent: the same bits
   * on any cluster. The map-side partials mean the shuffle carries one
   * bitset per partition — O(partitions · m/8) bytes — never the keys.

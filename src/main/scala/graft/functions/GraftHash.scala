@@ -449,9 +449,12 @@ object GraftHash {
     * 1000), set bit p when the projection is positive. Each element is
     * quantized once and the components come from a table built once per
     * plane count, so a call costs dims·planes multiply-adds — it runs
-    * once per matched pair where a join defers it (q250).
+    * once per matched pair where a join defers it (q250). A NULL vector
+    * sets no bit: bucket 0, as in Knn.lshBucketHof and the oracle SQL
+    * (every projection is NULL, so none is positive).
     */
   def signLshBucket(v: ArrayData, planes: Int): Long = {
+    if (v == null) return 0L
     val n = v.numElements()
     val coef = lshPlanes(planes, n)
     val proj = new Array[Long](planes)

@@ -182,7 +182,7 @@ object EngineSurfacePlanQueries4 extends QueryGroup {
     * `bit_or`/`bit_and` over doc ids give the id-range envelope the
     * same way.
     *
-    * Scale shape: one scan, codegen'd PolyHash per row, one
+    * Scale shape: one scan, codegen'd poly_hash per row, one
     * map-side-combined fold to 20 rows. */
   private val q735 = QueryDef(
     "q735_xor_integrity_checksum",

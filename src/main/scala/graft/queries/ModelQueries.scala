@@ -23,7 +23,7 @@ object ModelQueries extends QueryGroup {
 
   private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
 
-  /** The shared polynomial-hash fold (graft.functions PolyHash) as DuckDB
+  /** The shared polynomial-hash fold (graft.functions poly_hash) as DuckDB
     * SQL over column `c` — base 31, mod 1e9+7, folded from 0. */
   private def duckPolyHashOf(c: String): String =
     s"list_reduce(list_prepend(0::BIGINT, [ord(ch)::BIGINT for ch in str_split($c, '')]), " +

@@ -153,7 +153,7 @@ object TopologyPlanQueries extends QueryGroup {
       val out = Seq(700L, 300L, 100L).map { rate =>
         val kept = edges.filter(
           Sampling.keyHash(expr("u * 1048576 + v"), 2246822519L) * 1000L
-            < lit(rate * 4294967296L)).persist()
+            < lit(rate * 4294967296L))
         val comp = graft.dedup.Dedup.connectedComponents(kept, "u", "v")
           .groupBy(col("component")).agg(count(lit(1)).as("sz"))
         comp.agg(sum(col("sz")).as("n_nodes"),

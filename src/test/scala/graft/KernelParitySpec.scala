@@ -360,9 +360,7 @@ class KernelParitySpec extends SparkSpec {
     assert(e2.getMessage != null)
     // build-time guard on a nonsensical block count
     assertThrows[IllegalArgumentException] {
-      graft.functions.expressions.MaxSimBlocks(
-        org.apache.spark.sql.catalyst.expressions.Literal(1L),
-        org.apache.spark.sql.catalyst.expressions.Literal(1L), 0)
+      maxsim_blocks(lit(1L), lit(1L), 0)
     }
   }
 
@@ -464,6 +462,76 @@ class KernelParitySpec extends SparkSpec {
         repeat_extensions(col("hs"), col("ps"), K, M).as("fast"))
       .filter(col("hof") =!= col("fast")).count()
     assert(mismatches === 0)
+  }
+
+  test("kernel constants outside the method's range fail at column construction and at " +
+    "SQL resolution") {
+    // each bound is the one the GraftHash method enforces per row
+    val cases = Seq[(String, () => org.apache.spark.sql.Column)](
+      "graft_char_shingles(text, 6)" -> (() => char_shingle_set(col("text"), 6)),
+      "graft_word_shingles(text, 8)" -> (() => word_shingle_set(col("text"), 8)),
+      "graft_minhash(text, 16, 8)" -> (() => minhash_signature(col("text"), 16, 8)))
+    GraftFunctions.register(spark)
+    docs.createOrReplaceTempView("bound_docs")
+    for ((call, build) <- cases) {
+      assertThrows[IllegalArgumentException](build())
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT $call FROM bound_docs").queryExecution.analyzed
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.isInstanceOf[IllegalArgumentException]), s"$call: got $causes")
+    }
+  }
+
+  test("every kernel evaluates the same interpreted as in generated code") {
+    // every 7th document and vector is NULL, and the short prefixes and
+    // zero vectors make the null-returning methods return null; all inputs
+    // come from parquet scans, so no kernel is constant-folded during planning
+    val text = when(col("doc_id") % 7 =!= 0, col("text"))
+    val vec = when(col("vec_id") % 7 =!= 0, col("embedding"))
+    val centroids = Array.tabulate(3, 64)((c, i) => ((c + 1) * (i % 5) - 2).toLong)
+    val lexicon = graft.text.TextAnalysis.Stopwords.flatMap(_._2)
+    def kernels(): Seq[Seq[org.apache.spark.sql.Row]] = Seq(
+      docs.select(col("doc_id"), text.as("t"), col("n_chars"),
+          token_xxhashes(text).as("hs"))
+        .select(col("doc_id"), poly_hash(col("t")), text_fingerprint(col("t")),
+          minhash_signature(col("t"), 16, 3), simhash64(col("t"), 30),
+          minhash_signature(substring(col("t"), 1, 6), 16, 3),
+          ngram_jaccard(col("t"), substring(col("t"), 1, 40), 3),
+          ngram_jaccard(substring(col("t"), 1, 2), substring(col("t"), 2, 1), 3),
+          ngram_containment(substring(col("t"), 1, 40), col("t"), 3),
+          sig_match_count(minhash_signature(col("t"), 16, 3),
+            minhash_signature(substring(col("t"), 1, 200), 16, 3)),
+          bloom_contains(lit(Array(0x5555555555555555L, -1L)), col("doc_id"), 3),
+          zorder_key(col("doc_id"), col("n_chars")), tokens_native(col("t")),
+          char_shingle_set(col("t"), 5), word_shingle_set(col("t"), 3),
+          token_count(col("t")), bigram_hashes(col("t")), distinct_token_count(col("t")),
+          stopword_hits(col("t"), lexicon), suffix_loop_period(col("t"), 3), col("hs"),
+          bigram_xxhashes(col("t")), gram_chain_digests(col("hs"), 2),
+          when(size(col("hs")) >= 2, repeat_extensions(col("hs"),
+            expr("transform(sequence(1, size(hs) - 1), i -> CAST(i AS BIGINT))"), 2, 4)))
+        .orderBy("doc_id"),
+      Tables.embeddings(spark, sfDir)
+        .select(col("vec_id"), vec.as("v"), reverse(vec).as("w"), quantize_vec(vec).as("q"))
+        .select(col("vec_id"), col("q"), quantized_cosine(col("v"), col("w")),
+          quantized_cosine(col("v"), transform(col("v"), _ * 0.0f)),
+          nearest_centroid(col("q"), centroids, Array(10L, 20L, 30L)),
+          sign_lsh_bucket(col("v"), 8), long_dot(col("q"), reverse(col("q"))),
+          l2sq_long(col("q"), reverse(col("q"))), maxsim_blocks(col("q"), reverse(col("q")), 4))
+        .orderBy("vec_id"))
+      .map(_.collect().toSeq)
+    val generated = kernels()
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val interpreted = try {
+      import org.apache.spark.sql.catalyst.expressions.{InterpretedUnsafeProjection, Literal, UnsafeProjection}
+      assert(UnsafeProjection.create(Seq(Literal(1))).isInstanceOf[InterpretedUnsafeProjection])
+      kernels()
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(generated.forall(_.nonEmpty))
+    assert(interpreted.map(_.length) === generated.map(_.length))
+    for ((g, i) <- generated.zip(interpreted); (a, b) <- g.zip(i)) assert(a === b)
   }
 
   test("BootstrapMoments skips null keys and values") {

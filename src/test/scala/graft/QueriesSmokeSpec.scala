@@ -439,8 +439,8 @@ class QueriesSmokeSpec extends SparkSpec {
       persistPays("q601_ktruss_support_census", 0.767, 0.868),
       sanction(Cached, "its construction-time localCheckpoint rounds (connected components, " +
         "k-core peeling, walk and BFS relaxation) all read the persisted edge list")(
-        "q172_dup_split_leakage", "q558_kcore_peeling", "q592_percolation_robustness",
-        "q600_katz_centrality", "q602_harmonic_closeness_landmarks", "q701_two_sweep_diameter"),
+        "q172_dup_split_leakage", "q558_kcore_peeling", "q600_katz_centrality",
+        "q602_harmonic_closeness_landmarks", "q701_two_sweep_diameter"),
       sanction(Cached, "the construction-time collect of the MMR grid reads the persisted " +
         "20-candidate frame")("q484_mmr_diversified_retrieval"),
       // ---- CrossJoin
