@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.Decimal
 
+import graft.functions.QuantileSketch.sketch_quantiles
 import graft.functions.expressions._
 
 /** graft's kernels (graft.functions.expressions) as SQL functions.
@@ -23,13 +25,21 @@ import graft.functions.expressions._
   */
 object GraftFunctions {
 
-  private def intOf(e: Expression, arg: String): Int = e match {
-    case Literal(v: Int, _)  => v
-    case Literal(v: Long, _) => v.toInt
+  private def intOf(c: Column, arg: String): Int = Bridge.expression(c) match {
+    case Literal(v: Int, _) => v
+    case Literal(v: Long, _) if v.isValidInt => v.toInt
+    case Literal(v: Long, _) => throw new IllegalArgumentException(
+      s"$arg must fit an int, got $v")
     case other => throw new IllegalArgumentException(
       s"$arg must be an integer literal, got $other")
   }
-  private def intOf(c: Column, arg: String): Int = intOf(Bridge.expression(c), arg)
+
+  private def doubleOf(c: Column): Double = Bridge.expression(c) match {
+    case Literal(v: Double, _) => v
+    case Literal(v: Decimal, _) => v.toDouble
+    case other => throw new IllegalArgumentException(
+      s"probability must be a numeric literal, got $other")
+  }
 
   /** A SQL function over the kernel's Column-level declaration. */
   private def sql(f: Seq[Column] => Column): Seq[Expression] => Expression =
@@ -60,17 +70,8 @@ object GraftFunctions {
     "graft_l2sq" -> sql(a => l2sq_long(a(0), a(1))),
     "graft_maxsim" -> sql(a => maxsim_blocks(a(0), a(1), intOf(a(2), "blocks"))),
     // mergeable quantile sketch: graft_sketch_quantile(v, p [, k])
-    "graft_sketch_quantile" -> (args =>
-      graft.functions.QuantileSketch(args(0),
-        Seq(args(1) match {
-          case Literal(v: Double, _) => v
-          case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-          case Literal(v: java.math.BigDecimal, _) => v.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"probability must be a numeric literal, got $other")
-        }),
-        if (args.length > 2) intOf(args(2), "k") else 256)
-        .toAggregateExpression()))
+    "graft_sketch_quantile" -> sql(a => sketch_quantiles(a(0), Seq(doubleOf(a(1))),
+      if (a.length > 2) intOf(a(2), "k") else 256)))
 
   /** Register all graft functions on a live session. */
   def register(spark: SparkSession): Unit =

@@ -1,18 +1,9 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
-/** Build a bloom-filter bitset over a long key column as a native
-  * aggregate — the BUILD side of graft's runtime-filter pattern
-  * (graft.operators.BloomJoin).
+/** A bloom-filter bitset over a long key column — the BUILD side of
+  * graft's runtime-filter pattern (graft.operators.BloomJoin).
   *
   * Buffer = one long[words] bitset per partition; update sets the key's
   * double-hashed bits (GraftHash.bloomSet — identical arithmetic to the
@@ -25,63 +16,23 @@ import org.apache.spark.sql.types._
   * collectable to the driver as model-scale metadata and re-broadcast to
   * the probe side as a literal.
   */
-case class BloomBits(
-    child: Expression,
-    numBits: Int,
-    numHashes: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+case class BloomBits(numBits: Int, numHashes: Int) extends LongVectorDeclaration {
 
   require(numBits > 0, "numBits must be positive")
   require(numHashes > 0, "numHashes must be positive")
 
-  private val words = (numBits + 63) / 64
+  protected def length: Int = (numBits + 63) / 64
+  def name: String = "bloom_bits"
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](words)
+  def update(buf: Array[Long], in: Any): Unit =
+    GraftHash.bloomSet(buf, in.asInstanceOf[Long], numHashes)
 
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) GraftHash.bloomSet(buf, v.asInstanceOf[Long], numHashes)
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < words) { buf(i) |= other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(words * 8)
-    bb.asLongBuffer().put(buf)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](words)
-    ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomBits =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(offset: Int): BloomBits =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): BloomBits =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "bloom_bits"
+  override def merge(buf: Array[Long], other: Array[Long]): Unit =
+    buf.indices.foreach(i => buf(i) |= other(i))
 }
 
 object BloomAggregate {
   /** Column API: the bloom bitset (array<long>) of a long key column. */
   def bloom_bits(key: Column, numBits: Int, numHashes: Int): Column =
-    Bridge.column(
-      BloomBits(Bridge.expression(key.cast("long")), numBits, numHashes)
-        .toAggregateExpression())
+    BloomBits(numBits, numHashes).of(key.cast("long"))
 }

@@ -1,22 +1,18 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Space-Saving heavy hitters (Metwally et al. 2005) as a native
-  * aggregate: the frequent-items question ("which domains / templates /
-  * users dominate this corpus?") answered in ONE pass with a bounded
-  * `capacity`-entry buffer per partition — no groupBy of the full key
-  * space, no second scan.
+/** Space-Saving heavy hitters (Metwally et al. 2005): the frequent-items
+  * question ("which domains / templates / users dominate this corpus?")
+  * answered in ONE pass with a bounded `capacity`-entry buffer per
+  * partition — no groupBy of the full key space, no second scan.
   *
   * Guarantees (any merge order): every item with true frequency
   * > n/capacity is present in the summary, and every reported count
@@ -35,100 +31,75 @@ import org.apache.spark.sql.types._
   * Output: array<struct<item,cnt,err>> sorted (cnt desc, item asc),
   * truncated to `k`.
   */
-case class SpaceSavingTopK(
-    child: Expression,
-    k: Int,
-    capacity: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[Long, (Long, Long)]] {
+case class SpaceSavingTopK(k: Int, capacity: Int)
+    extends AggregateDeclaration[mutable.HashMap[Long, (Long, Long)]] {
 
   require(k > 0 && capacity >= k, "need capacity >= k > 0")
 
-  override def createAggregationBuffer(): mutable.HashMap[Long, (Long, Long)] =
-    mutable.HashMap.empty
+  def name: String = "space_saving_topk"
+  def dataType: DataType = ArrayType(
+    StructType(Seq(StructField("item", LongType), StructField("cnt", LongType),
+      StructField("err", LongType))),
+    containsNull = false)
 
-  override def update(m: mutable.HashMap[Long, (Long, Long)],
-                      input: InternalRow): mutable.HashMap[Long, (Long, Long)] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val item = v.asInstanceOf[Long]
-      m.get(item) match {
-        case Some((c, e)) => m.update(item, (c + 1, e))
-        case None if m.size < capacity => m.update(item, (1L, 0L))
-        case None =>
-          // evict the (count, item)-min entry; its count seeds the error
-          val (minItem, (minC, _)) = m.minBy { case (i, (c, _)) => (c, i) }
-          m.remove(minItem)
-          m.update(item, (minC + 1, minC))
-      }
+  def zero(): mutable.HashMap[Long, (Long, Long)] = mutable.HashMap.empty
+
+  def update(m: mutable.HashMap[Long, (Long, Long)], in: Any): Unit = {
+    val item = in.asInstanceOf[Long]
+    m.get(item) match {
+      case Some((c, e)) => m.update(item, (c + 1, e))
+      case None if m.size < capacity => m.update(item, (1L, 0L))
+      case None =>
+        // evict the (count, item)-min entry; its count seeds the error
+        val (minItem, (minC, _)) = m.minBy { case (i, (c, _)) => (c, i) }
+        m.remove(minItem)
+        m.update(item, (minC + 1, minC))
     }
-    m
   }
 
-  override def merge(m: mutable.HashMap[Long, (Long, Long)],
-                     other: mutable.HashMap[Long, (Long, Long)]):
-      mutable.HashMap[Long, (Long, Long)] = {
-    other.foreach { case (item, (c, e)) =>
-      m.get(item) match {
-        case Some((c0, e0)) => m.update(item, (c0 + c, e0 + e))
-        case None           => m.update(item, (c, e))
-      }
+  /** The count a summary can have held for an item it lacks: none when it
+    * never filled, else up to its minimum (it may have evicted the item). */
+  private def floor(m: mutable.HashMap[Long, (Long, Long)]): Long =
+    if (m.size < capacity) 0L else m.valuesIterator.map(_._1).min
+
+  /** The mergeable-summaries rule (Agarwal et al., PODS 2012): an item
+    * one side lacks is credited that side's floor, in both its count and
+    * its error, so true ∈ [cnt − err, cnt] survives the merge. */
+  def merge(m: mutable.HashMap[Long, (Long, Long)],
+            other: mutable.HashMap[Long, (Long, Long)]): Unit = {
+    val (mFloor, otherFloor) = (floor(m), floor(other))
+    m.mapValuesInPlace { case (i, (c, e)) =>
+      if (other.contains(i)) (c, e) else (c + otherFloor, e + otherFloor)
+    }
+    other.foreach { case (i, (c, e)) =>
+      val (c0, e0) = m.getOrElse(i, (mFloor, mFloor))
+      m.update(i, (c0 + c, e0 + e))
     }
     if (m.size > capacity) {
       // keep the top `capacity` by (count desc, item asc)
       val keep = m.toSeq.sortBy { case (i, (c, _)) => (-c, i) }.take(capacity)
       m.clear()
-      keep.foreach { case (i, ce) => m.update(i, ce) }
+      m ++= keep
     }
-    m
   }
 
-  override def eval(m: mutable.HashMap[Long, (Long, Long)]): Any = {
+  def eval(m: mutable.HashMap[Long, (Long, Long)]): Any = {
     val top = m.toSeq.sortBy { case (i, (c, _)) => (-c, i) }.take(k)
-    new GenericArrayData(top.map { case (i, (c, e)) =>
-      InternalRow(i, c, e)
-    }.toArray[Any])
+    new GenericArrayData(top.map[Any] { case (i, (c, e)) => InternalRow(i, c, e) })
   }
 
-  override def serialize(m: mutable.HashMap[Long, (Long, Long)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def write(m: mutable.HashMap[Long, (Long, Long)], out: DataOutputStream): Unit = {
     out.writeInt(m.size)
     m.foreach { case (i, (c, e)) => out.writeLong(i); out.writeLong(c); out.writeLong(e) }
-    out.flush()
-    bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[Long, (Long, Long)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val m = createAggregationBuffer()
-    var i = 0
-    while (i < n) { m.update(in.readLong(), (in.readLong(), in.readLong())); i += 1 }
-    m
-  }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("item", LongType), StructField("cnt", LongType),
-      StructField("err", LongType))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SpaceSavingTopK =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(offset: Int): SpaceSavingTopK =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): SpaceSavingTopK =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "space_saving_topk"
+  def read(in: DataInputStream): mutable.HashMap[Long, (Long, Long)] =
+    mutable.HashMap.from(Iterator.fill(in.readInt())((in.readLong(), (in.readLong(), in.readLong()))))
 }
 
 object HeavyHitters {
   /** Column API: top-k frequent items of a long column with a
     * `capacity`-bounded Space-Saving summary. */
   def heavy_hitters(item: Column, k: Int, capacity: Int): Column =
-    Bridge.column(
-      SpaceSavingTopK(Bridge.expression(item.cast("long")), k, capacity)
-        .toAggregateExpression())
+    SpaceSavingTopK(k, capacity).of(item.cast("long"))
 }

@@ -1,19 +1,16 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
+import java.lang.{Long => JLong}
+import java.util.TreeSet
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** KMV (k-minimum-values, "bottom-k") distinct sketch as a native
-  * Catalyst aggregate — the mergeable distinct-count summary of
-  * Bar-Yossef et al. (2002), the sketch behind theta-sketch set
-  * algebra.
+/** KMV (k-minimum-values, "bottom-k") distinct sketch — the mergeable
+  * distinct-count summary of Bar-Yossef et al. (2002), the sketch behind
+  * theta-sketch set algebra.
   *
   * The buffer is the set of the k SMALLEST distinct hash values seen.
   * Map-side partial aggregation reduces every partition to ≤k longs per
@@ -34,83 +31,43 @@ import org.apache.spark.sql.types._
   * `Sampling.keyHash(poly_hash(text))`). Output: array<long>, the
   * sorted bottom-k distinct hashes.
   */
-case class KmvBottomK(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
+case class KmvBottomK(k: Int) extends AggregateDeclaration[TreeSet[JLong]] {
 
   require(k > 0, "k must be positive")
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
+  def name: String = "kmv_bottom_k"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private def offer(s: java.util.TreeSet[java.lang.Long], v: Long): Unit = {
-    if (s.size < k) { s.add(v); () }
-    else if (v < s.last()) {
-      if (s.add(v)) { s.remove(s.last()); () }
-    }
-  }
+  def zero(): TreeSet[JLong] = new TreeSet()
 
-  override def update(s: java.util.TreeSet[java.lang.Long], input: InternalRow):
-      java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) offer(s, v.asInstanceOf[Long])
-    s
-  }
+  private def offer(s: TreeSet[JLong], v: Long): Unit =
+    if (s.size < k) s.add(v)
+    else if (v < s.last() && s.add(v)) s.remove(s.last())
 
-  override def merge(s: java.util.TreeSet[java.lang.Long],
-                     other: java.util.TreeSet[java.lang.Long]):
-      java.util.TreeSet[java.lang.Long] = {
-    val it = other.iterator()
-    while (it.hasNext) offer(s, it.next())
-    s
-  }
+  def update(s: TreeSet[JLong], in: Any): Unit = offer(s, in.asInstanceOf[Long])
 
-  override def eval(s: java.util.TreeSet[java.lang.Long]): Any = {
-    val arr = new Array[Long](s.size)
-    val it = s.iterator()
-    var i = 0
-    while (it.hasNext) { arr(i) = it.next(); i += 1 }
-    new GenericArrayData(arr)
-  }
+  def merge(s: TreeSet[JLong], other: TreeSet[JLong]): Unit =
+    other.forEach(v => offer(s, v))
 
-  override def serialize(s: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def eval(s: TreeSet[JLong]): Any =
+    new GenericArrayData(s.stream().mapToLong(_.longValue).toArray)
+
+  def write(s: TreeSet[JLong], out: DataOutputStream): Unit = {
     out.writeInt(s.size)
-    val it = s.iterator()
-    while (it.hasNext) out.writeLong(it.next())
-    out.flush()
-    bos.toByteArray
+    s.forEach(v => out.writeLong(v))
   }
 
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val s = createAggregationBuffer()
-    var i = 0
-    while (i < n) { s.add(in.readLong()); i += 1 }
+  def read(in: DataInputStream): TreeSet[JLong] = {
+    val s = zero()
+    Iterator.fill(in.readInt())(in.readLong()).foreach(v => s.add(v))
     s
   }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KmvBottomK =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(offset: Int): KmvBottomK =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): KmvBottomK =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "kmv_bottom_k"
 }
 
 object KmvSketch {
   /** Column API: sorted bottom-k distinct hash values per group. */
   def kmv_bottom_k(hash: Column, k: Int): Column =
-    Bridge.column(KmvBottomK(Bridge.expression(hash), k).toAggregateExpression())
+    KmvBottomK(k).of(hash)
 
   /** Distinct-count estimate from a bottom-k array column (by name)
     * over hashes uniform on [0, 2³²): exact size when the sketch isn't

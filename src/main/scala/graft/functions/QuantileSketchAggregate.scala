@@ -1,25 +1,20 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Mergeable quantile sketch (KLL/MRL-style) as a native Catalyst
-  * aggregate — the 100 TB alternative to exact percentiles when the
-  * value histogram is NOT value-range-bounded: exact percentile needs
-  * all distinct values in one place; this sketch keeps ≤ k values per
-  * weight level, so the shuffle carries O(k·log(n/k)) longs per group
-  * no matter how many rows flow in, and partial buffers merge
-  * associatively map-side (the same property that makes it work as a
-  * streaming state).
+/** Mergeable quantile sketch (KLL/MRL-style) — the 100 TB alternative
+  * to exact percentiles when the value histogram is NOT
+  * value-range-bounded: exact percentile needs all distinct values in one
+  * place; this sketch keeps ≤ k values per weight level, so the shuffle
+  * carries O(k·log(n/k)) longs per group no matter how many rows flow
+  * in, and partial buffers merge associatively map-side (the same
+  * property that makes it work as a streaming state).
   *
   * Level i holds values of weight 2^i. A level that exceeds k compacts:
   * sort, keep every second element (alternating start parity per
@@ -34,13 +29,8 @@ import org.apache.spark.sql.types._
   * Input: long (quantize doubles first — Deterministic.cents etc.);
   * output: array<long>, one estimate per requested quantile.
   */
-case class QuantileSketch(
-    child: Expression,
-    probabilities: Seq[Double],
-    k: Int = 256,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuantileSketch.Buf] {
+case class QuantileSketch(probabilities: Seq[Double], k: Int = 256)
+    extends AggregateDeclaration[QuantileSketch.Buf] {
 
   require(k >= 8, "sketch capacity k must be at least 8")
   require(probabilities.nonEmpty && probabilities.forall(p => p >= 0 && p <= 1),
@@ -48,33 +38,14 @@ case class QuantileSketch(
 
   import QuantileSketch.Buf
 
-  override def createAggregationBuffer(): Buf = new Buf(k)
-
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: Buf, other: Buf): Buf = { buf.mergeIn(other); buf }
-
-  override def eval(buf: Buf): Any =
-    new GenericArrayData(probabilities.map(buf.quantile).toArray) // Array[Long] overload
-
-  override def serialize(buf: Buf): Array[Byte] = buf.toBytes
-
-  override def deserialize(bytes: Array[Byte]): Buf = Buf.fromBytes(bytes, k)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): QuantileSketch =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(offset: Int): QuantileSketch =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): QuantileSketch =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "quantile_sketch"
+  def name: String = "quantile_sketch"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def zero(): Buf = new Buf(k)
+  def update(buf: Buf, in: Any): Unit = buf.add(in.asInstanceOf[Long])
+  def merge(buf: Buf, other: Buf): Unit = buf.mergeIn(other)
+  def eval(buf: Buf): Any = new GenericArrayData(probabilities.map(buf.quantile).toArray)
+  def write(buf: Buf, out: DataOutputStream): Unit = buf.write(out)
+  def read(in: DataInputStream): Buf = Buf.read(in, k)
 }
 
 object QuantileSketch {
@@ -147,9 +118,7 @@ object QuantileSketch {
       sorted.last._1
     }
 
-    def toBytes: Array[Byte] = {
-      val bos = new ByteArrayOutputStream()
-      val out = new DataOutputStream(bos)
+    def write(out: DataOutputStream): Unit = {
       out.writeInt(parity)
       out.writeLong(count)
       out.writeInt(levels.length)
@@ -157,28 +126,16 @@ object QuantileSketch {
         out.writeInt(lvl.length)
         lvl.foreach(out.writeLong)
       }
-      out.flush()
-      bos.toByteArray
     }
   }
 
   object Buf {
-    def fromBytes(bytes: Array[Byte], k: Int): Buf = {
-      val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    def read(in: DataInputStream, k: Int): Buf = {
       val b = new Buf(k)
       b.parity = in.readInt()
       b.count = in.readLong()
-      val nLevels = in.readInt()
       b.levels.clear()
-      var i = 0
-      while (i < nLevels) {
-        val n = in.readInt()
-        val lvl = new ArrayBuffer[Long](n)
-        var j = 0
-        while (j < n) { lvl += in.readLong(); j += 1 }
-        b.levels += lvl
-        i += 1
-      }
+      b.levels ++= Iterator.fill(in.readInt())(ArrayBuffer.fill(in.readInt())(in.readLong()))
       b
     }
   }
@@ -186,6 +143,5 @@ object QuantileSketch {
   /** Column API: approximate quantiles of a long column at `probs`,
     * with ≤ k stored values per weight level. */
   def sketch_quantiles(value: Column, probs: Seq[Double], k: Int = 256): Column =
-    Bridge.column(
-      QuantileSketch(Bridge.expression(value), probs, k).toAggregateExpression())
+    QuantileSketch(probs, k).of(value)
 }

@@ -1,17 +1,14 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
+import java.util.PriorityQueue
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Exact per-group top-k as a native Catalyst aggregate (a
-  * TypedImperativeAggregate with a bounded-heap buffer).
+/** Exact per-group top-k with a bounded-heap buffer.
   *
   * The built-in way to get "top 3 per group" is a window rank + filter,
   * which sorts EVERY row of every group. This aggregate keeps a k-element
@@ -23,12 +20,7 @@ import org.apache.spark.sql.types._
   * Input: struct(score double, id long); output: array<struct<score,id>>
   * sorted (score desc, id asc) — ties broken by id for full determinism.
   */
-case class TopKPairs(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.PriorityQueue[(Double, Long)]] {
+case class TopKPairs(k: Int) extends AggregateDeclaration[PriorityQueue[(Double, Long)]] {
 
   require(k > 0, "k must be positive")
 
@@ -40,78 +32,46 @@ case class TopKPairs(
       if (c != 0) c else java.lang.Long.compare(b._2, a._2)
     }
 
-  override def createAggregationBuffer(): java.util.PriorityQueue[(Double, Long)] =
-    new java.util.PriorityQueue[(Double, Long)](k + 1, ord)
+  def name: String = "topk_pairs"
+  def dataType: DataType = ArrayType(
+    StructType(Seq(StructField("score", DoubleType), StructField("id", LongType))),
+    containsNull = false)
 
-  private def offer(h: java.util.PriorityQueue[(Double, Long)], e: (Double, Long)): Unit = {
+  def zero(): PriorityQueue[(Double, Long)] = new PriorityQueue(k + 1, ord)
+
+  private def offer(h: PriorityQueue[(Double, Long)], e: (Double, Long)): Unit =
     if (h.size < k) h.offer(e)
     else if (ord.compare(e, h.peek()) > 0) { h.poll(); h.offer(e) }
+
+  def update(h: PriorityQueue[(Double, Long)], in: Any): Unit = {
+    val row = in.asInstanceOf[InternalRow]
+    if (!row.isNullAt(0) && !row.isNullAt(1)) offer(h, (row.getDouble(0), row.getLong(1)))
   }
 
-  override def update(h: java.util.PriorityQueue[(Double, Long)], input: InternalRow):
-      java.util.PriorityQueue[(Double, Long)] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val row = v.asInstanceOf[InternalRow]
-      if (!row.isNullAt(0) && !row.isNullAt(1)) offer(h, (row.getDouble(0), row.getLong(1)))
-    }
-    h
-  }
+  def merge(h: PriorityQueue[(Double, Long)], other: PriorityQueue[(Double, Long)]): Unit =
+    other.forEach(offer(h, _))
 
-  override def merge(h: java.util.PriorityQueue[(Double, Long)],
-                     other: java.util.PriorityQueue[(Double, Long)]):
-      java.util.PriorityQueue[(Double, Long)] = {
-    val it = other.iterator()
-    while (it.hasNext) offer(h, it.next())
-    h
-  }
-
-  override def eval(h: java.util.PriorityQueue[(Double, Long)]): Any = {
+  def eval(h: PriorityQueue[(Double, Long)]): Any = {
     val arr = h.toArray(new Array[(Double, Long)](h.size))
     // final order: score desc, id asc
     java.util.Arrays.sort(arr, ord.reversed())
-    new GenericArrayData(arr.map { case (s, i) =>
-      InternalRow(s, i)
-    }.asInstanceOf[Array[Any]])
+    new GenericArrayData(arr.map[Any] { case (s, i) => InternalRow(s, i) })
   }
 
-  override def serialize(h: java.util.PriorityQueue[(Double, Long)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def write(h: PriorityQueue[(Double, Long)], out: DataOutputStream): Unit = {
     out.writeInt(h.size)
-    val it = h.iterator()
-    while (it.hasNext) { val (s, i) = it.next(); out.writeDouble(s); out.writeLong(i) }
-    out.flush()
-    bos.toByteArray
+    h.forEach { e => out.writeDouble(e._1); out.writeLong(e._2) }
   }
 
-  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[(Double, Long)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val h = createAggregationBuffer()
-    var i = 0
-    while (i < n) { h.offer((in.readDouble(), in.readLong())); i += 1 }
+  def read(in: DataInputStream): PriorityQueue[(Double, Long)] = {
+    val h = zero()
+    Iterator.fill(in.readInt())((in.readDouble(), in.readLong())).foreach(h.offer)
     h
   }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("score", DoubleType), StructField("id", LongType))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TopKPairs =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(offset: Int): TopKPairs =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): TopKPairs =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "topk_pairs"
 }
 
 object TopKAggregate {
   /** Column API: top-k (score, id) pairs per group, score desc / id asc. */
-  def topk_pairs(score: Column, id: Column, k: Int): Column = {
-    val struct = org.apache.spark.sql.functions.struct(score.as("score"), id.as("id"))
-    Bridge.column(TopKPairs(Bridge.expression(struct), k).toAggregateExpression())
-  }
+  def topk_pairs(score: Column, id: Column, k: Int): Column =
+    TopKPairs(k).of(org.apache.spark.sql.functions.struct(score.as("score"), id.as("id")))
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed Dataset-API aggregators (org.apache.spark.sql.expressions
   * .Aggregator) — the strongly-typed UDAF surface next to the Catalyst
-  * TypedImperativeAggregates (TopKPairs, VectorSum).
+  * aggregates declared over [[GraftAggregate]] (`topk_pairs`,
+  * `vector_sum`, ...).
   *
   * WelfordVariance is the numerically-stable single-pass population
   * variance: partials merge with the standard parallel-variance

@@ -1,16 +1,9 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.util.ArrayData
 
-/** Element-wise sum of array<long> vectors as ONE native aggregate.
+/** Element-wise sum of array<long> vectors as ONE aggregate.
   *
   * The alternative — `dim` separate `sum(v[i])` aggregate expressions —
   * evaluates `dim` array extractions per row and carries `dim` separate
@@ -23,67 +16,23 @@ import org.apache.spark.sql.types._
   * declared `dim` (enforced — a silent length mismatch would corrupt the
   * centroid).
   */
-case class VectorSum(
-    child: Expression,
-    dim: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+case class VectorSum(dim: Int) extends LongVectorDeclaration {
 
   require(dim > 0, "dim must be positive")
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](dim)
+  protected def length: Int = dim
+  def name: String = "vector_sum"
 
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      require(arr.numElements() == dim,
-        s"vector_sum(dim=$dim) got a vector of length ${arr.numElements()}")
-      var i = 0
-      while (i < dim) { buf(i) += arr.getLong(i); i += 1 }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def update(buf: Array[Long], in: Any): Unit = {
+    val arr = in.asInstanceOf[ArrayData]
+    require(arr.numElements() == dim,
+      s"vector_sum(dim=$dim) got a vector of length ${arr.numElements()}")
     var i = 0
-    while (i < dim) { a(i) += b(i); i += 1 }
-    a
+    while (i < dim) { buf(i) += arr.getLong(i); i += 1 }
   }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(dim * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < dim) { out.writeLong(buf(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](dim)
-    var i = 0
-    while (i < dim) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): VectorSum =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(offset: Int): VectorSum =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): VectorSum =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "vector_sum"
 }
 
-/** Poisson-bootstrap sufficient statistics as ONE native aggregate:
+/** Poisson-bootstrap sufficient statistics as ONE aggregate:
   * for B replicates, Σw_b and Σw_b·v per group, where w_b is the
   * Poisson(1) inverse-CDF of hash stream b. Stream b shifts the masked
   * key by b·1103515245 mod 2^31 BEFORE the Knuth multiply — varying
@@ -98,17 +47,10 @@ case class VectorSum(
   * through interpreted higher-order-function lambdas (measured ~4× the
   * whole-query cost at B=200); here the weights live only inside the
   * fused update loop and the buffer is one long[2B] — B Σw then B Σwv —
-  * combined map-side. Per-row hash cost is unavoidable; per-row
-  * allocation is zero.
+  * combined map-side. Per-row hash cost is unavoidable; the only per-row
+  * allocation is the (key, value) pair the update receives.
   */
-case class BootstrapMoments(
-    key: Expression,
-    value: Expression,
-    b: Int,
-    bernoulli: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+case class BootstrapMoments(b: Int, bernoulli: Boolean = false) extends LongVectorDeclaration {
 
   require(b > 0, "replicate count must be positive")
 
@@ -118,92 +60,48 @@ case class BootstrapMoments(
   private val T = Array(1580030168L, 3160060337L, 3950075421L,
     4213413783L, 4279248373L, 4292415291L)
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](2 * b)
+  protected def length: Int = 2 * b
+  def name: String = "bootstrap_moments"
 
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val k = key.eval(input)
-    val v = value.eval(input)
-    if (k != null && v != null) {
-      val kl = k.asInstanceOf[Long]
-      val vl = v.asInstanceOf[Long]
-      val masked = { val m = kl % 2147483648L; if (m < 0) m + 2147483648L else m }
-      var i = 0
-      while (i < b) {
-        // shifted key < 2^31 and multiplier < 2^32 → product < 2^63
-        val keyB = (masked + 1103515245L * (i + 1)) % 2147483648L
-        val h = (keyB * 2654435761L) % 4294967296L
-        // bernoulli: a fair coin per stream (randomization tests);
-        // otherwise the Poisson(1) inverse CDF (bootstrap resampling)
-        val w =
-          if (bernoulli) { if (h < 2147483648L) 1L else 0L }
-          else {
-            var k = 0L
-            while (k < 6 && h >= T(k.toInt)) k += 1
-            k
-          }
-        buf(i) += w
-        buf(b + i) += w * vl
-        i += 1
-      }
+  /** `in` is (key, value). */
+  def update(buf: Array[Long], in: Any): Unit = {
+    val Array(key: Long, value: Long) = in.asInstanceOf[Array[Any]]
+    val masked = { val m = key % 2147483648L; if (m < 0) m + 2147483648L else m }
+    var i = 0
+    while (i < b) {
+      // shifted key < 2^31 and multiplier < 2^32 → product < 2^63
+      val keyB = (masked + 1103515245L * (i + 1)) % 2147483648L
+      val h = (keyB * 2654435761L) % 4294967296L
+      // bernoulli: a fair coin per stream (randomization tests);
+      // otherwise the Poisson(1) inverse CDF (bootstrap resampling)
+      val w =
+        if (bernoulli) { if (h < 2147483648L) 1L else 0L }
+        else {
+          var k = 0L
+          while (k < 6 && h >= T(k.toInt)) k += 1
+          k
+        }
+      buf(i) += w
+      buf(b + i) += w * value
+      i += 1
     }
-    buf
   }
-
-  override def merge(a: Array[Long], o: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < 2 * b) { a(i) += o(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(2 * b * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < 2 * b) { out.writeLong(buf(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](2 * b)
-    var i = 0
-    while (i < 2 * b) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(key, value)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BootstrapMoments =
-    copy(key = c(0), value = c(1))
-  override def withNewMutableAggBufferOffset(offset: Int): BootstrapMoments =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): BootstrapMoments =
-    copy(inputAggBufferOffset = offset)
-  override def prettyName: String = "bootstrap_moments"
 }
 
 object VectorAggregates {
   /** Column API: element-wise sum of an array<long> column of fixed
     * length `dim`, as array<long>. */
   def vector_sum(v: Column, dim: Int): Column =
-    Bridge.column(VectorSum(Bridge.expression(v), dim).toAggregateExpression())
+    VectorSum(dim).of(v)
 
   /** Column API: Poisson-bootstrap Σw / Σwv over B replicates, as one
     * array<long> of length 2B (first B = Σw, last B = Σw·v). */
   def bootstrap_moments(key: Column, value: Column, b: Int): Column =
-    Bridge.column(
-      BootstrapMoments(Bridge.expression(key), Bridge.expression(value), b)
-        .toAggregateExpression())
+    BootstrapMoments(b).of(key, value)
 
   /** Column API: B fair-coin reassignments (w ∈ {0,1}) of the keyed
     * units — Σw / Σwv per replicate, the sufficient statistics of a
     * randomization test. Same layout as bootstrap_moments. */
   def randomization_moments(key: Column, value: Column, b: Int): Column =
-    Bridge.column(
-      BootstrapMoments(Bridge.expression(key), Bridge.expression(value), b,
-        bernoulli = true).toAggregateExpression())
+    BootstrapMoments(b, bernoulli = true).of(key, value)
 }

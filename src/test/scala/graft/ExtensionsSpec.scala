@@ -92,6 +92,18 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("a BIGINT literal outside the int range fails, not narrowed to its low 32 bits") {
+    GraftFunctions.register(spark)
+    // 4294967312 = 2^32 + 16: narrowed with toInt it ran as numHashes = 16
+    val e = intercept[Exception] {
+      spark.sql("SELECT graft_minhash('a b c d', 4294967312, 3)").queryExecution.analyzed
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("numHashes must fit an int")), messages(e))
+    assert(spark.sql("SELECT size(graft_minhash('a b c d', 16L, 3))").head().getInt(0) === 16)
+  }
+
   test("a session built with GraftExtensions has the functions pre-registered") {
     spark.sparkContext // ensure shared context exists
     SparkSession.clearActiveSession()

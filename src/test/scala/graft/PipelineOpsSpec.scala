@@ -151,6 +151,22 @@ class PipelineOpsSpec extends SparkSpec {
     assert(sketch === exact)
   }
 
+  test("space-saving heavy hitters: merging a full partial credits what it may have evicted") {
+    import spark.implicits._
+    import graft.functions.HeavyHitters.heavy_hitters
+    // partition 1 = [1, 2, 3, 3] evicts item 1 at capacity 2; partition 2
+    // = [1, 1, 1, 1]. Item 1 occurs 5 times, item 3 twice.
+    val df = spark.sparkContext.parallelize(Seq(1L, 2L, 3L, 3L, 1L, 1L, 1L, 1L), 2).toDF("item")
+    val res = df.agg(heavy_hitters(col("item"), k = 2, capacity = 2).as("hh"))
+      .select(explode(col("hh")).as("h"))
+      .select("h.item", "h.cnt", "h.err").as[(Long, Long, Long)].collect()
+    val truth = Map(1L -> 5L, 2L -> 1L, 3L -> 2L)
+    assert(res.map(_._1).toSeq === Seq(1L, 3L))
+    for ((item, cnt, err) <- res)
+      assert(cnt - err <= truth(item) && truth(item) <= cnt,
+        s"item $item: reported $cnt (err $err) vs true ${truth(item)}")
+  }
+
   test("train/test split routes null keys to train (train ∪ test = df)") {
     import spark.implicits._
     val df = spark.range(100).select(

@@ -35,7 +35,8 @@ class QueriesSmokeSpec extends SparkSpec {
     "whose onUpdatePlan explain render grows combinatorially; iterative " +
     "round frames must use localCheckpoint(true) instead)") {
     import scala.jdk.CollectionConverters._
-    val loopOpen = """\b(for|while)\s*\(""".r
+    // a loop: for/while, or a block passed to map/foreach/flatMap/foldLeft
+    val loopOpen = """\b(for|while)\s*\(|\.(map|foreach|flatMap|foldLeft)\b""".r
     val offenders = scala.collection.mutable.ListBuffer[String]()
     val root = java.nio.file.Paths.get("src/main/scala")
     java.nio.file.Files.walk(root).iterator().asScala
@@ -56,6 +57,31 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"persist() inside an iteration loop — use localCheckpoint(true) " +
         s"(the q691/q701 discipline): ${offenders.mkString(", ")}")
+  }
+
+  test("source lint: GraftAggregate is the one TypedImperativeAggregate and " +
+    "GraftKernel the one RuntimeReplaceable (aggregates and kernels are declared, " +
+    "not hand-written Catalyst expressions)") {
+    import scala.jdk.CollectionConverters._
+    val allowed = Map(
+      "TypedImperativeAggregate" -> "GraftAggregate", "RuntimeReplaceable" -> "GraftKernel")
+    val extension = """\b(?:extends|with)\s+(TypedImperativeAggregate|RuntimeReplaceable)\b""".r
+    val definition = """\b(?:class|object|trait)\s+(\w+)""".r
+    val found = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        extension.findAllMatchIn(text).map { m =>
+          val owner = definition.findAllMatchIn(text.take(m.start)).toSeq.lastOption
+            .fold("?")(_.group(1))
+          (m.group(1), owner, s"$p: $owner")
+        }
+      }
+    val offenders = found.filterNot { case (base, owner, _) => allowed(base) == owner }
+    assert(offenders.isEmpty, "declare aggregates as AggregateDeclarations and kernels " +
+      s"with expressions.kernel: ${offenders.map(_._3).mkString(", ")}")
+    assert(found.map(f => f._1 -> f._2).sorted == allowed.toSeq.sorted,
+      s"expected exactly ${allowed.values.mkString(" and ")}, found ${found.map(_._3)}")
   }
 
   test("every query has oracle SQL or is explicitly rows-only") {
