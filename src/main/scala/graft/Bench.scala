@@ -165,7 +165,7 @@ object Bench {
       val sp1 = safepointMs
       val spMs = if (sp0 >= 0 && sp1 >= 0) sp1 - sp0 else -1L
       System.err.println(
-        f"[bench:$tag] $name%-32s $dt%8.2f s  heap=${heapMb}%5d MB " +
+        f"[bench:$tag] $name%-32s $dt%8.3f s  heap=${heapMb}%5d MB " +
           f"store=${storageMb}%5d MB gc=${gc1 - gc0}%4d ms/${gcN1 - gcN0}%2d " +
           f"sp=${spMs}%4d ms jobs=${tracker.jobs.get() - jobs0}%3d " +
           f"stages=${tracker.stages.get() - stages0}%3d task=${tracker.taskMs.get() - taskMs0}%5d ms")

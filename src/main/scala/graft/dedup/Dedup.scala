@@ -44,21 +44,7 @@ object Dedup {
                         n: Int = 3, prefixLen: Int = 24,
                         minJaccard: Double = 0.0,
                         maxBlockSize: Option[Int] = None): DataFrame = {
-    val prepared = docs.select(
-      col(idCol).as("doc"),
-      substring(col(textCol), 1, prefixLen).as("block"),
-      col(textCol).as("t"))
-    val capped = maxBlockSize match {
-      case Some(cap) =>
-        val hot = prepared.groupBy("block").count().filter(col("count") > cap)
-          .select(col("block"))
-        prepared.join(hot, Seq("block"), "left_anti")
-      case None => prepared
-    }
-    val a = capped.select(col("block"), col("doc").as("doc_a"), col("t").as("t_a"))
-    val b = capped.select(col("block"), col("doc").as("doc_b"), col("t").as("t_b"))
-    a.join(b, Seq("block"))
-      .filter(col("doc_a") < col("doc_b"))
+    blockedPairs(docs, idCol, textCol, prefixLen, maxBlockSize)
       .select(col("doc_a"), col("doc_b"),
         graft.functions.expressions.ngram_jaccard(col("t_a"), col("t_b"), n).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
@@ -74,6 +60,22 @@ object Dedup {
                        n: Int = 3, prefixLen: Int = 24,
                        minContainment: Double = 0.0,
                        maxBlockSize: Option[Int] = None): DataFrame = {
+    blockedPairs(docs, idCol, textCol, prefixLen, maxBlockSize)
+      .select(col("doc_a"), col("doc_b"),
+        graft.functions.expressions.ngram_containment(col("t_a"), col("t_b"), n)
+          .as("containment_a_in_b"),
+        graft.functions.expressions.ngram_containment(col("t_b"), col("t_a"), n)
+          .as("containment_b_in_a"))
+      .filter(col("containment_a_in_b") >= minContainment ||
+        col("containment_b_in_a") >= minContainment)
+  }
+
+  /** The candidate pairs both n-gram measures score, `(block, doc_a,
+    * t_a, doc_b, t_b)` with doc_a < doc_b: two documents pair when they
+    * share their first `prefixLen` characters, after blocks larger than
+    * `maxBlockSize` are dropped. */
+  private def blockedPairs(docs: DataFrame, idCol: String, textCol: String,
+                           prefixLen: Int, maxBlockSize: Option[Int]): DataFrame = {
     val prepared = docs.select(
       col(idCol).as("doc"),
       substring(col(textCol), 1, prefixLen).as("block"),
@@ -89,13 +91,6 @@ object Dedup {
     val b = capped.select(col("block"), col("doc").as("doc_b"), col("t").as("t_b"))
     a.join(b, Seq("block"))
       .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.expressions.ngram_containment(col("t_a"), col("t_b"), n)
-          .as("containment_a_in_b"),
-        graft.functions.expressions.ngram_containment(col("t_b"), col("t_a"), n)
-          .as("containment_b_in_a"))
-      .filter(col("containment_a_in_b") >= minContainment ||
-        col("containment_b_in_a") >= minContainment)
   }
 
   /** Connected components over an undirected pair graph — the step that

@@ -217,27 +217,30 @@ object GraftHash {
     fp
   }
 
+  /** The distinct n-byte grams of `s`, each packed losslessly into one
+    * long (n ≤ 8). */
+  private def gramSet(s: UTF8String, n: Int): java.util.HashSet[java.lang.Long] = {
+    val set = new java.util.HashSet[java.lang.Long]()
+    val len = s.numBytes
+    var i = 0
+    while (i + n <= len) {
+      var g = 0L
+      var j = 0
+      while (j < n) { g = (g << 8) | (s.getByte(i + j) & 0xffL); j += 1 }
+      set.add(g)
+      i += 1
+    }
+    set
+  }
+
   /** Exact n-gram Jaccard of two strings for n ≤ 8: each n-byte gram
     * packs losslessly into one long (no hash collisions), distinct sets
     * via a HashSet, |I| / (|A|+|B|−|I|) with the same operand order as
     * the array_intersect/size reference form. */
   def ngramJaccard(a: UTF8String, b: UTF8String, n: Int): java.lang.Double = {
     require(n <= 8, "n-gram pack supports n <= 8 bytes")
-    def gramSet(s: UTF8String): java.util.HashSet[java.lang.Long] = {
-      val set = new java.util.HashSet[java.lang.Long]()
-      val len = s.numBytes
-      var i = 0
-      while (i + n <= len) {
-        var g = 0L
-        var j = 0
-        while (j < n) { g = (g << 8) | (s.getByte(i + j) & 0xffL); j += 1 }
-        set.add(g)
-        i += 1
-      }
-      set
-    }
-    val sa = gramSet(a)
-    val sb = gramSet(b)
+    val sa = gramSet(a, n)
+    val sb = gramSet(b, n)
     val la = sa.size
     val lb = sb.size
     var inter = 0
@@ -258,22 +261,9 @@ object GraftHash {
     * DuckDB semantics). */
   def ngramContainment(a: UTF8String, b: UTF8String, n: Int): java.lang.Double = {
     require(n <= 8, "n-gram pack supports n <= 8 bytes")
-    def gramSet(s: UTF8String): java.util.HashSet[java.lang.Long] = {
-      val set = new java.util.HashSet[java.lang.Long]()
-      val len = s.numBytes
-      var i = 0
-      while (i + n <= len) {
-        var g = 0L
-        var j = 0
-        while (j < n) { g = (g << 8) | (s.getByte(i + j) & 0xffL); j += 1 }
-        set.add(g)
-        i += 1
-      }
-      set
-    }
-    val sa = gramSet(a)
+    val sa = gramSet(a, n)
     if (sa.isEmpty) return null
-    val sb = gramSet(b)
+    val sb = gramSet(b, n)
     var inter = 0
     val it = sa.iterator()
     while (it.hasNext) if (sb.contains(it.next())) inter += 1

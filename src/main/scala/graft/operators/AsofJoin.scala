@@ -49,9 +49,4 @@ object AsofJoin {
       .filter(col("__side") === 1)
       .drop("__side")
   }
-
-  /** Convenience form for a single value column. */
-  def asofLookup(left: DataFrame, right: DataFrame, key: String,
-                 leftTimeCol: String, rightTimeCol: String, valueCol: String): DataFrame =
-    asofJoin(left, right, Seq(key), leftTimeCol, rightTimeCol, Seq(valueCol))
 }

@@ -17,15 +17,7 @@ object AgreementPlanQueries extends QueryGroup {
     * so every (month, brand) exists (rank/variance statistics are
     * wrong on ragged grids). */
   private def denseCells(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val cells = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= "1995-01-01" && col("l_shipdate") < "1996-01-01")
-      .join(broadcast(Tables.part(spark, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("p_brand").as("brand"),
-        expr("CAST(month(CAST(l_shipdate AS DATE)) AS BIGINT)").as("m"),
-        graft.functions.Deterministic.cents(col("l_extendedprice")).as("c"))
-      .groupBy(col("brand"), col("m")).agg(sum(col("c")).as("rev"))
+    val cells = CohesionPlanQueries.brandMonthRevenue(spark, dir)
     val brands = Tables.part(spark, dir).select(col("p_brand").as("brand")).distinct()
     val months = brands.select(explode(expr("sequence(1L, 12L)")).as("m")).distinct()
     brands.crossJoin(months)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -244,6 +245,26 @@ object AlignmentPlanQueries extends QueryGroup {
       FROM sol
     """))
 
+  /** The 512-quantized embeddings `base(vec_id, label, qv)` and each
+    * label's integer centroid `(label, carr)`, carr the per-dimension
+    * mean (sum div count) in dimension order: a (label, dim) aggregate
+    * folded to one row per label. q626 scores margins against every
+    * centroid, q627 distances to the own one. */
+  private def labelCentroids(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label").cast("long").as("label"),
+        expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
+          .as("qv"))
+    val cents = base
+      .select(col("label"), posexplode(col("qv")).as(Seq("dim", "q")))
+      .groupBy(col("label"), col("dim"))
+      .agg(expr("sum(q) div count(1)").as("c"))
+      .groupBy(col("label"))
+      .agg(expr("transform(sort_array(collect_list(named_struct('dim', dim, 'c', c))), s -> s.c)")
+        .as("carr"))
+    (base, cents)
+  }
+
   // ---------------------------------------------------------------- q626
 
   /** Active-learning acquisition agreement: the two classical
@@ -264,17 +285,8 @@ object AlignmentPlanQueries extends QueryGroup {
   private val q626 = QueryDef(
     "q626_acquisition_overlap",
     (spark, dir) => {
-      val base = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
-            .as("qv"))
-      val cents = base
-        .select(col("label"), posexplode(col("qv")).as(Seq("dim", "q")))
-        .groupBy(col("label"), col("dim"))
-        .agg(expr("sum(q) div count(1)").as("c"))
-        .groupBy(col("label"))
-        .agg(expr("transform(sort_array(collect_list(named_struct('dim', dim, 'c', c))), s -> s.c)")
-          .as("carr"))
+      val (base, labelCents) = labelCentroids(spark, dir)
+      val cents = labelCents
         .agg(expr("sort_array(collect_list(named_struct('label', label, 'carr', carr)))")
           .as("cents"))
       val scored = base.crossJoin(broadcast(cents))
@@ -376,17 +388,7 @@ object AlignmentPlanQueries extends QueryGroup {
       val spark0 = spark
       import spark0.implicits._
       val grid = Seq(500L, 700L, 900L).toDF("keep_permille")
-      val base = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
-            .as("qv"))
-      val cents = base
-        .select(col("label"), posexplode(col("qv")).as(Seq("dim", "q")))
-        .groupBy(col("label"), col("dim"))
-        .agg(expr("sum(q) div count(1)").as("c"))
-        .groupBy(col("label"))
-        .agg(expr("transform(sort_array(collect_list(named_struct('dim', dim, 'c', c))), s -> s.c)")
-          .as("carr"))
+      val (base, cents) = labelCentroids(spark, dir)
       val dist = base.join(broadcast(cents), Seq("label"))
         .select(col("vec_id"), col("label"),
           expr("aggregate(zip_with(qv, carr, (a, b) -> (a - b) * (a - b)), 0L, (s, x) -> s + x)")

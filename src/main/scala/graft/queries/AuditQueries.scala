@@ -149,6 +149,30 @@ object AuditQueries extends QueryGroup {
       FROM events GROUP BY event_type ORDER BY event_type
     """))
 
+  /** Every (purchase, view) pair of one user where the view falls in
+    * the hour before the purchase: (user_id, purchase_id, p_ts, vc,
+    * view_id, v_ts). A purchase joins only the views of its own and the
+    * previous hour bucket, never the user's full history. The
+    * attribution queries (q85 first touch, q105 position, q278 linear)
+    * each aggregate it per purchase. */
+  private[queries] def viewTouches(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.Deterministic.{cents, epochS}
+    val ev = Tables.events(spark, dir)
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        epochS(col("ts")).as("ts_s"), cents(col("value")).as("vc"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .withColumn("p_bucket", expr("ts_s div 3600"))
+      .select(col("user_id"), col("event_id").as("purchase_id"),
+        col("ts_s").as("p_ts"), col("vc"),
+        explode(array(col("p_bucket") - 1, col("p_bucket"))).as("bucket"))
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("event_id").as("view_id"),
+        col("ts_s").as("v_ts"), expr("ts_s div 3600").as("bucket"))
+    purchases
+      .join(views, Seq("user_id", "bucket"))
+      .filter(col("v_ts") <= col("p_ts") && col("v_ts") > col("p_ts") - 3600)
+  }
+
   /** First-touch attribution: each purchase credited to the user's
     * FIRST 'view' within the preceding hour — min-over exact integer
     * timestamps via one keyed join bounded by a coarse time bucket
@@ -157,21 +181,7 @@ object AuditQueries extends QueryGroup {
   private val q85 = QueryDef(
     "q85_first_touch_attribution",
     (spark, dir) => {
-      import graft.functions.Deterministic.{cents, epochS}
-      val ev = Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          epochS(col("ts")).as("ts_s"), cents(col("value")).as("vc"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .withColumn("p_bucket", expr("ts_s div 3600"))
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts_s").as("p_ts"), col("vc"),
-          explode(array(col("p_bucket") - 1, col("p_bucket"))).as("bucket"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("ts_s").as("v_ts"), expr("ts_s div 3600").as("bucket"))
-      purchases
-        .join(views, Seq("user_id", "bucket"))
-        .filter(col("v_ts") <= col("p_ts") && col("v_ts") > col("p_ts") - 3600)
+      viewTouches(spark, dir)
         .groupBy(col("user_id"), col("purchase_id"), col("p_ts"), col("vc"))
         .agg(min(struct(col("v_ts"), col("view_id"))).as("first"))
         .select(col("user_id"), col("purchase_id"), col("vc").as("value_cents"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,40 +15,54 @@ import graft.functions.Deterministic.{cents, epochS}
   */
 object BehaviorQueries extends QueryGroup {
 
+  /** The strictly-ordered view → click → purchase funnel as one row:
+    * `([window_s,] n_view, n_click, n_purchase, click_conv_ppm,
+    * purchase_conv_ppm)`. A user counts for a stage only if the stage's
+    * event happens AFTER their first event of the previous stage; with
+    * a `window` (seconds), also no later than that event + window.
+    * Three conditional-min aggregations keyed on user_id, each stage
+    * joined to the (user, first_ts) table of the previous one on the
+    * same key; the stage counts are one-row aggregates combined by
+    * broadcast (never a driver collect). q115 runs it unbounded, q249
+    * once per conversion window. */
+  private def funnel(spark: SparkSession, dir: String, window: Option[Long]): DataFrame = {
+    val e = Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"), epochS(col("ts")).as("ts_s"))
+    val v = e.filter(col("event_type") === "view")
+      .groupBy(col("user_id")).agg(min(col("ts_s")).as("t1"))
+    def after(t: String): Column =
+      window.foldLeft(col("ts_s") > col(t))((c, w) => c && col("ts_s") <= col(t) + w)
+    val c = e.filter(col("event_type") === "click").join(v, Seq("user_id"))
+      .filter(after("t1"))
+      .groupBy(col("user_id")).agg(min(col("ts_s")).as("t2"))
+    val p = e.filter(col("event_type") === "purchase").join(c, Seq("user_id"))
+      .filter(after("t2"))
+      .groupBy(col("user_id")).agg(min(col("ts_s")).as("t3"))
+    v.agg(count(lit(1)).as("n_view"))
+      .crossJoin(broadcast(c.agg(count(lit(1)).as("n_click"))))
+      .crossJoin(broadcast(p.agg(count(lit(1)).as("n_purchase"))))
+      .select(window.map(w => lit(w).as("window_s")).toSeq ++ Seq(
+        col("n_view"), col("n_click"), col("n_purchase"),
+        expr("CASE WHEN n_view = 0 THEN NULL ELSE n_click * 1000000L div n_view END")
+          .as("click_conv_ppm"),
+        expr("CASE WHEN n_click = 0 THEN NULL ELSE n_purchase * 1000000L div n_click END")
+          .as("purchase_conv_ppm")): _*)
+  }
+
   /** Strictly-ordered conversion funnel view → click → purchase: a user
     * counts for a stage only if the stage's event happens AFTER their
     * first event of the previous stage. Timestamps compare at second
     * resolution (epoch seconds) so nanosecond-vs-microsecond reader
     * truncation can't flip a comparison between engines.
     *
-    * Scale shape: three conditional-min aggregations keyed on user_id.
-    * Each stage is one pushed-down event_type scan + one keyed shuffle,
-    * and stages 2/3 join against the (user, first_ts) table from the
-    * previous stage — co-partitioned on the same key, so the exchanges
-    * reuse partitioning. The final stage counts are one-row aggregates
-    * combined by broadcast (never a driver collect). */
+    * Scale shape: [[funnel]] with no window. Each stage is one
+    * pushed-down event_type scan + one keyed shuffle, and stages 2/3
+    * join against the (user, first_ts) table from the previous stage —
+    * co-partitioned on the same key, so the exchanges reuse
+    * partitioning. */
   private val q115 = QueryDef(
     "q115_event_funnel",
-    (spark, dir) => {
-      val e = Tables.events(spark, dir)
-        .select(col("user_id"), col("event_type"), epochS(col("ts")).as("ts_s"))
-      val v = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t1"))
-      val c = e.filter(col("event_type") === "click").join(v, Seq("user_id"))
-        .filter(col("ts_s") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t2"))
-      val p = e.filter(col("event_type") === "purchase").join(c, Seq("user_id"))
-        .filter(col("ts_s") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t3"))
-      v.agg(count(lit(1)).as("n_view"))
-        .crossJoin(broadcast(c.agg(count(lit(1)).as("n_click"))))
-        .crossJoin(broadcast(p.agg(count(lit(1)).as("n_purchase"))))
-        .select(col("n_view"), col("n_click"), col("n_purchase"),
-          expr("CASE WHEN n_view = 0 THEN NULL ELSE n_click * 1000000L div n_view END")
-            .as("click_conv_ppm"),
-          expr("CASE WHEN n_click = 0 THEN NULL ELSE n_purchase * 1000000L div n_click END")
-            .as("purchase_conv_ppm"))
-    },
+    (spark, dir) => funnel(spark, dir, None),
     Some("""
       WITH e AS (
         SELECT user_id, event_type, CAST(epoch_ms(ts) // 1000 AS BIGINT) AS ts_s
@@ -1284,34 +1298,14 @@ object BehaviorQueries extends QueryGroup {
     * w where conversion stops growing is how long intent survives,
     * and unbounded q115 is the w→∞ asymptote of this table.
     *
-    * Scale shape: per window, the same user-co-partitioned min-join
-    * chain as q115 (AQE plans one exchange for the shared user key);
+    * Scale shape: per window, the [[funnel]] min-join chain q115 runs
+    * unbounded (AQE plans one exchange for the shared user key);
     * four window variants union into a 4-row census. */
   private val q249 = QueryDef(
     "q249_funnel_conversion_windows",
     (spark, dir) => {
-      val e = Tables.events(spark, dir)
-        .select(col("user_id"), col("event_type"), epochS(col("ts")).as("ts_s"))
-      val v = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("t1"))
-      def tier(w: Long): DataFrame = {
-        val c = e.filter(col("event_type") === "click").join(v, Seq("user_id"))
-          .filter(col("ts_s") > col("t1") && col("ts_s") <= col("t1") + w)
-          .groupBy(col("user_id")).agg(min(col("ts_s")).as("t2"))
-        val p = e.filter(col("event_type") === "purchase").join(c, Seq("user_id"))
-          .filter(col("ts_s") > col("t2") && col("ts_s") <= col("t2") + w)
-          .groupBy(col("user_id")).agg(min(col("ts_s")).as("t3"))
-        v.agg(count(lit(1)).as("n_view"))
-          .crossJoin(broadcast(c.agg(count(lit(1)).as("n_click"))))
-          .crossJoin(broadcast(p.agg(count(lit(1)).as("n_purchase"))))
-          .select(lit(w).as("window_s"), col("n_view"), col("n_click"),
-            col("n_purchase"),
-            expr("CASE WHEN n_view = 0 THEN NULL ELSE n_click * 1000000L div n_view END")
-              .as("click_conv_ppm"),
-            expr("CASE WHEN n_click = 0 THEN NULL ELSE n_purchase * 1000000L div n_click END")
-              .as("purchase_conv_ppm"))
-      }
-      Seq(3600L, 21600L, 86400L, 604800L).map(tier).reduce(_.unionAll(_))
+      Seq(3600L, 21600L, 86400L, 604800L).map(w => funnel(spark, dir, Some(w)))
+        .reduce(_.unionAll(_))
         .orderBy(col("window_s"))
     },
     Some {

@@ -296,7 +296,8 @@ object CapacityPlanQueries extends QueryGroup {
     * truncation, identically in both engines. q483 fixes k = 4; this
     * finds the k worth running.
     *
-    * Scale shape: q483's digest-pair machinery (vocabulary-sized draft
+    * Scale shape: q483's digest-pair machinery
+    * ([[PretrainPlanQueries.draftAcceptance]]: vocabulary-sized draft
     * table, corpus-row join) feeding a per-source scalar sweep. */
   private val q549 = QueryDef(
     "q549_specdec_draft_length_sweep",
@@ -304,22 +305,7 @@ object CapacityPlanQueries extends QueryGroup {
       val spark0 = spark
       import spark0.implicits._
       val grid = Seq(2L, 4L, 8L).toDF("k")
-      val trans = Tables.documents(spark, dir)
-        .select(col("source"), expr("filter(split(text, ' '), t -> t != '')").as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("source"), explode(expr(
-          "transform(sequence(1, size(tk) - 1), " +
-            "i -> named_struct('h', tk[i - 1], 'n', tk[i]))")).as("p"))
-        .select(col("source"), md5(col("p.h")).as("h"), md5(col("p.n")).as("n"))
-      val draft = trans.groupBy(col("h"), col("n")).agg(count(lit(1)).as("c"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("h")).orderBy(col("c").desc, col("n"))))
-        .filter(col("rk") === 1)
-        .select(col("h"), col("n").as("n_star"))
-      val acc = trans.join(draft, Seq("h"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_transitions"),
-          sum(when(col("n") === col("n_star"), 1L).otherwise(0L)).as("n_accepted"))
+      val acc = PretrainPlanQueries.draftAcceptance(spark, dir)
         .select(col("source"), col("n_transitions"),
           expr("n_accepted * 1000 div n_transitions").as("a_milli"))
       // E_k·1000 = 1000 + a + a² + … + a^k, powers by milli truncation

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -11,6 +11,47 @@ import graft.Tables
   * for the oracle gate.
   */
 object CensusPlanQueries extends QueryGroup {
+
+  /** Four rounds of node peeling on the 1995 customer–supplier purchase
+    * graph, with a census of every round 0..4: `(round, nodes, edges,
+    * extra...)`, `extra` aggregated over the round's edge list beside
+    * the node and undirected-edge counts. Bipartite node ids are
+    * disjoint (2c / 2s+1) so one symmetric directed edge list (u, v)
+    * serves both sides; node-peeling preserves symmetry, so undirected
+    * edges = rows div 2 exactly. `materialise` stores the round-0 edge
+    * list; `keep` maps a round's edges to the nodes (u) that survive
+    * it. Every round is one keyed degree aggregate plus two keyed
+    * semijoins (no node-sized broadcast), its surviving edges
+    * `localCheckpoint(true)`ed so each round's plan stays flat. q558
+    * peels at a fixed k-core bar, q691 at the adaptive densest-subgraph
+    * bar. */
+  private def peelingCensus(spark: SparkSession, dir: String,
+                            materialise: DataFrame => DataFrame,
+                            keep: DataFrame => DataFrame,
+                            extra: Column*): DataFrame = {
+    val base = Tables.orders(spark, dir)
+      .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
+      .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
+      .join(Tables.lineitem(spark, dir)
+        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s")), Seq("ok"))
+      .select(col("c"), col("s")).distinct()
+    var edges = materialise(base
+      .select((col("c") * 2L).as("u"), (col("s") * 2L + 1L).as("v"))
+      .union(base.select((col("s") * 2L + 1L).as("u"), (col("c") * 2L).as("v"))))
+    def census(r: Int, e: DataFrame): DataFrame =
+      e.agg(countDistinct(col("u")).as("nodes"), expr("count(1) div 2").as("edges") +: extra: _*)
+        .select(lit(r.toLong).as("round"), col("*"))
+    var out = census(0, edges)
+    for (r <- 1 to 4) {
+      val survivors = keep(edges)
+      edges = edges
+        .join(survivors, Seq("u"))
+        .join(survivors.withColumnRenamed("u", "v"), Seq("v"))
+        .select(col("u"), col("v")).localCheckpoint(true)
+      out = out.union(census(r, edges))
+    }
+    out.orderBy(col("round"))
+  }
 
   // ---------------------------------------------------------------- q558
 
@@ -45,35 +86,13 @@ object CensusPlanQueries extends QueryGroup {
   private val q558 = QueryDef(
     "q558_kcore_peeling",
     (spark, dir) => {
-      val base = Tables.orders(spark, dir)
-        .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
-        .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
-        .join(Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s")), Seq("ok"))
-        .select(col("c"), col("s")).distinct()
-      var edges = base
-        .select((col("c") * 2L).as("u"), (col("s") * 2L + 1L).as("v"))
-        .union(base.select((col("s") * 2L + 1L).as("u"), (col("c") * 2L).as("v")))
-        .persist()
-      def census(r: Int, e: DataFrame): DataFrame =
-        e.agg(countDistinct(col("u")).as("nodes"),
-            expr("count(1) div 2").as("edges"))
-          .select(lit(r.toLong).as("round"), col("nodes"), col("edges"))
-      var out = census(0, edges)
       // (r13 note: a count-based fixpoint shortcut was tried and
       // REVERTED — this graph never reaches a fixpoint within the 4
       // audited rounds at any test SF, so the two extra count barriers
       // per round cost ~65% more wall time and saved nothing.)
-      for (r <- 1 to 4) {
-        val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-          .filter(col("d") >= 3L).select(col("u"))
-        edges = edges
-          .join(keep, Seq("u"))
-          .join(keep.withColumnRenamed("u", "v"), Seq("v"))
-          .select(col("u"), col("v")).localCheckpoint(true)
-        out = out.union(census(r, edges))
-      }
-      out.orderBy(col("round"))
+      peelingCensus(spark, dir, _.persist(),
+        edges => edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
+          .filter(col("d") >= 3L).select(col("u")))
     },
     Some("""
       WITH b AS MATERIALIZED (
@@ -202,6 +221,28 @@ object CensusPlanQueries extends QueryGroup {
       FROM rows_ ORDER BY window_h
     """))
 
+  /** Offered load per hour of day and the exact Erlang-B blocking
+    * recursion B(c) = a·B(c−1)/(c + a·B(c−1)) for c = 1..12 servers in
+    * integer ppm: `(hod, arrivals, n_days, a_centi, b1..b12)`, a_centi
+    * the arrivals × a 10-minute hold in centi-erlangs. Events fold to
+    * 24 rows in one aggregate; the recursion is a chain of column
+    * expressions on them. q560 reads the blocking, q608 the Erlang-C
+    * wait built on it. */
+  private[queries] def erlangB(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.Deterministic.epochS
+    val perHour = Tables.events(spark, dir)
+      .select(epochS(col("ts")).as("es"))
+      .select(expr("es div 3600 % 24").as("hod"), expr("es div 86400").as("day"))
+      .groupBy(col("hod"))
+      .agg(count(lit(1)).as("arrivals"), countDistinct(col("day")).as("n_days"))
+      .withColumn("a_centi", expr("arrivals * 100 div (n_days * 6)"))
+    (1 to 12).foldLeft(perHour) { (df, c) =>
+      val prev = if (c == 1) "CAST(1000000 AS BIGINT)" else s"b${c - 1}"
+      df.withColumn(s"b$c",
+        expr(s"(1000000 * a_centi * $prev) div ($c * 100000000 + a_centi * $prev)"))
+    }
+  }
+
   // ---------------------------------------------------------------- q560
 
   /** Erlang-B trunk sizing: fold the event stream to offered load per
@@ -225,19 +266,7 @@ object CensusPlanQueries extends QueryGroup {
   private val q560 = QueryDef(
     "q560_erlang_blocking_plan",
     (spark, dir) => {
-      import graft.functions.Deterministic.epochS
-      val perHour = Tables.events(spark, dir)
-        .select(epochS(col("ts")).as("es"))
-        .select(expr("es div 3600 % 24").as("hod"), expr("es div 86400").as("day"))
-        .groupBy(col("hod"))
-        .agg(count(lit(1)).as("arrivals"), countDistinct(col("day")).as("n_days"))
-        .withColumn("a_centi", expr("arrivals * 100 div (n_days * 6)"))
-      var df = perHour
-      for (c <- 1 to 12) {
-        val prev = if (c == 1) "CAST(1000000 AS BIGINT)" else s"b${c - 1}"
-        df = df.withColumn(s"b$c",
-          expr(s"(1000000 * a_centi * $prev) div ($c * 100000000 + a_centi * $prev)"))
-      }
+      val df = erlangB(spark, dir)
       val sla = (1 to 12)
         .map(c => s"WHEN b$c <= 10000 THEN $c").mkString(" ")
       df.select(col("hod"), col("n_days"), col("arrivals"), col("a_centi"),
@@ -283,8 +312,8 @@ object CensusPlanQueries extends QueryGroup {
     * degree bar; this one adapts the bar to the surviving graph, which
     * is what makes it a density maximizer rather than a core filter.
     *
-    * Scale shape: q558's edge discipline — one keyed degree aggregate
-    * plus two keyed semijoins per round and a one-row (n, 2m)
+    * Scale shape: [[peelingCensus]], as q558 — one keyed degree
+    * aggregate plus two keyed semijoins per round and a one-row (n, 2m)
     * broadcast for the adaptive bar; no node-sized broadcasts. Unlike
     * q558, each round's survivor list feeds a SCALAR broadcast, and
     * Spark fires every broadcast future eagerly at action start — with
@@ -300,40 +329,18 @@ object CensusPlanQueries extends QueryGroup {
   private val q691 = QueryDef(
     "q691_densest_subgraph_peel",
     (spark, dir) => {
-      val base = Tables.orders(spark, dir)
-        .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
-        .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
-        .join(Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s")), Seq("ok"))
-        .select(col("c"), col("s")).distinct()
-      var edges = base
-        .select((col("c") * 2L).as("u"), (col("s") * 2L + 1L).as("v"))
-        .union(base.select((col("s") * 2L + 1L).as("u"), (col("c") * 2L).as("v")))
-        .localCheckpoint(true)
-      def census(r: Int, e: DataFrame): DataFrame =
-        e.agg(countDistinct(col("u")).as("nodes"),
-            expr("count(1) div 2").as("edges"),
-            expr("count(1) * 1000 div greatest(count(DISTINCT u), 1)")
-              .as("avg_deg_milli"))
-          .select(lit(r.toLong).as("round"), col("nodes"), col("edges"),
-            col("avg_deg_milli"))
-      var out = census(0, edges)
       // (r13 note: a count-based fixpoint shortcut was tried and
       // REVERTED — the adaptive bar keeps peeling at every test SF, so
       // the extra count barriers only added wall time.)
-      for (r <- 1 to 4) {
-        val bar = edges.agg(countDistinct(col("u")).as("n"),
-          count(lit(1)).as("m2"))
-        val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-          .crossJoin(broadcast(bar))
-          .filter(col("d") * col("n") > col("m2")).select(col("u"))
-        edges = edges
-          .join(keep, Seq("u"))
-          .join(keep.withColumnRenamed("u", "v"), Seq("v"))
-          .select(col("u"), col("v")).localCheckpoint(true)
-        out = out.union(census(r, edges))
-      }
-      out.orderBy(col("round"))
+      peelingCensus(spark, dir, _.localCheckpoint(true),
+        edges => {
+          val bar = edges.agg(countDistinct(col("u")).as("n"),
+            count(lit(1)).as("m2"))
+          edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
+            .crossJoin(broadcast(bar))
+            .filter(col("d") * col("n") > col("m2")).select(col("u"))
+        },
+        expr("count(1) * 1000 div greatest(count(DISTINCT u), 1)").as("avg_deg_milli"))
     },
     Some("""
       WITH b AS MATERIALIZED (

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -121,6 +122,21 @@ object CohesionPlanQueries extends QueryGroup {
       FROM nc JOIN blocks USING (cut_permille) ORDER BY cut_permille
     """))
 
+  /** 1995 revenue cents per (brand, ship month), `(brand, m, rev)`: one
+    * lineitem scan with the part side broadcast, folded to at most
+    * brands × 12 rows. Only the (brand, month) pairs that shipped
+    * appear; AgreementPlanQueries zero-fills the grid. */
+  private[queries] def brandMonthRevenue(spark: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(spark, dir)
+      .filter(col("l_shipdate") >= "1995-01-01" && col("l_shipdate") < "1996-01-01")
+      .join(broadcast(Tables.part(spark, dir)
+        .select(col("p_partkey"), col("p_brand"))),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("p_brand").as("brand"),
+        expr("CAST(month(CAST(l_shipdate AS DATE)) AS BIGINT)").as("m"),
+        graft.functions.Deterministic.cents(col("l_extendedprice")).as("c"))
+      .groupBy(col("brand"), col("m")).agg(sum(col("c")).as("rev"))
+
   // ---------------------------------------------------------------- q632
 
   /** Tournament intransitivity census: brands form a round-robin
@@ -142,15 +158,7 @@ object CohesionPlanQueries extends QueryGroup {
   private val q632 = QueryDef(
     "q632_tournament_cycle_census",
     (spark, dir) => {
-      val cells = Tables.lineitem(spark, dir)
-        .filter(col("l_shipdate") >= "1995-01-01" && col("l_shipdate") < "1996-01-01")
-        .join(broadcast(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand").as("brand"),
-          expr("CAST(month(CAST(l_shipdate AS DATE)) AS BIGINT)").as("m"),
-          graft.functions.Deterministic.cents(col("l_extendedprice")).as("c"))
-        .groupBy(col("brand"), col("m")).agg(sum(col("c")).as("rev"))
+      val cells = brandMonthRevenue(spark, dir)
       val duels = cells.as("a")
         .join(cells.as("b").withColumnRenamed("brand", "brand_b")
           .withColumnRenamed("rev", "rev_b"), Seq("m"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -312,6 +313,27 @@ object CorpusQueries extends QueryGroup {
       ORDER BY df DESC, token
     """))
 
+  /** The quantized quality score of every document, `binned(doc_id,
+    * qs)` with qs = floor(quality_score·1000 + 0.5), and its ≤1001-bin
+    * cumulative histogram beside the corpus size, `(qs, cum, n)`. The
+    * cumulative window runs over bins, never over documents. q64
+    * thresholds on it, q82 bins into deciles. (A persist + scan fan-out
+    * was tried here and reverted: the quality kernel is codegen'd and
+    * cheap enough that the re-evaluations cost less than the added
+    * shuffle + cache materialization, measured 1.15 s -> 1.61 s.) */
+  private def qualityBins(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val binned = Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        floor(qualityFeatures(col("text")).getField("quality_score") * 1000 + 0.5)
+          .cast("long").as("qs"))
+    val hist = binned.groupBy(col("qs")).agg(count(lit(1)).as("c"))
+    val cum = hist.select(col("qs"),
+      sum(col("c")).over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("qs")).rowsBetween(Long.MinValue, 0)).as("cum"))
+    val tot = binned.agg(count(lit(1)).as("n"))
+    (binned, cum.crossJoin(broadcast(tot)))
+  }
+
   /** Global-percentile threshold filter: keep the top quartile of docs
     * by quality score. The percentile is computed exactly over the
     * QUANTIZED score (floor(score·1000 + 0.5) — a ≤1001-bin histogram,
@@ -322,20 +344,8 @@ object CorpusQueries extends QueryGroup {
   private val q64 = QueryDef(
     "q64_quality_threshold",
     (spark, dir) => {
-      // (r13 note: a persist + scan fan-out was tried here and REVERTED
-      // — the quality kernel is codegen'd and cheap enough that the
-      // re-evaluations cost less than the added shuffle + cache
-      // materialization: measured 1.15 s -> 1.61 s.)
-      val binned = Tables.documents(spark, dir)
-        .select(col("doc_id"),
-          floor(qualityFeatures(col("text")).getField("quality_score") * 1000 + 0.5)
-            .cast("long").as("qs"))
-      val hist = binned.groupBy(col("qs")).agg(count(lit(1)).as("c"))
-      val cum = hist.select(col("qs"),
-        sum(col("c")).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("qs")).rowsBetween(Long.MinValue, 0)).as("cum"))
-      val tot = binned.agg(count(lit(1)).as("n"))
-      val thr = cum.crossJoin(broadcast(tot))
+      val (binned, cumTot) = qualityBins(spark, dir)
+      val thr = cumTot
         .filter(col("cum") >= ceil(lit(0.75) * col("n")))
         .agg(min(col("qs")).as("t"))
       binned.crossJoin(broadcast(thr))
@@ -384,20 +394,8 @@ object CorpusQueries extends QueryGroup {
   private val q82 = QueryDef(
     "q82_decile_binning",
     (spark, dir) => {
-      // (r13 note: a persist + scan fan-out was tried here and REVERTED
-      // — the quality kernel is codegen'd and cheap enough that the
-      // re-evaluations cost less than the added shuffle + cache
-      // materialization: measured 1.15 s -> 1.61 s.)
-      val binned = Tables.documents(spark, dir)
-        .select(col("doc_id"),
-          floor(qualityFeatures(col("text")).getField("quality_score") * 1000 + 0.5)
-            .cast("long").as("qs"))
-      val hist = binned.groupBy(col("qs")).agg(count(lit(1)).as("c"))
-      val cum = hist.select(col("qs"),
-        sum(col("c")).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("qs")).rowsBetween(Long.MinValue, 0)).as("cum"))
-      val tot = binned.agg(count(lit(1)).as("n"))
-      val binDecile = cum.crossJoin(broadcast(tot))
+      val (binned, cumTot) = qualityBins(spark, dir)
+      val binDecile = cumTot
         .select(col("qs"), expr("CAST((10 * cum + n - 1) DIV n AS BIGINT)").as("decile"))
       binned.join(broadcast(binDecile), Seq("qs"))
         .select(col("doc_id"), col("qs"), col("decile"))
@@ -730,6 +728,40 @@ object CorpusQueries extends QueryGroup {
       ORDER BY mode
     """))
 
+  /** The two top-20 rankings against document 0: `(doc_id, vecRank)` by
+    * quantized cosine to its embedding, and `(doc_id, lexRank)` by
+    * distinct-token overlap with its text (k=1 word shingles ARE the
+    * distinct token-hash set). Each ranking is a narrow projection with
+    * the one-row query broadcast, collapsing to TakeOrderedAndProject;
+    * the rank windows run over the 20-row finalists only. q174 fuses
+    * them, q189 measures their agreement. */
+  private def doc0Top20(spark: SparkSession, dir: String,
+                        vecRank: String, lexRank: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.expressions.quantized_cosine
+    import graft.text.TextFunctions.wordShingleSet
+    val emb = Tables.embeddings(spark, dir)
+    val qe = emb.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
+    val vec20 = emb.filter(col("vec_id") =!= 0L)
+      .crossJoin(broadcast(qe))
+      .select(col("vec_id").as("doc_id"),
+        quantized_cosine(col("embedding"), col("q_emb")).as("cos"))
+      .orderBy(col("cos").desc, col("doc_id")).limit(20)
+      .select(col("doc_id"), row_number().over(
+        Window.orderBy(col("cos").desc, col("doc_id"))).cast("long").as(vecRank))
+    val tsets = Tables.documents(spark, dir)
+      .select(col("doc_id"), wordShingleSet(col("text"), 1).as("ts"))
+    val qt = tsets.filter(col("doc_id") === 0L).select(col("ts").as("q_ts"))
+    val lex20 = tsets.filter(col("doc_id") =!= 0L)
+      .crossJoin(broadcast(qt))
+      .select(col("doc_id"),
+        size(array_intersect(col("ts"), col("q_ts"))).cast("long").as("ov"))
+      .orderBy(col("ov").desc, col("doc_id")).limit(20)
+      .select(col("doc_id"), row_number().over(
+        Window.orderBy(col("ov").desc, col("doc_id"))).cast("long").as(lexRank))
+    (vec20, lex20)
+  }
+
   /** Hybrid retrieval with reciprocal-rank fusion: the vector ranking
     * (quantized cosine vs doc 0's embedding) and the lexical ranking
     * (distinct-token-set overlap with doc 0's text) each nominate their
@@ -746,29 +778,7 @@ object CorpusQueries extends QueryGroup {
   private val q174 = QueryDef(
     "q174_hybrid_rrf",
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.expressions.quantized_cosine
-      import graft.text.TextFunctions.wordShingleSet
-      val emb = Tables.embeddings(spark, dir)
-      val qe = emb.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
-      val vec20 = emb.filter(col("vec_id") =!= 0L)
-        .crossJoin(broadcast(qe))
-        .select(col("vec_id").as("doc_id"),
-          quantized_cosine(col("embedding"), col("q_emb")).as("cos"))
-        .orderBy(col("cos").desc, col("doc_id")).limit(20)
-        .select(col("doc_id"), row_number().over(
-          Window.orderBy(col("cos").desc, col("doc_id"))).cast("long").as("vec_rank"))
-      // k=1 word shingles ARE the distinct token-hash set
-      val tsets = Tables.documents(spark, dir)
-        .select(col("doc_id"), wordShingleSet(col("text"), 1).as("ts"))
-      val qt = tsets.filter(col("doc_id") === 0L).select(col("ts").as("q_ts"))
-      val lex20 = tsets.filter(col("doc_id") =!= 0L)
-        .crossJoin(broadcast(qt))
-        .select(col("doc_id"),
-          size(array_intersect(col("ts"), col("q_ts"))).cast("long").as("ov"))
-        .orderBy(col("ov").desc, col("doc_id")).limit(20)
-        .select(col("doc_id"), row_number().over(
-          Window.orderBy(col("ov").desc, col("doc_id"))).cast("long").as("lex_rank"))
+      val (vec20, lex20) = doc0Top20(spark, dir, "vec_rank", "lex_rank")
       vec20.join(lex20, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
           coalesce(col("vec_rank"), lit(0L)).as("vr"),
@@ -880,34 +890,14 @@ object CorpusQueries extends QueryGroup {
     * reciprocal) is the point: agreement at rank 1 counts ~20× rank 20.
     *
     * Scale shape: both rankings are TakeOrderedAndProject over broadcast
-    * one-row queries (q174's shape); the RBO combine is a 20×20-bounded
-    * join against a generated 20-row weight table. */
+    * one-row queries ([[doc0Top20]], shared with q174); the RBO combine
+    * is a 20×20-bounded join against a generated 20-row weight table. */
   private val q189 = QueryDef(
     "q189_rbo_rank_agreement",
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import graft.functions.expressions.quantized_cosine
-      import graft.text.TextFunctions.wordShingleSet
       val D = 122050345697280L // lcm(1..20) * 2^19
-      val emb = Tables.embeddings(spark, dir)
-      val qe = emb.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
-      val vec20 = emb.filter(col("vec_id") =!= 0L)
-        .crossJoin(broadcast(qe))
-        .select(col("vec_id").as("doc_id"),
-          quantized_cosine(col("embedding"), col("q_emb")).as("cos"))
-        .orderBy(col("cos").desc, col("doc_id")).limit(20)
-        .select(col("doc_id"), row_number().over(
-          Window.orderBy(col("cos").desc, col("doc_id"))).cast("long").as("vr"))
-      val tsets = Tables.documents(spark, dir)
-        .select(col("doc_id"), wordShingleSet(col("text"), 1).as("ts"))
-      val qt = tsets.filter(col("doc_id") === 0L).select(col("ts").as("q_ts"))
-      val lex20 = tsets.filter(col("doc_id") =!= 0L)
-        .crossJoin(broadcast(qt))
-        .select(col("doc_id"),
-          size(array_intersect(col("ts"), col("q_ts"))).cast("long").as("ov"))
-        .orderBy(col("ov").desc, col("doc_id")).limit(20)
-        .select(col("doc_id"), row_number().over(
-          Window.orderBy(col("ov").desc, col("doc_id"))).cast("long").as("lr"))
+      val (vec20, lex20) = doc0Top20(spark, dir, "vr", "lr")
       val m = vec20.join(lex20, Seq("doc_id"))
         .select(greatest(col("vr"), col("lr")).as("m"))
       val weights = spark.range(1, 21)
@@ -1161,6 +1151,22 @@ object CorpusQueries extends QueryGroup {
       FROM e ORDER BY scope
     """))
 
+  /** One (source, h) row per word bigram of every document with at
+    * least two tokens, h the 32-bit key hash of the bigram's text; a
+    * bigram repeated in a source repeats here. The distinct-bigram
+    * sketches (q239 KMV intersection, q418 KMV containment, q419 HLL vs
+    * KMV) all read it. */
+  private[queries] def bigramHashes(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("source"), tokens_native(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(col("source"), explode(expr(
+        "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
+        .as("bg"))
+      .select(col("source"),
+        graft.operators.Sampling.keyHash(
+          graft.functions.expressions.poly_hash(col("bg"))).as("h"))
+
   /** Theta-sketch-style set algebra on the KMV sketches: estimated
     * bigram-vocabulary intersection between every source pair via
     * inclusion-exclusion over merged sketches, audited against the
@@ -1179,16 +1185,7 @@ object CorpusQueries extends QueryGroup {
     "q239_kmv_intersection",
     (spark, dir) => {
       import graft.functions.KmvSketch.{kmv_bottom_k, kmv_estimate}
-      val dh = Tables.documents(spark, dir)
-        .select(col("source"), tokens_native(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("source"), explode(expr(
-          "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
-          .as("bg"))
-        .select(col("source"),
-          graft.operators.Sampling.keyHash(
-            graft.functions.expressions.poly_hash(col("bg"))).as("h"))
-        .distinct()
+      val dh = bigramHashes(spark, dir).distinct()
       val sk = dh.groupBy(col("source"))
         .agg(kmv_bottom_k(col("h"), 64).as("sketch"))
       val a = sk.select(col("source").as("src_a"), col("sketch").as("ska"))

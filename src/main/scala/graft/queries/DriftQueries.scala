@@ -793,13 +793,7 @@ object DriftQueries extends QueryGroup {
   private val q203 = QueryDef(
     "q203_lag7_autocorrelation",
     (spark, dir) => {
-      import graft.functions.Deterministic.{cents, epochS}
-      val daily = Tables.orders(spark, dir)
-        .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
-        .select(col("o_orderpriority").as("pri"),
-          (epochS(col("o_orderdate")) / 86400).cast("long").as("day"),
-          cents(col("o_totalprice")).as("vc"))
-        .groupBy(col("pri"), col("day")).agg(sum(col("vc")).as("vc"))
+      val daily = IntervalQueries.dailyRevenue(spark, dir)
       val spine = Tables.orders(spark, dir)
         .select(col("o_orderpriority")).distinct()
         .select(col("o_orderpriority").as("pri"),

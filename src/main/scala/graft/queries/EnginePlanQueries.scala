@@ -188,6 +188,18 @@ object EnginePlanQueries extends QueryGroup {
 
   // ------------------------------------------------------------ q544/q545
 
+  /** One row per order: `(o_orderkey, x1, x2, y)`, x1 its line-item
+    * count, x2 its total quantity, y its value in whole dollars. */
+  private def perOrder(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.lineitem(spark, dir)
+      .groupBy(col("l_orderkey").as("o_orderkey"))
+      .agg(count(lit(1)).as("x1"),
+        expr("CAST(sum(l_quantity) AS BIGINT)").as("x2"))
+      .join(Tables.orders(spark, dir)
+        .select(col("o_orderkey"),
+          expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").as("y")),
+        Seq("o_orderkey"))
+
   /** The shared exact-integer OLS fit: order value (whole dollars) on
     * x1 = line-item count and x2 = total quantity, solved by Cramer's
     * rule on the CENTERED 2×2 normal equations. Everything stays in
@@ -197,15 +209,7 @@ object EnginePlanQueries extends QueryGroup {
     * milli-betas divide by (det div 1000) instead of multiplying the
     * ~10¹⁷ numerator by 1000. One row out: betas (milli), means, n. */
   private def olsFit(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val perOrder = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey").as("o_orderkey"))
-      .agg(count(lit(1)).as("x1"),
-        expr("CAST(sum(l_quantity) AS BIGINT)").as("x2"))
-      .join(Tables.orders(spark, dir)
-        .select(col("o_orderkey"),
-          expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").as("y")),
-        Seq("o_orderkey"))
-    perOrder.agg(count(lit(1)).as("n"),
+    perOrder(spark, dir).agg(count(lit(1)).as("n"),
         sum(col("x1")).as("sx1"), sum(col("x2")).as("sx2"), sum(col("y")).as("sy"),
         sum(expr("x1 * x1")).as("sx1x1"), sum(expr("x2 * x2")).as("sx2x2"),
         sum(expr("x1 * x2")).as("sx1x2"), sum(expr("x1 * y")).as("sx1y"),
@@ -280,15 +284,7 @@ object EnginePlanQueries extends QueryGroup {
     "q544_ols_normal_equations",
     (spark, dir) => {
       val fit = olsFit(spark, dir)
-      val perOrder = Tables.lineitem(spark, dir)
-        .groupBy(col("l_orderkey").as("o_orderkey"))
-        .agg(count(lit(1)).as("x1"),
-          expr("CAST(sum(l_quantity) AS BIGINT)").as("x2"))
-        .join(Tables.orders(spark, dir)
-          .select(col("o_orderkey"),
-            expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").as("y")),
-          Seq("o_orderkey"))
-      perOrder.crossJoin(broadcast(fit))
+      perOrder(spark, dir).crossJoin(broadcast(fit))
         .withColumn("r", expr(
           "(y * 1000 - (beta0_milli + beta1_milli * x1 + beta2_milli * x2)) div 1000"))
         .groupBy(col("n"), col("beta0_milli"), col("beta1_milli"),

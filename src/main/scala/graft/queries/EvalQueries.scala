@@ -186,11 +186,12 @@ object EvalQueries extends QueryGroup {
     * relevant iff it shares the query's label; ndcg_ppm normalizes by
     * the ideal DCG for the query's actual relevant-candidate count.
     *
-    * Scale shape: q235's eval harness — broadcast quantized query
-    * vectors (a fixed BUDGET, not a fraction: a fraction grows
-    * candidate pairs quadratically), codegen'd integer dot products on
-    * one corpus scan, top-10 per query via the [[graft.functions
-    * .TopKPairs]] bounded heap (≤10 rows per query cross the shuffle)
+    * Scale shape: [[QuantQueries.panelDots]], q235's eval harness —
+    * broadcast quantized query vectors (a fixed BUDGET, not a
+    * fraction: a fraction grows candidate pairs quadratically),
+    * codegen'd integer dot products on one corpus scan, top-10 per
+    * query via the [[graft.functions.TopKPairs]] bounded heap (≤10 rows
+    * per query cross the shuffle)
     * with n_rel aggregated alongside in the same pass — never a
     * corpus-sized window partition. */
   private val q373 = QueryDef(
@@ -202,24 +203,7 @@ object EvalQueries extends QueryGroup {
                 WHEN m = 7 THEN 6534 WHEN m = 6 THEN 6174 WHEN m = 5 THEN 5754
                 WHEN m = 4 THEN 5250 WHEN m = 3 THEN 4620 WHEN m = 2 THEN 3780
                 WHEN m = 1 THEN 2520 ELSE 0 END"""
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
-            .as("qv"))
-        .withColumn("nsq", expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
-        .filter(col("nsq") > 0L)
-      val queryIds = vecs
-        .agg(graft.functions.TopKAggregate.topk_pairs(
-          -graft.operators.Sampling.keyHash(col("vec_id")).cast("double"),
-          col("vec_id"), 64).as("top"))
-        .select(explode(col("top")).as("t"))
-        .select(col("t").getField("id").as("q_id"))
-      val queries = vecs.join(broadcast(queryIds), col("vec_id") === col("q_id"))
-        .select(col("q_id"), col("label").as("q_label"),
-          col("qv").as("q_qv"), col("nsq").as("q_nsq"))
-      vecs.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("dot",
-          expr("aggregate(zip_with(qv, q_qv, (a, b) -> a * b), 0L, (a, x) -> a + x)"))
+      QuantQueries.panelDots(spark, dir, labeled = true)
         .withColumn("cosine", col("dot").cast("double") /
           sqrt(col("nsq").cast("double") * col("q_nsq").cast("double")))
         .withColumn("rel", when(col("label") === col("q_label"), 1L).otherwise(0L))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -221,6 +222,29 @@ object IntervalQueries extends QueryGroup {
       ORDER BY key, version
     """))
 
+  /** 1995 order revenue cents per (priority, epoch day) that has
+    * orders: `(pri, day, vc)`, one date-pruned grouped aggregation. */
+  private[queries] def dailyRevenue(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.Deterministic.{cents, epochS}
+    Tables.orders(spark, dir)
+      .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
+      .select(col("o_orderpriority").as("pri"),
+        (epochS(col("o_orderdate")) / 86400).cast("long").as("day"),
+        cents(col("o_totalprice")).as("vc"))
+      .groupBy(col("pri"), col("day")).agg(sum(col("vc")).as("vc"))
+  }
+
+  /** [[dailyRevenue]] on the full 5×365-row (priority, 1995 day) spine:
+    * `(pri, day, vc)`, vc NULL on a day without orders. q199 fills the
+    * gaps by interpolation, q201 with zeros. */
+  private[queries] def dailyOnSpine(spark: SparkSession, dir: String): DataFrame = {
+    val daily = dailyRevenue(spark, dir)
+    val spine = Tables.orders(spark, dir)
+      .select(col("o_orderpriority").as("pri")).distinct()
+      .select(col("pri"), explode(sequence(lit(9131L), lit(9495L))).as("day"))
+    spine.join(daily, Seq("pri", "day"), "left")
+  }
+
   /** Linear-interpolation gap fill — the series-repair step between
     * q99's zero-fill (wrong for level metrics) and a model-based
     * imputer: missing days in a per-priority daily revenue series get
@@ -238,20 +262,10 @@ object IntervalQueries extends QueryGroup {
   private val q199 = QueryDef(
     "q199_linear_interpolation",
     (spark, dir) => {
-      import graft.functions.Deterministic.{cents, epochS}
-      val daily = Tables.orders(spark, dir)
-        .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
-        .select(col("o_orderpriority").as("pri"),
-          (epochS(col("o_orderdate")) / 86400).cast("long").as("day"),
-          cents(col("o_totalprice")).as("vc"))
-        .groupBy(col("pri"), col("day")).agg(sum(col("vc")).as("vc"))
-      val spine = Tables.orders(spark, dir)
-        .select(col("o_orderpriority").as("pri")).distinct()
-        .select(col("pri"), explode(sequence(lit(9131L), lit(9495L))).as("day"))
       val base = Window.partitionBy(col("pri")).orderBy(col("day"))
       val prevW = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val nextW = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      spine.join(daily, Seq("pri", "day"), "left")
+      dailyOnSpine(spark, dir)
         .withColumn("v_lo", last(col("vc"), ignoreNulls = true).over(prevW))
         .withColumn("d_lo", max(when(col("vc").isNotNull, col("day"))).over(prevW))
         .withColumn("v_hi", first(col("vc"), ignoreNulls = true).over(nextW))

@@ -521,26 +521,13 @@ object ModelQueries extends QueryGroup {
     * divided equally across ALL views in the preceding hour — integer
     * floor share per touch, remainder to the first touch so credit is
     * conserved exactly (the q85 first-touch / q105 U-shape family's
-    * third member). Same hour-bucket equi-join shape as q85: a purchase
+    * third member). The hour-bucket equi-join is
+    * [[AuditQueries.viewTouches]], shared with q85 and q105: a purchase
     * joins at most two buckets of the user's views, never full history. */
   private val q278 = QueryDef(
     "q278_linear_attribution",
     (spark, dir) => {
-      import graft.functions.Deterministic.{cents, epochS}
-      val ev = Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          epochS(col("ts")).as("ts_s"), cents(col("value")).as("vc"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .withColumn("p_bucket", expr("ts_s div 3600"))
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts_s").as("p_ts"), col("vc"),
-          explode(array(col("p_bucket") - 1, col("p_bucket"))).as("bucket"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("ts_s").as("v_ts"), expr("ts_s div 3600").as("bucket"))
-      purchases
-        .join(views, Seq("user_id", "bucket"))
-        .filter(col("v_ts") <= col("p_ts") && col("v_ts") > col("p_ts") - 3600)
+      AuditQueries.viewTouches(spark, dir)
         .groupBy(col("user_id"), col("purchase_id"), col("vc"))
         .agg(count(lit(1)).as("n_touches"),
           min(struct(col("v_ts"), col("view_id"))).as("first"))

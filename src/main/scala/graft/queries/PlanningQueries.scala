@@ -618,18 +618,8 @@ object PlanningQueries extends QueryGroup {
   private val q201 = QueryDef(
     "q201_forecast_backtest",
     (spark, dir) => {
-      import graft.functions.Deterministic.{cents, epochS}
-      val daily = Tables.orders(spark, dir)
-        .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
-        .select(col("o_orderpriority").as("pri"),
-          (epochS(col("o_orderdate")) / 86400).cast("long").as("day"),
-          cents(col("o_totalprice")).as("vc"))
-        .groupBy(col("pri"), col("day")).agg(sum(col("vc")).as("vc"))
-      val spine = Tables.orders(spark, dir)
-        .select(col("o_orderpriority").as("pri")).distinct()
-        .select(col("pri"), explode(sequence(lit(9131L), lit(9495L))).as("day"))
       val w = Window.partitionBy(col("pri")).orderBy(col("day"))
-      spine.join(daily, Seq("pri", "day"), "left")
+      IntervalQueries.dailyOnSpine(spark, dir)
         .withColumn("v", coalesce(col("vc"), lit(0L)))
         .withColumn("f1", lag(col("v"), 1).over(w))
         .withColumn("f7", lag(col("v"), 7).over(w))

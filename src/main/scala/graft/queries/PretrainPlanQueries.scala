@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -546,6 +546,32 @@ object PretrainPlanQueries extends QueryGroup {
       FROM cov GROUP BY l, s ORDER BY l
     """))
 
+  /** Per source, how many word transitions a bigram-argmax draft model
+    * predicts: `(source, n_transitions, n_accepted)`. The draft is the
+    * most frequent next token per head over the whole corpus;
+    * transitions ship as md5 digest pairs (never text), the draft table
+    * is vocabulary-sized (one rank per head), and one digest-keyed join
+    * scores every transition. q483 prices a 4-token draft with it,
+    * q549 sweeps the draft length. */
+  private[queries] def draftAcceptance(spark: SparkSession, dir: String): DataFrame = {
+    val trans = Tables.documents(spark, dir)
+      .select(col("source"), expr("filter(split(text, ' '), t -> t != '')").as("tk"))
+      .filter(size(col("tk")) >= 2)
+      .select(col("source"), explode(expr(
+        "transform(sequence(1, size(tk) - 1), " +
+          "i -> named_struct('h', tk[i - 1], 'n', tk[i]))")).as("p"))
+      .select(col("source"), md5(col("p.h")).as("h"), md5(col("p.n")).as("n"))
+    val draft = trans.groupBy(col("h"), col("n")).agg(count(lit(1)).as("c"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("h")).orderBy(col("c").desc, col("n"))))
+      .filter(col("rk") === 1)
+      .select(col("h"), col("n").as("n_star"))
+    trans.join(draft, Seq("h"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_transitions"),
+        sum(when(col("n") === col("n_star"), 1L).otherwise(0L)).as("n_accepted"))
+  }
+
   // ---------------------------------------------------------------- q483
 
   /** Speculative-decoding acceptance estimate: with a bigram-argmax
@@ -563,22 +589,7 @@ object PretrainPlanQueries extends QueryGroup {
   private val q483 = QueryDef(
     "q483_speculative_acceptance",
     (spark, dir) => {
-      val trans = Tables.documents(spark, dir)
-        .select(col("source"), expr("filter(split(text, ' '), t -> t != '')").as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("source"), explode(expr(
-          "transform(sequence(1, size(tk) - 1), " +
-            "i -> named_struct('h', tk[i - 1], 'n', tk[i]))")).as("p"))
-        .select(col("source"), md5(col("p.h")).as("h"), md5(col("p.n")).as("n"))
-      val draft = trans.groupBy(col("h"), col("n")).agg(count(lit(1)).as("c"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("h")).orderBy(col("c").desc, col("n"))))
-        .filter(col("rk") === 1)
-        .select(col("h"), col("n").as("n_star"))
-      trans.join(draft, Seq("h"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_transitions"),
-          sum(when(col("n") === col("n_star"), 1L).otherwise(0L)).as("n_accepted"))
+      draftAcceptance(spark, dir)
         .select(col("source"), col("n_transitions"), col("n_accepted"),
           expr("n_accepted * 1000000 div n_transitions").as("acc_ppm"))
         .select(col("source"), col("n_transitions"), col("n_accepted"), col("acc_ppm"),
@@ -1446,23 +1457,7 @@ object PretrainPlanQueries extends QueryGroup {
   private val q495 = QueryDef(
     "q495_ann_routing_margin",
     (spark, dir) => {
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
-            .as("qv"))
-        .withColumn("nsq", expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
-        .filter(col("nsq") > 0L)
-      val queryIds = vecs
-        .agg(graft.functions.TopKAggregate.topk_pairs(
-          -graft.operators.Sampling.keyHash(col("vec_id")).cast("double"),
-          col("vec_id"), 64).as("top"))
-        .select(explode(col("top")).as("t"))
-        .select(col("t").getField("id").as("q_id"))
-      val queries = vecs.join(broadcast(queryIds), col("vec_id") === col("q_id"))
-        .select(col("q_id"), col("qv").as("q_qv"), col("nsq").as("q_nsq"))
-      vecs.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("dot",
-          expr("aggregate(zip_with(qv, q_qv, (a, b) -> a * b), 0L, (a, x) -> a + x)"))
+      QuantQueries.panelDots(spark, dir, labeled = false)
         .withColumn("cos_milli", expr(
           "CAST(floor(CAST(dot AS DOUBLE) / sqrt(CAST(nsq AS DOUBLE) * CAST(q_nsq AS DOUBLE)) * 1000 + 0.5) AS BIGINT)"))
         .groupBy(col("q_id"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -9,6 +10,25 @@ import graft.Tables
   * distance-preserving enough for recall@k).
   */
 object QuantQueries extends QueryGroup {
+
+  /** The embeddings with the per-dimension affine int8 codebook beside
+    * each row: `mns` and `mxs`, the min and max of every dimension over
+    * the corpus. The dim-keyed partial aggregate collapses the exploded
+    * (dim, value) rows before the shuffle, and the one-row codebook
+    * broadcasts back onto the corpus scan. q102 encodes with it, q256
+    * measures the round trip. */
+  private def withCodebook(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    val stats = emb
+      .select(posexplode(col("embedding")).as(Seq("dim", "v")))
+      .groupBy(col("dim"))
+      .agg(min(col("v").cast("double")).as("mn"), max(col("v").cast("double")).as("mx"))
+      .agg(sort_array(collect_list(struct(col("dim"), col("mn")))).as("amn"),
+        sort_array(collect_list(struct(col("dim"), col("mx")))).as("amx"))
+      .select(expr("transform(amn, x -> x.mn)").as("mns"),
+        expr("transform(amx, x -> x.mx)").as("mxs"))
+    emb.crossJoin(broadcast(stats))
+  }
 
   /** Int8 scalar quantization of the embedding corpus: per-dimension
     * [min, max] over the corpus define each dimension's affine code
@@ -29,17 +49,7 @@ object QuantQueries extends QueryGroup {
   private val q102 = QueryDef(
     "q102_int8_quantization",
     (spark, dir) => {
-      val emb = Tables.embeddings(spark, dir)
-      val stats = emb
-        .select(posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("dim"))
-        .agg(min(col("v").cast("double")).as("mn"), max(col("v").cast("double")).as("mx"))
-        .agg(sort_array(collect_list(struct(col("dim"), col("mn")))).as("amn"),
-          sort_array(collect_list(struct(col("dim"), col("mx")))).as("amx"))
-        .select(expr("transform(amn, x -> x.mn)").as("mns"),
-          expr("transform(amx, x -> x.mx)").as("mxs"))
-      emb
-        .crossJoin(broadcast(stats))
+      withCodebook(spark, dir)
         .select(col("vec_id"), expr("""
           transform(sequence(1, size(embedding)), i ->
             CASE WHEN mxs[i-1] = mns[i-1] THEN 0L
@@ -284,6 +294,36 @@ object QuantQueries extends QueryGroup {
       FROM s ORDER BY label
     """))
 
+  /** Every (corpus vector, panel query) pair of the fixed 64-query
+    * panel (the hash-smallest vec_ids, the same queries at every scale
+    * factor) with the integer dot of their 512-quantized embeddings:
+    * (vec_id, qv, nsq, q_id, q_qv, q_nsq, dot), plus `label` and
+    * `q_label` when `labeled`. Zero vectors drop out. The panel is a
+    * fixed budget broadcast onto one corpus scan, never a pairwise
+    * corpus join. The retrieval evaluations (q235 MAP@10, q373 DCG@10,
+    * q495 routing margin) each take a bounded top-k per query of it. */
+  private[queries] def panelDots(spark: SparkSession, dir: String, labeled: Boolean): DataFrame = {
+    val label = if (labeled) Seq(col("label").cast("long").as("label")) else Nil
+    val qLabel = if (labeled) Seq(col("label").as("q_label")) else Nil
+    val vecs = Tables.embeddings(spark, dir)
+      .select(Seq(col("vec_id")) ++ label ++ Seq(
+        expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
+          .as("qv")): _*)
+      .withColumn("nsq", expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
+      .filter(col("nsq") > 0L)
+    val queryIds = vecs
+      .agg(graft.functions.TopKAggregate.topk_pairs(
+        -graft.operators.Sampling.keyHash(col("vec_id")).cast("double"),
+        col("vec_id"), 64).as("top"))
+      .select(explode(col("top")).as("t"))
+      .select(col("t").getField("id").as("q_id"))
+    val queries = vecs.join(broadcast(queryIds), col("vec_id") === col("q_id"))
+      .select(Seq(col("q_id")) ++ qLabel ++ Seq(col("qv").as("q_qv"), col("nsq").as("q_nsq")): _*)
+    vecs.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("dot",
+        expr("aggregate(zip_with(qv, q_qv, (a, b) -> a * b), 0L, (a, x) -> a + x)"))
+  }
+
   /** Retrieval-quality audit: mean-average-precision@10 of label-match
     * retrieval over a fixed 64-query panel (the hash-smallest vec_ids
     * — the same queries at every scale factor). For each query, the
@@ -306,24 +346,7 @@ object QuantQueries extends QueryGroup {
   private val q235 = QueryDef(
     "q235_map_at_10",
     (spark, dir) => {
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))")
-            .as("qv"))
-        .withColumn("nsq", expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
-        .filter(col("nsq") > 0L)
-      val queryIds = vecs
-        .agg(graft.functions.TopKAggregate.topk_pairs(
-          -graft.operators.Sampling.keyHash(col("vec_id")).cast("double"),
-          col("vec_id"), 64).as("top"))
-        .select(explode(col("top")).as("t"))
-        .select(col("t").getField("id").as("q_id"))
-      val queries = vecs.join(broadcast(queryIds), col("vec_id") === col("q_id"))
-        .select(col("q_id"), col("label").as("q_label"),
-          col("qv").as("q_qv"), col("nsq").as("q_nsq"))
-      vecs.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("dot",
-          expr("aggregate(zip_with(qv, q_qv, (a, b) -> a * b), 0L, (a, x) -> a + x)"))
+      panelDots(spark, dir, labeled = true)
         .withColumn("cosine", col("dot").cast("double") /
           sqrt(col("nsq").cast("double") * col("q_nsq").cast("double")))
         .withColumn("rel", when(col("label") === col("q_label"), 1L).otherwise(0L))
@@ -544,20 +567,12 @@ object QuantQueries extends QueryGroup {
     * counted apart.
     *
     * Scale shape: the 64-dim min/max codebook broadcasts back onto one
-    * scan (q102's pattern); the histogram is a ≤12-cell hash agg. */
+    * scan ([[withCodebook]], shared with q102); the histogram is a
+    * ≤12-cell hash agg. */
   private val q256 = QueryDef(
     "q256_int8_roundtrip_error",
     (spark, dir) => {
-      val emb = Tables.embeddings(spark, dir)
-      val stats = emb
-        .select(posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("dim"))
-        .agg(min(col("v").cast("double")).as("mn"), max(col("v").cast("double")).as("mx"))
-        .agg(sort_array(collect_list(struct(col("dim"), col("mn")))).as("amn"),
-          sort_array(collect_list(struct(col("dim"), col("mx")))).as("amx"))
-        .select(expr("transform(amn, x -> x.mn)").as("mns"),
-          expr("transform(amx, x -> x.mx)").as("mxs"))
-      emb.crossJoin(broadcast(stats))
+      withCodebook(spark, dir)
         .select(posexplode(col("embedding")).as(Seq("d", "v")),
           col("mns"), col("mxs"))
         .select(col("v").cast("double").as("v"),

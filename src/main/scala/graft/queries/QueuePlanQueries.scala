@@ -22,26 +22,14 @@ object QueuePlanQueries extends QueryGroup {
     * {4, 8, 12} plus the smallest s with P(wait) ≤ 20% (an unstable
     * system, a ≥ s, pins C at 10⁶: everyone waits, the queue diverges).
     *
-    * Scale shape: q560's shape exactly — events fold to 24 hour-of-day
-    * rows, the 12-step recursion is a codegen'd column chain, no joins
-    * or windows. Fixed point: num = s·B·10⁸ ≤ 1.2 × 10¹⁵; den ≥ 1 by
+    * Scale shape: [[CensusPlanQueries.erlangB]], as q560 — events fold
+    * to 24 hour-of-day rows, the 12-step recursion is a codegen'd column
+    * chain, no joins or windows. Fixed point: num = s·B·10⁸ ≤ 1.2 × 10¹⁵; den ≥ 1 by
     * the stability guard. */
   private val q608 = QueryDef(
     "q608_erlang_c_staffing",
     (spark, dir) => {
-      import graft.functions.Deterministic.epochS
-      val perHour = Tables.events(spark, dir)
-        .select(epochS(col("ts")).as("es"))
-        .select(expr("es div 3600 % 24").as("hod"), expr("es div 86400").as("day"))
-        .groupBy(col("hod"))
-        .agg(count(lit(1)).as("arrivals"), countDistinct(col("day")).as("n_days"))
-        .withColumn("a_centi", expr("arrivals * 100 div (n_days * 6)"))
-      var df = perHour
-      for (c <- 1 to 12) {
-        val prev = if (c == 1) "CAST(1000000 AS BIGINT)" else s"b${c - 1}"
-        df = df.withColumn(s"b$c",
-          expr(s"(1000000 * a_centi * $prev) div ($c * 100000000 + a_centi * $prev)"))
-      }
+      var df = CensusPlanQueries.erlangB(spark, dir)
       for (c <- Seq(4, 8, 12))
         df = df.withColumn(s"c$c", expr(
           s"""CASE WHEN a_centi >= $c * 100 THEN 1000000

@@ -63,23 +63,7 @@ object RampPlanQueries extends QueryGroup {
       val spark0 = spark
       import spark0.implicits._
       val crit = holmCrit.toDF("rank", "crit_ppm")
-      val li = Tables.lineitem(spark, dir)
-        .join(broadcast(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      val cells = li.groupBy(col("p_brand"))
-        .agg(sum(col("y")).as("a"), sum(lit(1L) - col("y")).as("b"))
-      val tot = cells.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
-      val stats = cells.crossJoin(broadcast(tot))
-        .withColumn("c", col("ta") - col("a"))
-        .withColumn("d", col("tb") - col("b"))
-        .withColumn("stat_ppm", expr("""
-          CAST(CAST((ta + tb) AS DECIMAL(38,0))
-            * (CAST(a * d - b * c AS DECIMAL(38,0)) * (a * d - b * c)) * 1000000
-          div (CAST((a + b) * (c + d) AS DECIMAL(38,0)) * (a + c) * (b + d))
-          AS BIGINT)"""))
+      val stats = RetrievalQueries.brandChiSquare(spark, dir)
         .withColumn("rank", row_number().over(
           Window.orderBy(col("stat_ppm").desc, col("p_brand"))).cast("long"))
       val judged = stats.join(broadcast(crit), Seq("rank"))

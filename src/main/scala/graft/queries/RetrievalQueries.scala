@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -99,7 +100,43 @@ object RetrievalQueries extends QueryGroup {
       LIMIT 10
     """))
 
+  /** Each brand's 2×2 return-rate table against the rest of the
+    * corpus, (p_brand, a, b, ta, tb, c, d), with its exact χ² statistic
+    * `stat_ppm` = N·(ad−bc)²·10⁶ / ((a+b)(c+d)(a+c)(b+d)): one lineitem
+    * scan folds to 25 brand cells, the totals are a one-row broadcast.
+    * The multiple-testing queries (q417 BH, q628 BY vs BH, q664 Holm)
+    * rank it. */
+  private[queries] def brandChiSquare(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.lineitem(spark, dir)
+      .join(broadcast(Tables.part(spark, dir)
+        .select(col("p_partkey"), col("p_brand"))),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("p_brand"),
+        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val cells = li.groupBy(col("p_brand"))
+      .agg(sum(col("y")).as("a"), sum(lit(1L) - col("y")).as("b"))
+    val tot = cells.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
+    cells.crossJoin(broadcast(tot))
+      .withColumn("c", col("ta") - col("a"))
+      .withColumn("d", col("tb") - col("b"))
+      // N·(ad−bc)²·10⁶ / ((a+b)(c+d)(a+c)(b+d)), exact in decimal(38,0)
+      .withColumn("stat_ppm", expr("""
+        CAST(CAST((ta + tb) AS DECIMAL(38,0))
+          * (CAST(a * d - b * c AS DECIMAL(38,0)) * (a * d - b * c))
+          * 1000000
+        div (CAST((a + b) * (c + d) AS DECIMAL(38,0)) * (a + c) * (b + d))
+        AS BIGINT)"""))
+  }
+
   // ---------------------------------------------------------------- q417
+
+  /** chi2(1) icdf(1 − 0.05·k/25) in ppm, k = 1..25 (precomputed from the
+    * standard normal quantile; public constants). */
+  private val bhPpm = Seq(9549535L, 8283814L, 7550302L, 7033474L, 6634896L,
+    6310869L, 6038143L, 5802874L, 5596149L, 5411894L, 5245785L,
+    5094632L, 4956018L, 4828067L, 4709292L, 4598496L, 4494703L,
+    4397104L, 4305022L, 4217884L, 4135204L, 4056561L, 3981594L,
+    3909985L, 3841458L)
 
   /** Benjamini–Hochberg FDR control (α = 0.05) over 25 simultaneous
     * hypotheses: each brand's 2×2 chi-square for "return rate differs
@@ -116,34 +153,9 @@ object RetrievalQueries extends QueryGroup {
   private val q417 = QueryDef(
     "q417_bh_fdr_control",
     (spark, dir) => {
-      // chi2(1) icdf(1 − 0.05·k/25) in ppm, k = 1..25 (precomputed from
-      // the standard normal quantile; public constants)
-      val tppm = Seq(9549535L, 8283814L, 7550302L, 7033474L, 6634896L,
-        6310869L, 6038143L, 5802874L, 5596149L, 5411894L, 5245785L,
-        5094632L, 4956018L, 4828067L, 4709292L, 4598496L, 4494703L,
-        4397104L, 4305022L, 4217884L, 4135204L, 4056561L, 3981594L,
-        3909985L, 3841458L)
       val th = spark.range(1, 26).select(col("id").as("rk"),
-        element_at(array(tppm.map(lit): _*), col("id").cast("int")).as("t_ppm"))
-      val li = Tables.lineitem(spark, dir)
-        .join(broadcast(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      val cells = li.groupBy(col("p_brand"))
-        .agg(sum(col("y")).as("a"), sum(lit(1L) - col("y")).as("b"))
-      val tot = cells.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
-      val stats = cells.crossJoin(broadcast(tot))
-        .withColumn("c", col("ta") - col("a"))
-        .withColumn("d", col("tb") - col("b"))
-        // N·(ad−bc)²·10⁶ / ((a+b)(c+d)(a+c)(b+d)), exact in decimal(38,0)
-        .withColumn("stat_ppm", expr("""
-          CAST(CAST((ta + tb) AS DECIMAL(38,0))
-            * (CAST(a * d - b * c AS DECIMAL(38,0)) * (a * d - b * c))
-            * 1000000
-          div (CAST((a + b) * (c + d) AS DECIMAL(38,0)) * (a + c) * (b + d))
-          AS BIGINT)"""))
+        element_at(array(bhPpm.map(lit): _*), col("id").cast("int")).as("t_ppm"))
+      val stats = brandChiSquare(spark, dir)
         .withColumn("rate_ppm", expr("a * 1000000 div (a + b)"))
         .withColumn("rk", row_number().over(
           Window.orderBy(col("stat_ppm").desc, col("p_brand"))))
@@ -158,11 +170,7 @@ object RetrievalQueries extends QueryGroup {
         .orderBy(col("rank"))
     },
     Some {
-      val values = Seq(9549535L, 8283814L, 7550302L, 7033474L, 6634896L,
-        6310869L, 6038143L, 5802874L, 5596149L, 5411894L, 5245785L,
-        5094632L, 4956018L, 4828067L, 4709292L, 4598496L, 4494703L,
-        4397104L, 4305022L, 4217884L, 4135204L, 4056561L, 3981594L,
-        3909985L, 3841458L).zipWithIndex
+      val values = bhPpm.zipWithIndex
         .map { case (t, i) => s"(${i + 1}, ${t})" }.mkString(", ")
       s"""
       WITH th(rk, t_ppm) AS (VALUES $values),
@@ -218,16 +226,7 @@ object RetrievalQueries extends QueryGroup {
     "q418_kmv_containment",
     (spark, dir) => {
       import graft.functions.KmvSketch.{kmv_bottom_k, kmv_estimate}
-      val dh = Tables.documents(spark, dir)
-        .select(col("source"), tokens_native(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("source"), explode(expr(
-          "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
-          .as("bg"))
-        .select(col("source"),
-          graft.operators.Sampling.keyHash(
-            graft.functions.expressions.poly_hash(col("bg"))).as("h"))
-        .distinct()
+      val dh = CorpusQueries.bigramHashes(spark, dir).distinct()
       val sk = dh.groupBy(col("source"))
         .agg(kmv_bottom_k(col("h"), 64).as("sketch"))
       val pairs = sk.select(col("source").as("src_a"), col("sketch").as("ska"))

@@ -15,54 +15,39 @@ object SequentialTestPlanQueries extends QueryGroup {
 
   // ---------------------------------------------------------------- q628
 
+  // chi2(1) icdf ppm at alpha*k/25 (BH) and alpha*k/(25*H25) (BY),
+  // alpha = 0.05, k = 1..25 — public constants via the normal icdf
+  private val bhPpm = Seq(9549536L, 8283815L, 7550303L, 7033475L, 6634897L,
+    6310870L, 6038144L, 5802875L, 5596150L, 5411895L, 5245786L,
+    5094633L, 4956019L, 4828068L, 4709293L, 4598497L, 4494704L,
+    4397105L, 4305023L, 4217885L, 4135205L, 4056562L, 3981595L,
+    3909986L, 3841459L)
+  private val byPpm = Seq(12027851L, 10740377L, 9991852L, 9463105L, 9054442L,
+    8721560L, 8440872L, 8198321L, 7984853L, 7794294L, 7622247L,
+    7465465L, 7321490L, 7188408L, 7064706L, 6949165L, 6840788L,
+    6738751L, 6642362L, 6551039L, 6464282L, 6381664L, 6302815L,
+    6227411L, 6155168L)
+
   /** Benjamini–Yekutieli vs BH on the same 25 brand return-rate
-    * statistics (q417's exact χ² construction): under ARBITRARY
-    * dependence BH's FDR guarantee fails, and BY restores it by
+    * statistics ([[RetrievalQueries.brandChiSquare]], q417's exact χ²
+    * construction): under ARBITRARY dependence BH's FDR guarantee
+    * fails, and BY restores it by
     * shrinking every level to α·k/(m·H_m), H₂₅ ≈ 3.816 — the χ²₁
     * critical values at both level ladders are embedded ppm constants
     * (public quantiles via the normal icdf, precomputed once). The
     * audit reports, per brand, which procedures reject — BY ⊆ BH
     * always, and the gap is the robustness premium.
     *
-    * Scale shape: q417's — one fact scan folds to 25 cells, ranking
+    * Scale shape: brandChiSquare's — one fact scan folds to 25 cells, ranking
     * and both step-ups run on the 25-row grid. */
   private val q628 = QueryDef(
     "q628_by_vs_bh_fdr",
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      // chi2(1) icdf ppm at alpha*k/25 (BH) and alpha*k/(25*H25) (BY),
-      // alpha = 0.05, k = 1..25 — public constants via the normal icdf
-      val bh = Seq(9549536L, 8283815L, 7550303L, 7033475L, 6634897L,
-        6310870L, 6038144L, 5802875L, 5596150L, 5411895L, 5245786L,
-        5094633L, 4956019L, 4828068L, 4709293L, 4598497L, 4494704L,
-        4397105L, 4305023L, 4217885L, 4135205L, 4056562L, 3981595L,
-        3909986L, 3841459L)
-      val by = Seq(12027851L, 10740377L, 9991852L, 9463105L, 9054442L,
-        8721560L, 8440872L, 8198321L, 7984853L, 7794294L, 7622247L,
-        7465465L, 7321490L, 7188408L, 7064706L, 6949165L, 6840788L,
-        6738751L, 6642362L, 6551039L, 6464282L, 6381664L, 6302815L,
-        6227411L, 6155168L)
       val th = spark.range(1, 26).select(col("id").as("rk"),
-        element_at(array(bh.map(lit): _*), col("id").cast("int")).as("t_bh"),
-        element_at(array(by.map(lit): _*), col("id").cast("int")).as("t_by"))
-      val li = Tables.lineitem(spark, dir)
-        .join(broadcast(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      val cells = li.groupBy(col("p_brand"))
-        .agg(sum(col("y")).as("a"), sum(lit(1L) - col("y")).as("b"))
-      val tot = cells.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
-      val stats = cells.crossJoin(broadcast(tot))
-        .withColumn("c", col("ta") - col("a"))
-        .withColumn("d", col("tb") - col("b"))
-        .withColumn("stat_ppm", expr("""
-          CAST(CAST((ta + tb) AS DECIMAL(38,0))
-            * (CAST(a * d - b * c AS DECIMAL(38,0)) * (a * d - b * c))
-            * 1000000
-          div (CAST((a + b) * (c + d) AS DECIMAL(38,0)) * (a + c) * (b + d))
-          AS BIGINT)"""))
+        element_at(array(bhPpm.map(lit): _*), col("id").cast("int")).as("t_bh"),
+        element_at(array(byPpm.map(lit): _*), col("id").cast("int")).as("t_by"))
+      val stats = RetrievalQueries.brandChiSquare(spark, dir)
         .withColumn("rk", row_number().over(
           Window.orderBy(col("stat_ppm").desc, col("p_brand"))))
         .join(broadcast(th), Seq("rk"))
@@ -78,21 +63,11 @@ object SequentialTestPlanQueries extends QueryGroup {
         .orderBy(col("rank"))
     },
     Some {
-      val bh = Seq(9549536L, 8283815L, 7550303L, 7033475L, 6634897L,
-        6310870L, 6038144L, 5802875L, 5596150L, 5411895L, 5245786L,
-        5094633L, 4956019L, 4828068L, 4709293L, 4598497L, 4494704L,
-        4397105L, 4305023L, 4217885L, 4135205L, 4056562L, 3981595L,
-        3909986L, 3841459L)
-      val by = Seq(12027851L, 10740377L, 9991852L, 9463105L, 9054442L,
-        8721560L, 8440872L, 8198321L, 7984853L, 7794294L, 7622247L,
-        7465465L, 7321490L, 7188408L, 7064706L, 6949165L, 6840788L,
-        6738751L, 6642362L, 6551039L, 6464282L, 6381664L, 6302815L,
-        6227411L, 6155168L)
       s"""
       WITH th AS (
         SELECT CAST(k.k AS BIGINT) AS rk,
-          CAST([${bh.mkString(", ")}][CAST(k.k AS INTEGER)] AS BIGINT) AS t_bh,
-          CAST([${by.mkString(", ")}][CAST(k.k AS INTEGER)] AS BIGINT) AS t_by
+          CAST([${bhPpm.mkString(", ")}][CAST(k.k AS INTEGER)] AS BIGINT) AS t_bh,
+          CAST([${byPpm.mkString(", ")}][CAST(k.k AS INTEGER)] AS BIGINT) AS t_by
         FROM (SELECT unnest(range(1, 26)) AS k) k),
       li AS (
         SELECT p_brand, CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y

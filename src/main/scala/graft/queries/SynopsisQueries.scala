@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.cents
-import graft.functions.expressions.tokens_native
 
 /** Round-4 synopsis/signal operators: HyperLogLog register sketching
   * (baked off against KMV and exact counts), Haar wavelet synopsis of
@@ -38,15 +37,7 @@ object SynopsisQueries extends QueryGroup {
     "q419_hll_register_sketch",
     (spark, dir) => {
       import graft.functions.KmvSketch.{kmv_bottom_k, kmv_estimate}
-      val hs = Tables.documents(spark, dir)
-        .select(col("source"), tokens_native(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("source"), explode(expr(
-          "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
-          .as("bg"))
-        .select(col("source"),
-          graft.operators.Sampling.keyHash(
-            graft.functions.expressions.poly_hash(col("bg"))).as("h"))
+      val hs = CorpusQueries.bigramHashes(spark, dir)
       val regs = hs
         .select(col("source"), expr("h div 67108864").as("bucket"),
           expr(s"CASE WHEN h % 67108864 = 0 THEN 27 " +

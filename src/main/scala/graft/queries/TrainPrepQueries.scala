@@ -111,28 +111,14 @@ object TrainPrepQueries extends QueryGroup {
     * all in exact integer cents with an explicit remainder column so
     * credit conservation (first+last+mid·n+rem = value) is auditable.
     *
-    * Scale shape: same coarse-hour-bucket equi-join as first-touch
-    * attribution (q85) — purchases meet only views from their own or
-    * the previous hour bucket, never a user's full history — then one
-    * hash aggregation per purchase. */
+    * Scale shape: [[AuditQueries.viewTouches]], the coarse-hour-bucket
+    * equi-join first-touch attribution (q85) runs — purchases meet only
+    * views from their own or the previous hour bucket, never a user's
+    * full history — then one hash aggregation per purchase. */
   private val q105 = QueryDef(
     "q105_position_attribution",
     (spark, dir) => {
-      import graft.functions.Deterministic.epochS
-      val ev = Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          epochS(col("ts")).as("ts_s"), cents(col("value")).as("vc"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .withColumn("p_bucket", expr("ts_s div 3600"))
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts_s").as("p_ts"), col("vc"),
-          explode(array(col("p_bucket") - 1, col("p_bucket"))).as("bucket"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("ts_s").as("v_ts"), expr("ts_s div 3600").as("bucket"))
-      purchases
-        .join(views, Seq("user_id", "bucket"))
-        .filter(col("v_ts") <= col("p_ts") && col("v_ts") > col("p_ts") - 3600)
+      AuditQueries.viewTouches(spark, dir)
         .groupBy(col("user_id"), col("purchase_id"), col("vc"))
         .agg(
           count(lit(1)).as("n_touch"),

@@ -58,11 +58,6 @@ object FileSources {
       df.filter(org.apache.spark.sql.functions.col("length") <= mb))
   }
 
-  /** Streaming file source: picks up files dropped into `path` (the
-    * no-broker substitute for the Kafka source in offline environments). */
-  def streamJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(path)
-
   /** Hive-style partitioned parquet layout: one directory per value of
     * `partCol`. The repartition-on-key before the write gives ONE file
     * per partition value instead of numShufflePartitions × values small

@@ -76,6 +76,35 @@ class DedupSpec extends SparkSpec {
     assert(roomy === Set((0L, 1L), (0L, 3L), (1L, 3L))) // cap ≥ block size: unchanged
   }
 
+  test("ngram containment: a quote is contained one way; block cap and " +
+    "either-direction threshold hold") {
+    import spark.implicits._
+    val quote = base.take(60) // shares base's 24-char prefix
+    val other = "an entirely separate opening line that starts its own block"
+    val docs = Seq((10L, base), (11L, quote), (12L, nearDup),
+      (20L, other), (21L, other + " and then runs on a little longer"))
+      .toDF("doc_id", "text")
+    def pairs(cap: Option[Int], minContainment: Double) =
+      Dedup.containmentPairs(docs, "doc_id", "text", n = 3, prefixLen = 24,
+        minContainment = minContainment, maxBlockSize = cap)
+        .select("doc_a", "doc_b", "containment_a_in_b", "containment_b_in_a")
+        .as[(Long, Long, Double, Double)].collect()
+        .map { case (a, b, ab, ba) => (a, b) -> (ab, ba) }.toMap
+    val all = pairs(None, 0.0)
+    assert(all.keySet === Set((10L, 11L), (10L, 12L), (11L, 12L), (20L, 21L)))
+    // the quote's grams all occur in base, not the other way round
+    val (baseInQuote, quoteInBase) = all((10L, 11L))
+    assert(quoteInBase === 1.0)
+    assert(baseInQuote < 0.7)
+    // block {10, 11, 12} exceeds a cap of 2 and goes; block {20, 21} stays
+    assert(pairs(Some(2), 0.0).keySet === Set((20L, 21L)))
+    // a pair stays when EITHER direction clears the bar: (10, 11) only
+    // through quote-in-base; (10, 12) clears it in neither direction
+    val (ab, ba) = all((10L, 12L))
+    assert(ab < 0.95 && ba < 0.95)
+    assert(pairs(None, 0.95).keySet === Set((10L, 11L), (11L, 12L), (20L, 21L)))
+  }
+
   test("connected components: transitive chains merge, disjoint clusters don't") {
     import spark.implicits._
     // chain 1-2, 2-3 merges transitively (1-3 never paired directly);

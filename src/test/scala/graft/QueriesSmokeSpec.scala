@@ -84,6 +84,37 @@ class QueriesSmokeSpec extends SparkSpec {
       s"expected exactly ${allowed.values.mkString(" and ")}, found ${found.map(_._3)}")
   }
 
+  test("source lint: no 8 consecutive code lines repeat in src/main/scala (a " +
+    "pipeline two queries share is one builder both call)") {
+    import scala.jdk.CollectionConverters._
+    val window = 8
+    // SQL text is blanked (line count kept); comments, imports, blank
+    // lines, lines opening with a closing or opening bracket, and lines
+    // of 3 characters or fewer are no code lines; whitespace collapses
+    val tripleQuoted = "(?s)\"\"\".*?\"\"\"".r
+    val skipped = Seq("//", "*", "/**", "import", "}", "{", ")")
+    val codeLines = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .map { p =>
+        val text = tripleQuoted.replaceAllIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"),
+          m => "\n" * m.matched.count(_ == '\n'))
+        p -> text.split("\n", -1).toSeq.zipWithIndex
+          .map { case (l, i) => (l.trim, i + 1) }
+          .filter { case (l, _) => l.length > 3 && !skipped.exists(l.startsWith) }
+          .map { case (l, i) => (l.split("\\s+").mkString(" "), i) }
+      }
+    val at = scala.collection.mutable.LinkedHashMap[Seq[String], Vector[String]]()
+    for ((p, lines) <- codeLines; k <- 0 to lines.length - window) {
+      val key = lines.slice(k, k + window).map(_._1)
+      at(key) = at.getOrElse(key, Vector.empty) :+ s"$p:${lines(k)._2}"
+    }
+    val repeats = at.values.filter(_.size > 1).toSeq
+    if (repeats.nonEmpty) fail(s"${repeats.size} windows of $window code lines repeat; " +
+      "fold each into one builder its queries call: " +
+      repeats.take(10).map(_.mkString(" = ")).mkString("; "))
+  }
+
   test("every query has oracle SQL or is explicitly rows-only") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle: $missing")
