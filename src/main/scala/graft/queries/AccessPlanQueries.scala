@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 10: access-path and sampling-path audits —
   * length-biased sampling correction, posting-list intersection
@@ -133,11 +134,10 @@ object AccessPlanQueries extends QueryGroup {
             "* 1000000 div count(1)").as("gallop_wins_ppm"))
         .orderBy(col("ratio_bin"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
         SELECT doc_id,
-          unnest(list_distinct(list_filter(str_split(text, ' '),
-            t -> len(t) > 0))) AS term
+          unnest(list_distinct($duckTokens)) AS term
         FROM documents),
       df AS (SELECT term, CAST(count(*) AS BIGINT) AS dfreq
              FROM tk GROUP BY term),
@@ -204,10 +204,10 @@ object AccessPlanQueries extends QueryGroup {
           coalesce(col("in_dot_top10"), lit(0L)).as("in_dot_top10"))
         .orderBy(col("maxsim_q").desc, col("vec_id"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT)) AS v
+          $duckQuantVec AS v
         FROM embeddings),
       q AS (SELECT v AS qvec, label AS qlabel FROM base WHERE vec_id = 0),
       scored AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Skew
+import graft.queries.SqlMacros._
 import graft.similarity.{Ivf, Knn}
 
 /** Scale-path operators: the SQL entry point, IVF approximate nearest
@@ -52,9 +53,9 @@ object AdvancedQueries extends QueryGroup {
       Ivf.probeTopK(assignments, centroids, queryId = 0L, k = 10, nprobe = 2)
         .withColumnRenamed("id", "vec_id")
     },
-    Some("""
+    Some(s"""
       WITH base AS (
-        SELECT vec_id AS id, list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+        SELECT vec_id AS id, $duckQuantVec AS qv
         FROM embeddings),
       dims AS (SELECT unnest(range(1, 65)) AS dim),
       seeded AS (SELECT id, qv, id % 8 AS cluster FROM base),
@@ -248,10 +249,10 @@ object AdvancedQueries extends QueryGroup {
           (col("n_hits") * 100000L).as("recall_ppm"))
         .orderBy(col("nprobe"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       dims AS (SELECT unnest(range(1, 65)) AS dim),
       seeded AS (SELECT id, qv, id % 8 AS cluster FROM base),
@@ -359,10 +360,10 @@ object AdvancedQueries extends QueryGroup {
           (col("n_hits") * 100000L).as("recall_ppm"))
         .orderBy(col("dims"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       dims AS (SELECT unnest([8, 16, 32, 64]) AS d),
       qrow AS (SELECT qv AS q_qv FROM base WHERE id = 0),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-7 batch 9: alignment and dataset-shift analytics — positional
   * shingle diagonal detection (contiguous copied-span evidence), BBSE
@@ -77,9 +78,9 @@ object AlignmentPlanQueries extends QueryGroup {
         .agg(count(lit(1)).as("n_pairs"), max(col("best_mass")).as("max_mass"))
         .orderBy(col("log2_mass"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT doc_id, $duckTokens AS tk
         FROM documents),
       sh AS (
         SELECT doc_id, CAST(p.i AS BIGINT) AS pos,
@@ -177,12 +178,11 @@ object AlignmentPlanQueries extends QueryGroup {
           abs(col("est_prior1_ppm") - col("true_prior1_ppm")).as("abs_err_ppm"),
           col("det_milli"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id,
           CAST(CAST(label AS BIGINT) >= 5 AS BIGINT) AS y,
-          list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv,
+          $duckQuantVec AS qv,
           (vec_id % 2147483648) * 2654435761 % 4294967296 % 2 AS half,
           (vec_id % 2147483648) * 2246822519 % 4294967296 % 10 AS h2
         FROM embeddings),
@@ -323,11 +323,10 @@ object AlignmentPlanQueries extends QueryGroup {
           expr("n_overlap * 1000000 div k").as("overlap_ppm"), col("n_labels"))
         .orderBy(col("acq"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       cd AS (
         SELECT label, d.i AS dim, CAST(sum(qv[d.i]) // count(*) AS BIGINT) AS c
@@ -420,13 +419,12 @@ object AlignmentPlanQueries extends QueryGroup {
           max(col("retention_ppm")).as("max_class_retention_ppm"))
         .orderBy(col("keep_permille"))
     },
-    Some("""
+    Some(s"""
       WITH grid(keep_permille) AS (VALUES (CAST(500 AS BIGINT)),
         (CAST(700 AS BIGINT)), (CAST(900 AS BIGINT))),
       base AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       cd AS (
         SELECT label, d.i AS dim, CAST(sum(qv[d.i]) // count(*) AS BIGINT) AS c

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-7 batch 3: training-batch planning — critical batch size from
   * the gradient-noise-scale identity, fp16 loss-scale range audit, and
@@ -188,8 +189,7 @@ object BatchPlanQueries extends QueryGroup {
     },
     Some(s"""
       WITH t AS (
-        SELECT CAST(sum(len(list_filter(str_split(text, ' '),
-            x -> len(x) > 0))) AS BIGINT) AS total_tokens
+        SELECT CAST(sum(len($duckTokens)) AS BIGINT) AS total_tokens
         FROM documents),
       p AS (
         SELECT total_tokens,

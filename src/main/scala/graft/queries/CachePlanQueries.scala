@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.epochS
+import graft.queries.SqlMacros._
 
 /** Round-8 batch 1: cache-behavior analytics — the measurements behind
   * serving-stack capacity decisions. A prefix-reuse census (the KV /
@@ -55,11 +56,11 @@ object CachePlanQueries extends QueryGroup {
           col("max_prefix_mass"))
         .orderBy(col("k"))
     },
-    Some("""
+    Some(s"""
       WITH grid(k) AS (VALUES (CAST(2 AS BIGINT)), (CAST(3 AS BIGINT)),
         (CAST(4 AS BIGINT))),
       tok AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT doc_id, $duckTokens AS tk
         FROM documents),
       pfx AS (
         SELECT k, array_to_string(list_slice(tk, 1, CAST(k AS INTEGER)), ' ')

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 4: capacity/quality analytics — Kingman's VUT queueing
   * formula from measured variability, class-balanced effective-number
@@ -247,11 +248,10 @@ object CapacityPlanQueries extends QueryGroup {
             .as("noise_estimate_ppm"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH v AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding,
-            x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, label, qv,
@@ -332,7 +332,7 @@ object CapacityPlanQueries extends QueryGroup {
       trans AS (
         SELECT source, md5(tk[i]) AS h, md5(tk[i + 1]) AS n
         FROM (SELECT source,
-                list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+                $duckTokens AS tk
               FROM documents),
           LATERAL (SELECT unnest(range(1, len(tk))) AS i) g
         WHERE len(tk) >= 2),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 16: observational-data machinery — confounded-logging
   * recovery by stratification, pooling bias in retrieval evaluation,
@@ -223,10 +224,10 @@ object CausalPlanQueries extends QueryGroup {
             .as("pool_bias_ppm"))
         .orderBy(col("system"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT)) AS v
+          $duckQuantVec AS v
         FROM embeddings),
       probes AS (SELECT vec_id AS pid, label AS plabel, v AS pv
                  FROM base WHERE vec_id < 5),

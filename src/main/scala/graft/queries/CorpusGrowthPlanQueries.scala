@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-9 batch 1: corpus-growth laws — the three readouts that tell a
   * pretraining-data owner how a corpus's vocabulary behaves as it grows,
@@ -60,10 +61,10 @@ object CorpusGrowthPlanQueries extends QueryGroup {
           expr("vocab * 1000000 div n_tokens").as("vocab_per_mtoken"))
         .orderBy(col("f8"))
     },
-    Some("""
+    Some(s"""
       WITH docs AS (
         SELECT doc_id,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+          CAST(len($duckTokens)
             AS BIGINT) AS n_tok
         FROM documents),
       mx AS (SELECT max(doc_id) + 1 AS nd FROM docs),
@@ -76,7 +77,7 @@ object CorpusGrowthPlanQueries extends QueryGroup {
         FROM docs CROSS JOIN thr WHERE doc_id < cutoff GROUP BY f8),
       tok AS (
         SELECT doc_id,
-          unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS tk
+          unnest($duckTokens) AS tk
         FROM documents),
       firsts AS (SELECT tk, min(doc_id) AS first_doc FROM tok GROUP BY tk),
       voc AS (
@@ -125,10 +126,10 @@ object CorpusGrowthPlanQueries extends QueryGroup {
             .as("r1_star_milli"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT source,
-          unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS tk
+          unnest($duckTokens) AS tk
         FROM documents),
       cnt AS (
         SELECT source, tk, CAST(count(*) AS BIGINT) AS c
@@ -179,9 +180,9 @@ object CorpusGrowthPlanQueries extends QueryGroup {
           col("min_ttr_ppm"), col("max_ttr_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH t AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT source, $duckTokens AS tk
         FROM documents),
       ttr AS (
         SELECT source,

@@ -10,6 +10,7 @@ import graft.functions.HeavyHitters.heavy_hitters
 import graft.functions.TopKAggregate.topk_pairs
 import graft.functions.expressions.tokens_native
 import graft.operators.{BloomJoin, Sampling, SnapshotDiff}
+import graft.queries.SqlMacros._
 import graft.text.TextAnalysis.qualityFeatures
 
 /** Corpus-level curation operators (round 3): the cluster/select/compact
@@ -18,18 +19,12 @@ import graft.text.TextAnalysis.qualityFeatures
   */
 object CorpusQueries extends QueryGroup {
 
-  /** The shared polynomial-hash fold, as DuckDB SQL (tok → hash). */
-  private val duckPolyHash =
-    "list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok,'')]), (h,c) -> (h*31+c) % 1000000007)"
-
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
-
   /** MinHash-LSH candidate-pair CTE chain (same arithmetic q21 verifies),
     * ending in `cand(doc_a, doc_b)`. */
   private val duckMinhashCand = s"""
       toks AS (
         SELECT doc_id, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       docs AS (
         SELECT doc_id, list_distinct([
@@ -792,7 +787,7 @@ object CorpusQueries extends QueryGroup {
     Some(s"""
       WITH base AS (
         SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       qe AS (SELECT qv AS q_qv FROM base WHERE id = 0),
       vec20 AS (
@@ -805,7 +800,7 @@ object CorpusQueries extends QueryGroup {
         QUALIFY vec_rank <= 20),
       toks AS (
         SELECT doc_id, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       tsets AS (SELECT doc_id, list_distinct(th) AS ts FROM toks),
       qt AS (SELECT ts AS q_ts FROM tsets WHERE doc_id = 0),
@@ -858,7 +853,7 @@ object CorpusQueries extends QueryGroup {
     Some(s"""
       WITH toks AS (
         SELECT doc_id, source, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       d AS (
         SELECT doc_id, source, list_distinct([
@@ -915,7 +910,7 @@ object CorpusQueries extends QueryGroup {
     Some(s"""
       WITH base AS (
         SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       qe AS (SELECT qv AS q_qv FROM base WHERE id = 0),
       vec20 AS (
@@ -928,7 +923,7 @@ object CorpusQueries extends QueryGroup {
         QUALIFY vr <= 20),
       toks AS (
         SELECT doc_id, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       tsets AS (SELECT doc_id, list_distinct(th) AS ts FROM toks),
       qt AS (SELECT ts AS q_ts FROM tsets WHERE doc_id = 0),
@@ -1121,11 +1116,10 @@ object CorpusQueries extends QueryGroup {
           expr("CAST(abs(est - n_exact) * 1000000 DIV n_exact AS BIGINT)"))
         .orderBy(col("scope"))
     },
-    Some("""
+    Some(s"""
       WITH ph AS (
         SELECT source,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(text, '')]),
-                      (h, c) -> (h * 31 + c) % 1000000007) AS p
+          ${duckPolyHashOf("text")} AS p
         FROM documents),
       h AS (
         SELECT source, ((p % 2147483648) * 2654435761) % 4294967296 AS h FROM ph),
@@ -1209,9 +1203,9 @@ object CorpusQueries extends QueryGroup {
                   DIV greatest(coalesce(exact_inter, 0), 1) AS BIGINT)""").as("err_ppm"))
         .orderBy(col("src_a"), col("src_b"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT source, $duckTokens AS tk
         FROM documents),
       bg AS (
         SELECT source,
@@ -1219,8 +1213,7 @@ object CorpusQueries extends QueryGroup {
         FROM tk WHERE len(tk) >= 2),
       ph AS (
         SELECT source,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(bg, '')]),
-                      (h, c) -> (h * 31 + c) % 1000000007) AS p
+          ${duckPolyHashOf("bg")} AS p
         FROM bg),
       dh AS (
         SELECT DISTINCT source, ((p % 2147483648) * 2654435761) % 4294967296 AS h
@@ -1480,7 +1473,7 @@ object CorpusQueries extends QueryGroup {
       d AS (
         SELECT doc_id, lang, n_chars,
           array_to_string(list_slice(
-            list_filter(str_split(text, ' '), t -> len(t) > 0), 1, 4), ' ')
+            $duckTokens, 1, 4), ' ')
             AS head4
         FROM documents),
       blocks AS (

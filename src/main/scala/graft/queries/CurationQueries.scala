@@ -6,6 +6,7 @@ import graft.Tables
 import graft.dedup.Decontaminate
 import graft.functions.Deterministic.{cents, epochS}
 import graft.operators.{Mixture, Packing, Sampling}
+import graft.queries.SqlMacros._
 import graft.text.{Redaction, TextAnalysis, TextFunctions}
 
 /** Round-3 curation batch: the privacy / contamination / assembly
@@ -15,13 +16,6 @@ import graft.text.{Redaction, TextAnalysis, TextFunctions}
   * (cohorts, decayed scores) a serving-side pipeline runs on events.
   */
 object CurationQueries extends QueryGroup {
-
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
-
-  /** The shared polynomial token hash, as DuckDB SQL (tok → hash) — the
-    * same arithmetic q21/q56 verify. */
-  private val duckPolyHash =
-    "list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok,'')]), (h,c) -> (h*31+c) % 1000000007)"
 
   /** PII redaction (graft.text.Redaction): synthesizes a free-text
     * contact field from customer (name-derived email + TPC-H phone),
@@ -250,7 +244,7 @@ object CurationQueries extends QueryGroup {
         SELECT doc_id, $duckTokens AS tk FROM documents),
       h AS (
         SELECT doc_id, len(tk) AS n_tokens, len(list_distinct(tk)) AS n_distinct,
-          list_transform(tk, tok -> $duckPolyHash) AS th
+          list_transform(tk, tok -> ${duckPolyHashOf("tok")}) AS th
         FROM t WHERE len(tk) >= 2),
       b AS (
         SELECT doc_id, n_tokens, n_distinct,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 19: decision machinery — cost-sensitive threshold
   * choice, nearest-centroid classification, and the geometric
@@ -84,8 +85,7 @@ object DecisionPlanQueries extends QueryGroup {
           CASE WHEN CAST(len(list_filter(tk, t -> t IN ($allStops)))
             AS BIGINT) * 1000 >= CAST(len(tk) AS BIGINT) * 60
             THEN 1 ELSE 0 END AS keep_truth
-        FROM (SELECT n_chars, list_filter(str_split(text, ' '),
-                t -> len(t) > 0) AS tk
+        FROM (SELECT n_chars, $duckTokens AS tk
               FROM documents)
         WHERE len(tk) >= 1),
       cells AS (
@@ -173,10 +173,10 @@ object DecisionPlanQueries extends QueryGroup {
           expr("n_hit * 1000000 div greatest(n_pred, 1)").as("precision_ppm"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT))
+          $duckQuantVec
             AS v,
           CASE WHEN ((vec_id % 2147483648) * 2654435761) % 4294967296
             >= 2147483648 THEN 1 ELSE 0 END AS is_test

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-8 batch 4: dedup POLICY analytics — once duplicates are found
   * (q20/q21/q56 territory), which copy should survive, which sources
@@ -61,10 +62,10 @@ object DedupPolicyPlanQueries extends QueryGroup {
           (col("keep_longest_chars") - col("keep_first_chars"))
             .as("chars_delta"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT doc_id, n_chars,
-          list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+          $duckTokens AS tk
         FROM documents),
       heads AS (
         SELECT doc_id, n_chars,
@@ -128,9 +129,9 @@ object DedupPolicyPlanQueries extends QueryGroup {
         .agg(count(lit(1)).as("n_shared_clusters"))
         .orderBy(col("source_a"), col("source_b"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT source, $duckTokens AS tk
         FROM documents),
       ds AS (
         SELECT DISTINCT
@@ -175,9 +176,9 @@ object DedupPolicyPlanQueries extends QueryGroup {
           max(col("c")).as("max_copies"))
         .orderBy(col("log2_copies"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
-        SELECT n_chars, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT n_chars, $duckTokens AS tk
         FROM documents),
       cl AS (
         SELECT md5(array_to_string(list_slice(tk, 1, 8), ' ')) AS digest,

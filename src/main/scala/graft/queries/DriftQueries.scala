@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 import graft.text.TextFunctions
 
 /** Round-4 distribution-drift and corpus-diversity statistics — the
@@ -19,9 +20,6 @@ import graft.text.TextFunctions
   * one fixed-order IEEE expression quantized with floor(x·10^6 + 0.5).
   */
 object DriftQueries extends QueryGroup {
-
-  /** Whitespace tokens, DuckDB spelling (parity with TextFunctions.tokens). */
-  private val duckToks = "list_filter(str_split(text, ' '), s -> len(s) > 0)"
 
   /** Per-source total-variation distance from the corpus-wide token
     * distribution: TV(s) = ½ Σ_t |n_st/T_s − N_t/T|, emitted in exact ppm
@@ -58,7 +56,7 @@ object DriftQueries extends QueryGroup {
     },
     Some(s"""
       WITH tok AS (
-        SELECT source, unnest($duckToks) AS tok FROM documents),
+        SELECT source, unnest($duckTokens) AS tok FROM documents),
       nst AS (SELECT source, tok, count(*) AS n_st FROM tok GROUP BY source, tok),
       nt AS (SELECT tok, CAST(sum(n_st) AS BIGINT) AS n_t FROM nst GROUP BY tok),
       tsrc AS (SELECT source, CAST(sum(n_st) AS BIGINT) AS t_s FROM nst GROUP BY source),
@@ -209,7 +207,7 @@ object DriftQueries extends QueryGroup {
     },
     Some(s"""
       WITH t AS (
-        SELECT doc_id, unnest($duckToks) AS tok FROM documents),
+        SELECT doc_id, unnest($duckTokens) AS tok FROM documents),
       c AS (SELECT doc_id, tok, count(*) AS n FROM t GROUP BY doc_id, tok),
       a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
               CAST(sum(n * n) AS BIGINT) AS s2
@@ -249,7 +247,7 @@ object DriftQueries extends QueryGroup {
     },
     Some(s"""
       WITH t AS (
-        SELECT unnest($duckToks) AS tok FROM documents),
+        SELECT unnest($duckTokens) AS tok FROM documents),
       f AS (SELECT tok, count(*) AS n FROM t GROUP BY tok),
       r AS (SELECT tok, n,
           row_number() OVER (ORDER BY n DESC, tok) AS top_k,
@@ -296,7 +294,7 @@ object DriftQueries extends QueryGroup {
     Some(s"""
       WITH st AS (
         SELECT DISTINCT source, tok FROM (
-          SELECT source, unnest($duckToks) AS tok FROM documents)),
+          SELECT source, unnest($duckTokens) AS tok FROM documents)),
       sizes AS (SELECT source, count(*) AS n FROM st GROUP BY source),
       inter AS (
         SELECT a.source AS s1, b.source AS s2, count(*) AS inter
@@ -339,7 +337,7 @@ object DriftQueries extends QueryGroup {
     },
     Some(s"""
       WITH t AS (
-        SELECT unnest($duckToks) AS tok FROM documents),
+        SELECT unnest($duckTokens) AS tok FROM documents),
       f AS (SELECT tok, count(*) AS n FROM t GROUP BY tok),
       tot AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM f),
       cuts AS (SELECT unnest([2, 5, 10, 100]) AS cutoff)
@@ -446,7 +444,7 @@ object DriftQueries extends QueryGroup {
     },
     Some(s"""
       WITH t AS (
-        SELECT source, unnest($duckToks) AS tok FROM documents),
+        SELECT source, unnest($duckTokens) AS tok FROM documents),
       f AS (SELECT source, tok, count(*) AS n FROM t GROUP BY 1, 2),
       s AS (
         SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens,
@@ -543,7 +541,7 @@ object DriftQueries extends QueryGroup {
     },
     Some(s"""
       WITH t AS (
-        SELECT source, unnest($duckToks) AS tok FROM documents),
+        SELECT source, unnest($duckTokens) AS tok FROM documents),
       st AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c_src
         FROM t GROUP BY 1, 2),
       gcount AS (SELECT tok, CAST(sum(c_src) AS BIGINT) AS c_all FROM st GROUP BY 1),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-8 batch 5: storage-encoding estimators and the order-
   * randomness audit behind them — delta-varint posting-list sizing
@@ -113,10 +114,10 @@ object EncodingPlanQueries extends QueryGroup {
   private val q657 = QueryDef(
     "q657_varint_posting_size",
     (spark, dir) => varintPostingCensus(spark, dir, shardWidth = 4096L),
-    Some("""
+    Some(s"""
       WITH postings AS (
         SELECT DISTINCT doc_id, unnest(list_distinct(
-          list_filter(str_split(text, ' '), t -> len(t) > 0))) AS token
+          $duckTokens)) AS token
         FROM documents),
       gaps AS (
         SELECT token,

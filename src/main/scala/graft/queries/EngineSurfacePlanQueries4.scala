@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-11 batch 4: map-typed and set-typed engine surface —
   * `stat.crosstab` contingency tables, the map higher-order family
@@ -198,13 +199,10 @@ object EngineSurfacePlanQueries4 extends QueryGroup {
           expr("bit_and(doc_id)").as("id_and"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH h AS MATERIALIZED (
         SELECT source, doc_id,
-          list_reduce(
-            list_prepend(0::BIGINT,
-              [ord(c)::BIGINT for c in str_split(text, '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) AS h
+          ${duckPolyHashOf("text")} AS h
         FROM documents)
       SELECT source, CAST(count(*) AS BIGINT) AS n,
         CAST(bit_xor(h) AS BIGINT) AS xor_checksum,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.cents
+import graft.queries.SqlMacros._
 
 /** Round-4 layout/eval/attribution operators: run-length-encoding layout
   * planning, graded-relevance retrieval evaluation, and Markov
@@ -24,12 +25,6 @@ object EvalQueries extends QueryGroup {
 
   private val revE4Sql =
     "CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) * (100 - CAST(floor(l_discount*100 + 0.5) AS BIGINT))"
-
-  /** The shared whitespace tokenizer / polynomial hash, as DuckDB SQL
-    * (same forms every text oracle in this repo uses). */
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
-  private val duckPolyHash =
-    "list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok,'')]), (h,c) -> (h*31+c) % 1000000007)"
 
   // ---------------------------------------------------------------- q372
 
@@ -226,10 +221,10 @@ object EvalQueries extends QueryGroup {
             s"ELSE dcg_mu * 1000000 DIV ($idealCase) END").as("ndcg_ppm"))
         .orderBy(col("q_id"))
     },
-    Some("""
+    Some(s"""
       WITH v AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, label, qv,
@@ -705,7 +700,7 @@ object EvalQueries extends QueryGroup {
       WITH toks AS (
         SELECT doc_id, unnest($duckTokens) AS tok FROM documents),
       hashes AS (
-        SELECT doc_id, $duckPolyHash AS h FROM toks),
+        SELECT doc_id, ${duckPolyHashOf("tok")} AS h FROM toks),
       votes AS (
         SELECT doc_id, t.b, sum(2 * ((h >> t.b) & 1) - 1) AS vote
         FROM hashes CROSS JOIN (SELECT unnest(range(30)) AS b) t

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.{Dedup, MinHashLSH, SimHash}
 import graft.multimodal.Multimodal
+import graft.queries.SqlMacros._
 import graft.similarity.Knn
 import graft.text.TextAnalysis._
 import graft.text.TextFunctions._
@@ -15,12 +16,6 @@ import graft.text.TextFunctions._
   * arithmetic (see the module scaladocs for the scale design).
   */
 object ExtensionQueries extends QueryGroup {
-
-  /** The shared polynomial-hash fold, as DuckDB SQL (tok → hash). */
-  private val duckPolyHash =
-    "list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok,'')]), (h,c) -> (h*31+c) % 1000000007)"
-
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
 
   /** Exact dedup via content digest: group on md5, keep min id. */
   private val q20 = QueryDef(
@@ -50,7 +45,7 @@ object ExtensionQueries extends QueryGroup {
     Some(s"""
       WITH toks AS (
         SELECT doc_id, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       docs AS (
         SELECT doc_id, list_distinct([
@@ -93,7 +88,7 @@ object ExtensionQueries extends QueryGroup {
       WITH toks AS (
         SELECT doc_id, unnest($duckTokens) AS tok FROM documents),
       hashes AS (
-        SELECT doc_id, $duckPolyHash AS h FROM toks),
+        SELECT doc_id, ${duckPolyHashOf("tok")} AS h FROM toks),
       votes AS (
         SELECT doc_id, t.b, sum(2 * ((h >> t.b) & 1) - 1) AS vote
         FROM hashes CROSS JOIN (SELECT unnest(range(30)) AS b) t
@@ -142,10 +137,10 @@ object ExtensionQueries extends QueryGroup {
         "vec_id", "embedding", "label", minCosine = 0.35, maxBlockSize = Some(55))
         .orderBy("block", "id_a", "id_b")
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id, label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       ok AS (
         SELECT label FROM q GROUP BY label HAVING count(*) <= 55),
@@ -171,9 +166,9 @@ object ExtensionQueries extends QueryGroup {
     "q25_knn_bruteforce",
     (spark, dir) =>
       Knn.bruteForceTopK(Tables.embeddings(spark, dir), "vec_id", "embedding", queryId = 0L, k = 10),
-    Some("""
+    Some(s"""
       WITH q AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+        SELECT vec_id, $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, qv, CAST(list_sum(list_transform(qv, x -> x*x)) AS BIGINT) AS nsq FROM q),
@@ -266,11 +261,10 @@ object ExtensionQueries extends QueryGroup {
         .select(col("doc_id"), graft.functions.expressions.text_fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH h AS (
         SELECT doc_id,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(text,'')]),
-                      (h,c) -> (h*31+c) % 1000000007) AS h1,
+          ${duckPolyHashOf("text")} AS h1,
           list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(text,'')]),
                       (h,c) -> (h*131+c) % 998244353) AS h2
         FROM documents)
@@ -286,13 +280,12 @@ object ExtensionQueries extends QueryGroup {
       val assets = Multimodal.assetsFromText(Tables.documents(spark, dir), "doc_id", "text")
       Multimodal.decodeAssets(assets).toDF().orderBy("asset_id")
     },
-    Some("""
+    Some(s"""
       WITH h AS (
         SELECT doc_id AS asset_id,
           CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(text,'')]),
-                      (h,c) -> (h*31+c) % 1000000007) AS hv
+          ${duckPolyHashOf("text")} AS hv
         FROM documents)
       SELECT asset_id, kind, n_bytes,
         16 + hv % 624 AS width, 16 + (hv // 624) % 464 AS height,
@@ -398,7 +391,7 @@ object ExtensionQueries extends QueryGroup {
     Some(s"""
       WITH toks AS (
         SELECT doc_id, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       docs AS (
         SELECT doc_id, list_distinct([
@@ -504,7 +497,7 @@ object ExtensionQueries extends QueryGroup {
       s"""
       WITH toks AS (
         SELECT doc_id, list_transform($duckTokens,
-          tok -> $duckPolyHash) AS th
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       docs AS (
         SELECT doc_id, list_distinct([

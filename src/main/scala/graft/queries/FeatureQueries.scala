@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.{cents, epochS}
 import graft.operators.Sampling
+import graft.queries.SqlMacros._
 
 /** Round-4 feature-engineering operators: deterministic negative
   * sampling for contrastive training, point-in-time feature snapshots,
@@ -342,10 +343,10 @@ object FeatureQueries extends QueryGroup {
         .groupBy(col("bin")).agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("bin"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       pairs AS (
         SELECT
@@ -445,15 +446,14 @@ object FeatureQueries extends QueryGroup {
       }
       census(10).unionAll(census(14)).unionAll(census(18)).orderBy(col("m"))
     },
-    Some("""
+    Some(s"""
       WITH t AS (
         SELECT DISTINCT tok FROM (
-          SELECT unnest(list_filter(str_split(p_name, ' '), x -> len(x) > 0)) AS tok
+          SELECT unnest(${duckTokensOf("p_name")}) AS tok
           FROM part)),
       h AS (
         SELECT tok,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok, '')]),
-                      (h, c) -> (h * 31 + c) % 1000000007) AS hv
+          ${duckPolyHashOf("tok")} AS hv
         FROM t)
       SELECT m, n_features, n_collisions,
         CAST(CAST(n_collisions AS HUGEINT) * 1000000 // n_features AS BIGINT)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 13: fidelity under compression and sampling —
   * CountSketch vs Count-Min bias, Hellinger drift with exact integer
@@ -64,14 +65,11 @@ object FidelityPlanQueries extends QueryGroup {
           col("cs_est"), expr("abs(cs_est - true_count)").as("cs_abs_err"))
         .orderBy(col("true_count").desc, col("term"))
     },
-    Some("""
+    Some(s"""
       WITH tc AS (
         SELECT term, CAST(count(*) AS BIGINT) AS cnt,
-          list_reduce(list_prepend(0::BIGINT,
-            [ord(c)::BIGINT for c in str_split(term, '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) AS ph
-        FROM (SELECT unnest(list_filter(str_split(text, ' '),
-                t -> len(t) > 0)) AS term
+          ${duckPolyHashOf("term")} AS ph
+        FROM (SELECT unnest($duckTokens) AS term
               FROM documents)
         GROUP BY term),
       grid(d) AS (VALUES (CAST(0 AS BIGINT)), (1), (2), (3), (4)),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TopKAggregate.topk_pairs
 import graft.functions.expressions.{long_dot, maxsim_blocks}
+import graft.queries.SqlMacros._
 
 /** Round-8 batch 2: multi-ranker retrieval plumbing — the cascade
   * recall-depth sweep (how deep must the cheap scorer's candidate list
@@ -36,10 +37,10 @@ object FusionPlanQueries extends QueryGroup {
         maxsim_blocks(col("pv"), col("v"), 4).as("ms"))
   }
 
-  private val scoredSql = """
+  private val scoredSql = s"""
       base AS (
         SELECT vec_id,
-          list_transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT)) AS v
+          $duckQuantVec AS v
         FROM embeddings),
       probes AS (SELECT vec_id AS pid, v AS pv FROM base WHERE vec_id < NPROBES),
       scored AS (

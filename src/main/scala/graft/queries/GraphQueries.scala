@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.PageRank
+import graft.queries.SqlMacros._
 import graft.similarity.{Ivf, Knn}
 
 /** Graph-shaped operators (round 3): semantic dedup over learned
@@ -15,9 +16,9 @@ object GraphQueries extends QueryGroup {
 
   /** The q32-verified IVF build (quantize → seed id%k → one integer
     * Lloyd step), as DuckDB CTEs ending in `assigned(id, qv, cluster)`. */
-  private[queries] val duckIvfAssigned = """
+  private[queries] val duckIvfAssigned = s"""
       base AS (
-        SELECT vec_id AS id, list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+        SELECT vec_id AS id, $duckQuantVec AS qv
         FROM embeddings),
       dims AS (SELECT unnest(range(1, 65)) AS dim),
       seeded AS (SELECT id, qv, id % 8 AS cluster FROM base),

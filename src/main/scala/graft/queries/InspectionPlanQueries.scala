@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-10 batch 7: inspection economics — the Dorfman pooled-testing
   * plan (what pool size minimizes expected tests at the observed defect
@@ -158,12 +159,10 @@ object InspectionPlanQueries extends QueryGroup {
             .as("expected_pairs_milli"))
         .orderBy(col("b"))
     },
-    Some("""
+    Some(s"""
       WITH h AS (
         SELECT
-          list_reduce(list_prepend(0::BIGINT,
-            [ord(c)::BIGINT for c in str_split(text,'')]),
-            (h,c) -> (h*31+c) % 1000000007) * 998244353
+          ${duckPolyHashOf("text")} * 998244353
           + list_reduce(list_prepend(0::BIGINT,
             [ord(c)::BIGINT for c in str_split(text,'')]),
             (h,c) -> (h*131+c) % 998244353) AS fp

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.cents
 import graft.functions.expressions.tokens_native
+import graft.queries.SqlMacros._
 
 /** Round-4 keyword/privacy/retrieval operators: RAKE keyword extraction
   * over the English corpus, the k-anonymity generalization-lattice
@@ -104,7 +105,7 @@ object KeywordQueries extends QueryGroup {
     },
     Some(s"""
       WITH tk AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT doc_id, $duckTokens AS tk
         FROM documents WHERE lang = 'en'),
       tok AS (
         SELECT doc_id, i, tk[i + 1] AS tok,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.epochS
 import graft.functions.expressions.tokens_native
+import graft.queries.SqlMacros._
 import graft.similarity.Ivf
 
 /** Round-4 lateness/fidelity operators: per-key watermark laggard
@@ -101,11 +102,10 @@ object LatenessQueries extends QueryGroup {
         .withColumn("roundtrip_ppm", expr("n_exact * 1000000 div n_docs"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH rt AS (
         SELECT source,
-          CASE WHEN array_to_string(list_filter(str_split(text, ' '),
-              t -> len(t) > 0), ' ')
+          CASE WHEN array_to_string($duckTokens, ' ')
             = trim(regexp_replace(text, ' +', ' ', 'g'))
           THEN 1 ELSE 0 END AS ok
         FROM documents)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-10 batch 2b: closed-form lexical-repetitiveness statistics over
   * the documents corpus — the size-robust complements of q154's
@@ -44,11 +45,11 @@ object LexiconPlanQueries extends QueryGroup {
             .as("k_milli"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tf AS (
         SELECT source, token, CAST(count(*) AS BIGINT) AS m
         FROM (SELECT source,
-                unnest(list_filter(str_split(text, ' '), t -> len(t) > 0))
+                unnest($duckTokens)
                   AS token
               FROM documents)
         GROUP BY source, token)
@@ -122,12 +123,12 @@ object LexiconPlanQueries extends QueryGroup {
           expr("n_shifts * 1000000 div n_pairs").as("shift_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tf AS MATERIALIZED (
         SELECT doc_id, source, (i - 1) // 32 AS blk, l[i] AS tok,
           CAST(count(*) AS BIGINT) AS tf
         FROM (SELECT doc_id, source,
-                list_filter(str_split(text, ' '), t -> len(t) > 0) AS l
+                $duckTokens AS l
               FROM documents),
           LATERAL unnest(range(1, len(l) + 1)) AS u(i)
         GROUP BY doc_id, source, blk, tok),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-4 linkage/curation operators: exact-substring duplicate-span
   * merging (the token-level dedup step behind "deduplicating training
@@ -85,10 +86,10 @@ object LinkageQueries extends QueryGroup {
         .withColumn("dup_ppm", expr("dup_tokens * 1000000 div tokens"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
         SELECT doc_id, source,
-          list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+          $duckTokens AS tk
         FROM documents),
       grams AS (
         SELECT doc_id, CAST(i.i - 1 AS BIGINT) AS pos,
@@ -246,10 +247,10 @@ object LinkageQueries extends QueryGroup {
             (col("u_num").cast("double") / expr("nn * (nn - 1)"))).as("weight"))
         .orderBy(col("field"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT array_to_string(
-            list_filter(str_split(text, ' '), t -> len(t) > 0)[1:8], ' ') AS fam,
+            $duckTokens[1:8], ' ') AS fam,
           lang, source, CAST(n_chars // 500 AS VARCHAR) AS len_b
         FROM documents),
       st AS (
@@ -313,10 +314,10 @@ object LinkageQueries extends QueryGroup {
           when(col("norm_ppm") <= 200000L, 1L).otherwise(0L))
         .orderBy(col("canonical_id"), col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT array_to_string(
-            list_filter(str_split(text, ' '), t -> len(t) > 0)[1:8], ' ') AS fam,
+            $duckTokens[1:8], ' ') AS fam,
           doc_id, substring(text, 1, 200) AS head
         FROM documents),
       canon AS (

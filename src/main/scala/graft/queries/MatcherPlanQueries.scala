@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-12 batch 2: dictionary matching and geometric structure —
   * multi-token blocklist phrase matching (the distributed stand-in for
@@ -52,13 +53,13 @@ object MatcherPlanQueries extends QueryGroup {
           countDistinct(col("doc_id")).as("n_docs"))
         .orderBy(col("phrase"), col("source"))
     },
-    Some("""
+    Some(s"""
       WITH dict(phrase, plen) AS (VALUES
         ('hash join', 2), ('table scan', 2), ('sort merge join', 3),
         ('slow query', 2), ('fast vector scan', 3)),
       tk AS MATERIALIZED (
         SELECT doc_id, source,
-          list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+          $duckTokens AS tk
         FROM documents),
       g2 AS (
         SELECT doc_id, source,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Sampling
+import graft.queries.SqlMacros._
 import graft.text.TextFunctions
 
 /** Round-4 corpus-mining operators: windowed co-occurrence statistics
@@ -52,9 +53,9 @@ object MiningQueries extends QueryGroup {
         .orderBy(col("n_ab").desc, col("a"), col("b"))
         .limit(50)
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT $duckTokens AS tk
         FROM documents),
       pr AS (
         SELECT least(tk[i], tk[i + d.d]) AS a, greatest(tk[i], tk[i + d.d]) AS b

@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.Deterministic.cents
 import graft.functions.expressions.{quantized_cosine, tokens_native}
 import graft.operators.Sampling
+import graft.queries.SqlMacros._
 import graft.text.TextAnalysis.languageId
 
 /** Round-5 model-quality and graph-structure operators: LM-based corpus
@@ -20,14 +21,6 @@ import graft.text.TextAnalysis.languageId
   * under the identical IEEE expression on both engines.
   */
 object ModelQueries extends QueryGroup {
-
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
-
-  /** The shared polynomial-hash fold (graft.functions poly_hash) as DuckDB
-    * SQL over column `c` — base 31, mod 1e9+7, folded from 0. */
-  private def duckPolyHashOf(c: String): String =
-    s"list_reduce(list_prepend(0::BIGINT, [ord(ch)::BIGINT for ch in str_split($c, '')]), " +
-      "(h, ch) -> (h*31 + ch) % 1000000007)"
 
   /** Adjacent word pairs per document: posexplode → positional
     * self-equi-join on (doc, pos) — the narrow distributed form of a
@@ -253,10 +246,10 @@ object ModelQueries extends QueryGroup {
         .select(col("vec_id"), col("bench_id"), col("cosine"))
         .orderBy(col("vec_id"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, qv,
@@ -1355,10 +1348,10 @@ object ModelQueries extends QueryGroup {
         .select(col("j").cast("long").as("dim"), col("v").as("component_q"))
         .orderBy(col("dim"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       comp AS (
         SELECT vec_id, i - 1 AS i, qv[i] AS x
@@ -2265,10 +2258,10 @@ object ModelQueries extends QueryGroup {
         .orderBy(col("knn5_cosine"), col("vec_id"))
         .limit(10)
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id, label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, label, qv,

@@ -7,6 +7,7 @@ import graft.Tables
 import graft.functions.Deterministic.{cents, epochS}
 import graft.functions.expressions.poly_hash
 import graft.operators.Sampling
+import graft.queries.SqlMacros._
 
 /** Round-4 monitoring/profiling operators: group-sequential experiment
   * monitoring with O'Brien–Fleming-style boundaries, a one-pass melted
@@ -238,9 +239,7 @@ object MonitorQueries extends QueryGroup {
           ('o_orderpriority', o_orderpriority)) AS m(c, val)),
       hashed AS (
         SELECT "column", val,
-          ((list_reduce(list_prepend(0::BIGINT,
-              [ord(c)::BIGINT for c in str_split(val, '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) % 2147483648)
+          ((${duckPolyHashOf("val")} % 2147483648)
             * 2654435761) % 4294967296 AS h
         FROM melted),
       exact AS (

@@ -6,6 +6,7 @@ import graft.Tables
 import graft.functions.TopKAggregate.topk_pairs
 import graft.functions.expressions.long_dot
 import graft.multimodal.Multimodal
+import graft.queries.SqlMacros._
 
 /** Round-8 batch 6: the multimodal column family beyond q30's decode —
   * the STUB feature extractor feeding the similarity stack (the
@@ -63,14 +64,12 @@ object MultimodalPlanQueries extends QueryGroup {
           col("e.id").as("asset_id"), col("e.score").cast("long").as("dot"))
         .orderBy(col("kind"), col("rank"))
     },
-    Some("""
+    Some(s"""
       WITH h AS (
         SELECT doc_id AS asset_id,
           CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
             ELSE 'video' END AS kind,
-          list_reduce(list_prepend(0::BIGINT,
-              [ord(c)::BIGINT for c in str_split(text, '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) AS hv
+          ${duckPolyHashOf("text")} AS hv
         FROM documents),
       emb AS (
         SELECT asset_id, kind,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.{cents, epochS}
 import graft.operators.Sampling
+import graft.queries.SqlMacros._
 
 /** Round-4 OLAP heavy shapes: the remaining classic TPC-H decision-support
   * query forms (Q21 multi-correlated self-join, Q22 anti-join against an
@@ -20,8 +21,6 @@ import graft.operators.Sampling
   * IEEE expressions on both engines.
   */
 object OlapQueries extends QueryGroup {
-
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
 
   /** TPC-H Q21's shape (suppliers who kept waiting multi-supplier
     * orders): for finished orders touched by ≥2 suppliers where EXACTLY
@@ -695,10 +694,10 @@ object OlapQueries extends QueryGroup {
         .orderBy(col("lof_ppm").desc, col("vec_id"))
         .limit(10)
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id, label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, label, qv,
@@ -777,10 +776,10 @@ object OlapQueries extends QueryGroup {
                   * 1000000 DIV (CAST(m AS DECIMAL(38,0)) * m) AS BIGINT)""").as("contrib_ppm"))
         .orderBy(col("bucket"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id, label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       b AS (
         SELECT vec_id, label, qv,
@@ -1440,9 +1439,9 @@ object OlapQueries extends QueryGroup {
 
   /** The PQ training chain (q338) as shared DuckDB CTE text, so the ADC
     * recall audit (q341) reproduces the identical codebook. */
-  private def pqCtes: String = """q AS (
+  private def pqCtes: String = s"""q AS (
         SELECT vec_id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv,
+          $duckQuantVec AS qv,
           ((vec_id % 2147483648) * 2654435761) % 4294967296 AS h
         FROM embeddings),
       seeds AS (
@@ -1976,10 +1975,10 @@ object OlapQueries extends QueryGroup {
         .agg(max(col("dcov")).as("radius_q"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id, label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv,
+          $duckQuantVec AS qv,
           ((vec_id % 2147483648) * 2654435761) % 4294967296 AS h
         FROM embeddings),
       c1 AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 5: operational planners — newsvendor stocking from the
   * demand distribution, corruption blast-radius accounting, and MVCC
@@ -268,9 +269,9 @@ object OpsPlanQueries extends QueryGroup {
           col("lb_loss_ppm"))
         .orderBy(col("policy"), col("cf_milli"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT doc_id, $duckTokens AS tk
         FROM documents),
       post AS (
         SELECT doc_id, CAST(i.i - 1 AS BIGINT) AS pos, tk[CAST(i.i AS INTEGER)] AS token
@@ -278,9 +279,7 @@ object OpsPlanQueries extends QueryGroup {
       routed AS (
         SELECT doc_id % 16 AS batch, p.policy,
           CASE WHEN p.policy = 'content'
-            THEN list_reduce(list_prepend(0::BIGINT,
-              [ord(ch)::BIGINT for ch in str_split(token, '')]),
-              (h, ch) -> (h*31 + ch) % 1000000007) % 8
+            THEN ${duckPolyHashOf("token")} % 8
             ELSE ((doc_id*4096 + pos % 4096) % 2147483648) * 2654435761
               % 4294967296 % 8
           END AS expert

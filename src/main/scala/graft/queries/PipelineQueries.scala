@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic._
 import graft.operators.{RangeJoin, Sampling}
+import graft.queries.SqlMacros._
 import graft.text.{TextAnalysis, TfIdf}
 
 /** Training-data-pipeline operators, round 2: binned range join,
@@ -56,9 +57,9 @@ object PipelineQueries extends QueryGroup {
           col("tf"), col("df"), col("score"))
         .orderBy("doc_id", "rank")
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS token
+        SELECT doc_id, unnest($duckTokens) AS token
         FROM documents),
       tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
       df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
@@ -129,14 +130,14 @@ object PipelineQueries extends QueryGroup {
           graft.functions.expressions.token_count(norm).cast("long").as("n_tokens"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH n AS (
         SELECT doc_id,
           trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
                ' +', ' ', 'g')) AS norm_text
         FROM documents)
       SELECT doc_id, norm_text, md5(norm_text) AS norm_md5,
-        CAST(len(list_filter(str_split(norm_text, ' '), t -> len(t) > 0)) AS BIGINT) AS n_tokens
+        CAST(len(${duckTokensOf("norm_text")}) AS BIGINT) AS n_tokens
       FROM n ORDER BY doc_id
     """))
 
@@ -159,9 +160,9 @@ object PipelineQueries extends QueryGroup {
           floor(col("s") / col("n")).as("centroid_q"))
         .orderBy("label", "dim")
     },
-    Some("""
+    Some(s"""
       WITH q AS (
-        SELECT label, list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+        SELECT label, $duckQuantVec AS qv
         FROM embeddings),
       dims AS (SELECT unnest(range(1, 65)) AS d)
       SELECT label, CAST(d - 1 AS BIGINT) AS dim, count(*) AS n,
@@ -180,9 +181,9 @@ object PipelineQueries extends QueryGroup {
       graft.similarity.Knn.lshTopK(Tables.embeddings(spark, dir),
         "vec_id", "embedding", queryId = 0L, k = 10, planes = 8)
     },
-    Some("""
+    Some(s"""
       WITH q AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+        SELECT vec_id, $duckQuantVec AS qv
         FROM embeddings),
       proj AS (
         SELECT vec_id, t.p,
@@ -248,7 +249,7 @@ object PipelineQueries extends QueryGroup {
         .orderBy("stage")
     },
     Some {
-      val toks = "list_filter(str_split(t, ' '), x -> len(x) > 0)"
+      val toks = duckTokensOf("t")
       val hits = TextAnalysis.Stopwords.map { case (l, ws) =>
         s"len(list_filter($toks, x -> x IN (${ws.map("'" + _ + "'").mkString(",")}))) AS score_$l"
       }.mkString(", ")
@@ -371,10 +372,10 @@ object PipelineQueries extends QueryGroup {
             .as("signed_cos2_ppm"))
         .orderBy(col("label_a"), col("label_b"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       dims AS (SELECT unnest(range(1, 65)) AS d),
       cent AS (
@@ -479,11 +480,9 @@ object PipelineQueries extends QueryGroup {
           sum(col("cluster_size")).as("n_docs"))
         .orderBy(col("cluster_size"))
     },
-    Some("""
+    Some(s"""
       WITH p AS (
-        SELECT list_reduce(list_prepend(0::BIGINT,
-            [ord(c)::BIGINT for c in str_split(substr(text, 1, 64), '')]),
-          (h, c) -> (h*31 + c) % 1000000007) AS pfx
+        SELECT ${duckPolyHashOf("substr(text, 1, 64)")} AS pfx
         FROM documents),
       s AS (
         SELECT pfx, CAST(count(*) AS BIGINT) AS cluster_size

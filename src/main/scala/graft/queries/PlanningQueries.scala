@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.epochS
 import graft.operators.Sampling
+import graft.queries.SqlMacros._
 
 /** Round-4 pipeline-operations planning: weighted reservoir sampling,
   * small-file compaction planning, train/test split leakage auditing,
@@ -286,10 +287,10 @@ object PlanningQueries extends QueryGroup {
           expr("w * 1000000L div sw").as("temp_alloc_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT source,
-          CAST(sum(len(list_filter(str_split(text, ' '), t -> len(t) > 0))) AS BIGINT)
+          CAST(sum(len($duckTokens)) AS BIGINT)
             AS n_tokens
         FROM documents GROUP BY source),
       ws AS (
@@ -586,10 +587,10 @@ object PlanningQueries extends QueryGroup {
           (col("p50_bin") * 64).as("p50_len_lo"), (col("p90_bin") * 64).as("p90_len_lo"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH h AS (
         SELECT source, CAST(len(text) AS BIGINT) // 64 AS bin,
-          CAST(sum(len(list_filter(str_split(text, ' '), t -> len(t) > 0)))
+          CAST(sum(len($duckTokens))
             AS BIGINT) AS w
         FROM documents GROUP BY 1, 2),
       c AS (
@@ -850,10 +851,10 @@ object PlanningQueries extends QueryGroup {
           (col("base_seats") + col("extra")).as("seats"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT source,
-          CAST(sum(len(list_filter(str_split(text, ' '), t -> len(t) > 0))) AS BIGINT)
+          CAST(sum(len($duckTokens)) AS BIGINT)
             AS n_tokens
         FROM documents GROUP BY source),
       q AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 2: policy/layout planners — sorted-neighborhood
   * blocking for entity resolution, SJF-vs-FIFO scheduling flow time,
@@ -112,10 +113,10 @@ object PolicyPlanQueries extends QueryGroup {
         .unionAll(policy("sjf", Seq(col("len"), col("doc_id"))))
         .orderBy(col("policy"))
     },
-    Some("""
+    Some(s"""
       WITH lens AS (
         SELECT doc_id, doc_id % 4 AS shard,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT)
+          CAST(len($duckTokens) AS BIGINT)
             AS len
         FROM documents),
       f AS (SELECT * FROM lens WHERE len >= 1),
@@ -236,10 +237,10 @@ object PolicyPlanQueries extends QueryGroup {
           expr("complex_words * 1000000 div n_words").as("complex_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH w AS (
         SELECT source,
-          unnest(list_filter(str_split(lower(text), ' '), t -> len(t) > 0)) AS w
+          unnest(${duckTokensOf("lower(text)")}) AS w
         FROM documents),
       s AS (
         SELECT source,

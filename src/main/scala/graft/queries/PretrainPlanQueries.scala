@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-5 pretraining-corpus planning operators: block-level exact
   * dedup (the deletion ledger, not just the audit), iterated BPE merges,
@@ -75,10 +76,10 @@ object PretrainPlanQueries extends QueryGroup {
           expr("n_deleted * 1000000 div n_blocks").as("deleted_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
         SELECT doc_id, source,
-          list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+          $duckTokens AS tk
         FROM documents),
       blocks AS (
         SELECT source, md5(blk) AS d, CAST(len(blk) AS BIGINT) AS blen,
@@ -182,7 +183,7 @@ object PretrainPlanQueries extends QueryGroup {
         SELECT CAST(count(*) AS BIGINT) AS f,
           array_to_string([substring(w, CAST(i AS INTEGER), 1)
                            for i in range(1, len(w) + 1)], ' ') AS seq
-        FROM (SELECT unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS w
+        FROM (SELECT unnest($duckTokens) AS w
               FROM documents)
         GROUP BY w),
       ${pairSql("w0", "p1")}, ${topSql("p1", "t1")}, ${mergeSql("w0", "t1", "w1")},
@@ -227,9 +228,9 @@ object PretrainPlanQueries extends QueryGroup {
             .as("loop_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT source, $duckTokens AS tk
         FROM documents),
       per AS (
         SELECT source,
@@ -327,12 +328,12 @@ object PretrainPlanQueries extends QueryGroup {
           col("avg_score_milli"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH bi AS (
         SELECT doc_id, source, md5(bg) AS d FROM (
           SELECT doc_id, source, tk[i] || ' ' || tk[i + 1] AS bg
           FROM (SELECT doc_id, source,
-                  list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+                  $duckTokens AS tk
                 FROM documents),
             LATERAL (SELECT unnest(range(1, len(tk))) AS i) g
           WHERE len(tk) >= 2)),
@@ -410,9 +411,9 @@ object PretrainPlanQueries extends QueryGroup {
           expr("saved_tokens * 1000000 div eligible_tokens").as("saved_ppm"))
         .orderBy(col("k"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
-        SELECT list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT $duckTokens AS tk
         FROM documents),
       pref AS (
         SELECT CAST(k AS BIGINT) AS k,
@@ -467,10 +468,10 @@ object PretrainPlanQueries extends QueryGroup {
           expr("unique_tokens * 2018 div 1000").as("eff_epoch4"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH docs AS (
         SELECT doc_id, source, md5(text) AS d,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT)
+          CAST(len($duckTokens) AS BIGINT)
             AS n_tok
         FROM documents),
       keep AS (SELECT d, min(doc_id) AS keep_id FROM docs GROUP BY d)
@@ -522,9 +523,9 @@ object PretrainPlanQueries extends QueryGroup {
             .as("overhead_ppm"))
         .orderBy(col("l"))
     },
-    Some("""
+    Some(s"""
       WITH n AS (
-        SELECT CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+        SELECT CAST(len($duckTokens)
           AS BIGINT) AS n
         FROM documents),
       cfg AS (SELECT * FROM (VALUES (CAST(32 AS BIGINT), CAST(24 AS BIGINT)),
@@ -601,10 +602,10 @@ object PretrainPlanQueries extends QueryGroup {
             .as("tokens_per_step_milli"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH trans AS (
         SELECT source, md5(tk[i]) AS h, md5(tk[i + 1]) AS n
-        FROM (SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        FROM (SELECT source, $duckTokens AS tk
               FROM documents),
           LATERAL (SELECT unnest(range(1, len(tk))) AS i) g
         WHERE len(tk) >= 2),
@@ -711,8 +712,7 @@ object PretrainPlanQueries extends QueryGroup {
       s"""
       WITH v AS (
         SELECT vec_id,
-          list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, qv,
@@ -788,10 +788,10 @@ object PretrainPlanQueries extends QueryGroup {
             "ELSE sum_suffix * 1000 div n_eligible END").as("mean_suffix_milli"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT)
+          CAST(len($duckTokens) AS BIGINT)
             AS n,
           CAST(((doc_id % 2147483648) * 2654435761) % 4294967296 AS BIGINT) AS h
         FROM documents),
@@ -866,10 +866,10 @@ object PretrainPlanQueries extends QueryGroup {
           sum(coalesce(col("n_standing"), lit(0L))).as("cand_pairs"))
         .orderBy(col("band"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT doc_id, list_transform(list_filter(str_split(text, ' '), t -> len(t) > 0),
-          tok -> list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok,'')]), (h,c) -> (h*31+c) % 1000000007)) AS th
+        SELECT doc_id, list_transform($duckTokens,
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       shs AS (
         SELECT doc_id, list_distinct([
@@ -940,10 +940,10 @@ object PretrainPlanQueries extends QueryGroup {
           expr("(sum_t2 - sum_l2) * 1000000 div sum_t2").as("waste_ppm"))
         .orderBy(col("lang"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id, lang, doc_id % 4 AS shard,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT)
+          CAST(len($duckTokens) AS BIGINT)
             AS len
         FROM documents),
       pos AS (
@@ -1004,9 +1004,9 @@ object PretrainPlanQueries extends QueryGroup {
             .as("frag_ppm"))
         .orderBy(col("page"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
-        SELECT CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+        SELECT CAST(len($duckTokens)
           AS BIGINT) AS len
         FROM documents),
       g AS (
@@ -1085,7 +1085,7 @@ object PretrainPlanQueries extends QueryGroup {
         SELECT CAST(count(*) AS BIGINT) AS f,
           array_to_string([substring(w, CAST(i AS INTEGER), 1)
                            for i in range(1, len(w) + 1)], ' ') AS seq
-        FROM (SELECT unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS w
+        FROM (SELECT unnest($duckTokens) AS w
               FROM documents WHERE $pred)
         GROUP BY w)"""
       def pairSql(src: String, out: String) = s"""
@@ -1182,7 +1182,7 @@ object PretrainPlanQueries extends QueryGroup {
       WITH counts AS (
         SELECT doc_id, source, md5(w) AS d, CAST(count(*) AS BIGINT) AS c
         FROM (SELECT doc_id, source,
-                unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS w
+                unnest($duckTokens) AS w
               FROM documents)
         GROUP BY doc_id, source, md5(w)),
       per AS (
@@ -1245,10 +1245,10 @@ object PretrainPlanQueries extends QueryGroup {
         .unionAll(policy("sorted", Seq(col("len"), col("doc_id"))))
         .orderBy(col("policy"))
     },
-    Some("""
+    Some(s"""
       WITH lens AS (
         SELECT doc_id,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT)
+          CAST(len($duckTokens) AS BIGINT)
             AS len
         FROM documents),
       f AS (SELECT * FROM lens WHERE len >= 1),
@@ -1359,9 +1359,9 @@ object PretrainPlanQueries extends QueryGroup {
           (col("ratio_milli") > 6000L).as("is_outlier"))
         .orderBy(col("rk"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
-        SELECT dim, abs(CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS q
+        SELECT dim, abs(${duckQuant("x")}) AS q
         FROM (SELECT unnest(embedding) AS x,
                 unnest(range(0, len(embedding))) AS dim
               FROM embeddings)),
@@ -1474,11 +1474,10 @@ object PretrainPlanQueries extends QueryGroup {
           (col("bucket") < 2L).as("is_fallback"))
         .orderBy(col("bucket"))
     },
-    Some("""
+    Some(s"""
       WITH v AS (
         SELECT vec_id,
-          list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, qv,
@@ -1543,10 +1542,10 @@ object PretrainPlanQueries extends QueryGroup {
             "ELSE (10 * n_total + n_pass - 1) div n_pass END").as("fetch_k10"))
         .orderBy(col("bucket"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id, label,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       proj AS (
         SELECT vec_id, label, t.p,
@@ -1750,10 +1749,10 @@ object PretrainPlanQueries extends QueryGroup {
           sum(expr("corrupted + spans + 1")).as("target_tokens"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT)
+          CAST(len($duckTokens) AS BIGINT)
             AS n
         FROM documents),
       p AS (
@@ -1869,11 +1868,10 @@ object PretrainPlanQueries extends QueryGroup {
           expr("n_hits * 1000000 div n_queries").as("hit_ppm"))
         .orderBy(col("threshold_milli"))
     },
-    Some("""
+    Some(s"""
       WITH v AS (
         SELECT vec_id,
-          list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, qv,
@@ -1946,8 +1944,7 @@ object PretrainPlanQueries extends QueryGroup {
           .mkString("CASE ", " ", " ELSE 0 END")
       s"""
       WITH vocab AS (
-        SELECT DISTINCT unnest(list_filter(str_split(text, ' '),
-          t -> len(t) > 0)) AS w
+        SELECT DISTINCT unnest($duckTokens) AS w
         FROM documents),
       lagged AS (
         SELECT w, lag(w, 1) OVER (ORDER BY w) AS prev FROM vocab),
@@ -2186,10 +2183,10 @@ object PretrainPlanQueries extends QueryGroup {
         .withColumn("abs_gap_ppm", abs(col("est_full_ppm") - col("est_1bit_ppm")))
         .orderBy(col("doc_a"), col("doc_b"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT doc_id, list_transform(list_filter(str_split(text, ' '), t -> len(t) > 0),
-          tok -> list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(tok,'')]), (h,c) -> (h*31+c) % 1000000007)) AS th
+        SELECT doc_id, list_transform($duckTokens,
+          tok -> ${duckPolyHashOf("tok")}) AS th
         FROM documents),
       shs AS (
         SELECT doc_id, list_distinct([
@@ -2340,7 +2337,7 @@ object PretrainPlanQueries extends QueryGroup {
           WHEN $c >= 2 THEN 1 ELSE 0 END"""
       s"""
       WITH posts AS (
-        SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> len(t) > 0))
+        SELECT doc_id, unnest($duckTokens)
           AS term
         FROM documents),
       df AS (
@@ -2446,10 +2443,9 @@ object PretrainPlanQueries extends QueryGroup {
             AS lf3
         FROM (
           SELECT doc_id, n_chars,
-            CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+            CAST(len($duckTokens)
               AS BIGINT) AS tc,
-            CAST(len(list_distinct(list_filter(str_split(text, ' '),
-              t -> len(t) > 0))) AS BIGINT) AS dtc
+            CAST(len(list_distinct($duckTokens)) AS BIGINT) AS dtc
           FROM documents))
       ${diag("lf1", "lf2", "lf3", "lf1_chars")}
       UNION ALL ${diag("lf2", "lf1", "lf3", "lf2_tokens")}

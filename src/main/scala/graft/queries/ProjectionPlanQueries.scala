@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 9: selection and projection audits — JL sign-projection
   * distortion, optimal-stopping (secretary) rules, and winner's-curse
@@ -18,8 +19,6 @@ object ProjectionPlanQueries extends QueryGroup {
     * low bit, which an odd multiplier preserves from the input parity. */
   private val qvSpark =
     "transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT))"
-  private val qvDuck =
-    "list_transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT))"
 
   // ---------------------------------------------------------------- q567
 
@@ -92,7 +91,7 @@ object ProjectionPlanQueries extends QueryGroup {
               CASE WHEN ((i * 32 + j) * 2654435761) % 4294967296 // 65536 % 2 = 0
               THEN qv[CAST(i AS INTEGER)]
               ELSE -qv[CAST(i AS INTEGER)] END)) AS BIGINT)) AS y
-        FROM (SELECT vec_id, $qvDuck AS qv FROM embeddings WHERE vec_id < 20)),
+        FROM (SELECT vec_id, $duckQuantVec AS qv FROM embeddings WHERE vec_id < 20)),
       grid(dprime) AS (VALUES (CAST(8 AS BIGINT)), (CAST(16 AS BIGINT)),
         (CAST(32 AS BIGINT))),
       pairs AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 18: protocol machinery — secure-aggregation dropout,
   * front-door causal adjustment, and mergeable top-k summary bounds.
@@ -292,7 +293,7 @@ object ProtocolPlanQueries extends QueryGroup {
               THEN 1 ELSE 0 END AS BIGINT)""").as("within_bound"))
         .orderBy(col("true_count").desc, col("bg"))
     },
-    Some("""
+    Some(s"""
       WITH bigrams AS (
         SELECT source, bg, CAST(count(*) AS BIGINT) AS c
         FROM (
@@ -300,7 +301,7 @@ object ProtocolPlanQueries extends QueryGroup {
             unnest([tk[i] || ' ' || tk[i + 1] for i in range(1, len(tk))])
               AS bg
           FROM (SELECT source,
-                  list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+                  $duckTokens AS tk
                 FROM documents)
           WHERE len(tk) >= 2)
         GROUP BY 1, 2),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-4 embedding-compression operator: int8 scalar quantization,
   * the standard memory-shrink for ANN serving (4× smaller than float32,
@@ -169,12 +170,12 @@ object QuantQueries extends QueryGroup {
         .select(col("vec_id"), col("label").cast("long").as("label"), col("nsq"))
         .orderBy(col("vec_id"))
     },
-    Some("""
+    Some(s"""
       WITH v AS (
         SELECT vec_id, label,
           CAST(list_sum(list_transform(embedding, x ->
-            CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)
-              * CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT))) AS BIGINT) AS nsq
+            ${duckQuant("x")}
+              * ${duckQuant("x")})) AS BIGINT) AS nsq
         FROM embeddings),
       h AS (SELECT nsq AS b, count(*) AS c FROM v GROUP BY 1),
       cum AS (SELECT b, sum(c) OVER (ORDER BY b) AS cum FROM h),
@@ -273,10 +274,10 @@ object QuantQueries extends QueryGroup {
             .as("pr_ppm"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH ex AS (
         SELECT CAST(label AS BIGINT) AS label, CAST(d.i - 1 AS INTEGER) AS dim,
-          CAST(floor(CAST(embedding[d.i] AS DOUBLE) * 512 + 0.5) AS BIGINT) AS q
+          ${duckQuant("embedding[d.i]")} AS q
         FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding)+1)) AS i) d),
       cell AS (
         SELECT label, dim, CAST(count(*) AS BIGINT) AS n,
@@ -369,10 +370,10 @@ object QuantQueries extends QueryGroup {
             .as("ap_ppm"))
         .orderBy(col("q_id"))
     },
-    Some("""
+    Some(s"""
       WITH v AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT vec_id, label, qv,
@@ -451,12 +452,12 @@ object QuantQueries extends QueryGroup {
             .as("centroid_cos"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH ex AS (
         SELECT CAST(label AS BIGINT) AS label,
           ((vec_id % 2147483648) * 2654435761) % 4294967296 % 2 AS half,
           CAST(d.i AS INTEGER) - 1 AS dim,
-          CAST(floor(CAST(embedding[d.i] AS DOUBLE) * 512 + 0.5) AS BIGINT) AS q
+          ${duckQuant("embedding[d.i]")} AS q
         FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding)+1)) AS i) d),
       cells AS (
         SELECT label, half, dim, CAST(sum(q) AS BIGINT) AS sx,
@@ -518,10 +519,10 @@ object QuantQueries extends QueryGroup {
             .as("recall_ppm"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT CAST(label AS BIGINT) AS label, vec_id,
-          list_transform(embedding, x -> CAST(floor(x*512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       proj AS (
         SELECT vec_id, t.p,
@@ -649,10 +650,10 @@ object QuantQueries extends QueryGroup {
             .as("reciprocity_ppm"))
         .orderBy(col("label"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT CAST(label AS BIGINT) AS label, vec_id,
-          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 512 + 0.5) AS BIGINT)) AS qv
+          $duckQuantVec AS qv
         FROM embeddings),
       n AS (
         SELECT label, vec_id, qv,

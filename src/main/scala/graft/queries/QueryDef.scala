@@ -24,8 +24,36 @@ trait QueryGroup {
 
 /** SQL text macros shared across query modules and their oracles —
   * defined once so the Spark and DuckDB forms cannot drift (the
-  * graph.Backbone discipline for scalar expressions). */
+  * graph.Backbone discipline for scalar expressions).
+  *
+  * The `duck*` macros are the DuckDB mirrors of graft's text and vector
+  * kernels, written once for every oracle: the whitespace tokenizer
+  * (`tokens_native`), the base-31 polynomial hash (`poly_hash`) and the
+  * house 512-step quantization. They are oracle text only; no Spark plan
+  * reads them. A pipeline's oracle chain lives beside the Spark builder
+  * it mirrors, in the query object of its lowest-numbered user. */
 object SqlMacros {
+  /** Whitespace tokens of the string expression `text`: split on single
+    * spaces, empty tokens dropped. */
+  def duckTokensOf(text: String): String =
+    s"list_filter(str_split($text, ' '), t -> len(t) > 0)"
+
+  /** Whitespace tokens of the `text` column. */
+  val duckTokens: String = duckTokensOf("text")
+
+  /** Base-31 polynomial hash of the string expression `s` over its code
+    * points, mod 1e9+7, folded from 0. */
+  def duckPolyHashOf(s: String): String =
+    s"list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split($s, '')]), " +
+      "(h, c) -> (h * 31 + c) % 1000000007)"
+
+  /** 512-step quantization of one embedding component `x`: round(x·512),
+    * halves up, computed in double. */
+  def duckQuant(x: String): String = s"CAST(floor(CAST($x AS DOUBLE) * 512 + 0.5) AS BIGINT)"
+
+  /** The `embedding` column quantized element-wise. */
+  val duckQuantVec: String = s"list_transform(embedding, x -> ${duckQuant("x")})"
+
   /** Exact integer square root, ±1-corrected: floor(sqrt(v)) computed
     * via libm double sqrt, then nudged so the result r satisfies
     * r² ≤ v < (r+1)² EXACTLY — identical on any engine regardless of

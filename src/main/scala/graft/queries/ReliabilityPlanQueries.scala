@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 7: reliability audits — inter-rater agreement for
   * annotation pipelines, straggler-speculation payoff for stage
@@ -85,7 +86,7 @@ object ReliabilityPlanQueries extends QueryGroup {
           CAST(len(list_filter(tk, t -> t IN ($allStops))) AS BIGINT) AS stop_hits,
           CAST(len(replace(text, ' ', '')) AS BIGINT) AS tok_chars
         FROM (SELECT source, n_chars, text,
-                list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+                $duckTokens AS tk
               FROM documents)),
       r AS (
         SELECT source,

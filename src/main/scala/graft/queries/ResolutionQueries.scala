@@ -6,14 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.epochS
 import graft.functions.expressions.tokens_native
+import graft.queries.SqlMacros._
 
 /** Entity-resolution and n-gram-model operators (round 3): fuzzy record
   * matching, conditional-probability tables, portable calendar
   * decomposition.
   */
 object ResolutionQueries extends QueryGroup {
-
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
 
   /** Fuzzy entity matching by blocked Levenshtein: a corrupted supplier
     * registry (one character deterministically dropped per name) matched

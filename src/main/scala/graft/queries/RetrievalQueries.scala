@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.expressions.tokens_native
+import graft.queries.SqlMacros._
 
 /** Round-4 retrieval/testing operators: BM25 document ranking with
   * dyadic-quantized IDF, Benjamini–Hochberg FDR control over per-brand
@@ -69,7 +70,7 @@ object RetrievalQueries extends QueryGroup {
     },
     Some(s"""
       WITH tk AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT doc_id, $duckTokens AS tk
         FROM documents),
       docs AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tk),
       posts AS (SELECT doc_id, unnest(tk) AS term FROM tk),
@@ -255,9 +256,9 @@ object RetrievalQueries extends QueryGroup {
                   div exact_a""").as("exact_containment_ppm"))
         .orderBy(col("src_a"), col("src_b"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT source, $duckTokens AS tk
         FROM documents),
       bg AS (
         SELECT source,
@@ -265,8 +266,7 @@ object RetrievalQueries extends QueryGroup {
         FROM tk WHERE len(tk) >= 2),
       ph AS (
         SELECT source,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(bg, '')]),
-                      (h, c) -> (h * 31 + c) % 1000000007) AS p
+          ${duckPolyHashOf("bg")} AS p
         FROM bg),
       dh AS (
         SELECT DISTINCT source, ((p % 2147483648) * 2654435761) % 4294967296 AS h

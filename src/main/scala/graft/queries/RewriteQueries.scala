@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.cents
 import graft.functions.expressions.tokens_native
+import graft.queries.SqlMacros._
 
 /** Round-4 rewrite/fusion/testing operators: the eager-aggregation
   * (group-by pushdown) certificate, Copeland pairwise rank fusion over
@@ -155,10 +156,10 @@ object RewriteQueries extends QueryGroup {
           col("rk"))
         .orderBy(col("rk"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
         SELECT source, n_chars,
-          list_filter(str_split(text, ' '), t -> len(t) > 0) AS toks
+          $duckTokens AS toks
         FROM documents),
       m AS (
         SELECT source, CAST(count(*) AS BIGINT) AS m_docs,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 15: robustness machinery — estimator breakdown under
   * contamination, quantile-regression slope fitting, and the placebo
@@ -195,10 +196,10 @@ object RobustnessPlanQueries extends QueryGroup {
       WITH grid(s_milli, tau_pml) AS (VALUES $cells),
       base AS (
         SELECT n_chars AS y,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+          CAST(len($duckTokens)
             AS BIGINT) AS x
         FROM documents
-        WHERE len(list_filter(str_split(text, ' '), t -> len(t) > 0)) >= 1),
+        WHERE len($duckTokens) >= 1),
       loss AS (
         SELECT CAST(s_milli AS BIGINT) AS s_milli,
           CAST(tau_pml AS BIGINT) AS tau_pml,

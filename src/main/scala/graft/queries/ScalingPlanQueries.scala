@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 scaling / capacity planners: compute-optimal allocation
   * (Chinchilla), inference prefill/decode cost split, sliding-window
@@ -15,7 +16,7 @@ import graft.Tables
 object ScalingPlanQueries extends QueryGroup {
 
   private val duckTokenCount =
-    "len(list_filter(str_split(text, ' '), t -> len(t) > 0))"
+    s"len($duckTokens)"
 
   // ---------------------------------------------------------------- q523
 

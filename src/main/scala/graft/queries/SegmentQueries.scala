@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 import graft.text.TextFunctions
 
 /** Corpus-refinery operators (round 4): the segment-level cleaning and
@@ -67,9 +68,9 @@ object SegmentQueries extends QueryGroup {
           expr("size(di)").cast("long").as("n_dropped"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH d AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS w
+        SELECT doc_id, $duckTokens AS w
         FROM documents),
       segs AS (
         SELECT doc_id, CAST(i AS BIGINT) AS seg_idx,
@@ -123,9 +124,9 @@ object SegmentQueries extends QueryGroup {
           (col("n_oov").cast("double") / col("n_bigrams")).as("oov_frac"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH d AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS w
+        SELECT doc_id, $duckTokens AS w
         FROM documents),
       inst AS (
         SELECT doc_id, w[i] || ' ' || w[i+1] AS b
@@ -176,10 +177,10 @@ object SegmentQueries extends QueryGroup {
           (col("max_len") * col("n_docs") - col("sum_tok")).as("pad_waste"))
         .orderBy("bucket", "shard", "batch")
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS BIGINT) AS n_tok
+          CAST(len($duckTokens) AS BIGINT) AS n_tok
         FROM documents),
       b AS (
         SELECT doc_id, n_tok, n_tok // 16 AS bucket, doc_id % 4 AS shard,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 11: selection-effect machinery — survey raking (IPF),
   * model-cascade routing, and Berkson collider bias. All outputs
@@ -220,7 +221,7 @@ object SelectionPlanQueries extends QueryGroup {
           CASE WHEN CAST(len(list_filter(tk, t -> t IN ($allStops))) AS BIGINT)
             * 1000 >= CAST(len(tk) AS BIGINT) * 60 THEN 1 ELSE 0 END AS judge_keep
         FROM (SELECT n_chars,
-                list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+                $duckTokens AS tk
               FROM documents)
         WHERE len(tk) >= 1),
       grid(lo, hi) AS (VALUES (CAST(200 AS BIGINT), CAST(400 AS BIGINT)),
@@ -312,7 +313,7 @@ object SelectionPlanQueries extends QueryGroup {
           CASE WHEN CAST(len(list_filter(tk, t -> t IN ($allStops))) AS BIGINT)
             * 1000 >= CAST(len(tk) AS BIGINT) * 60 THEN 1 ELSE 0 END AS b
         FROM (SELECT n_chars,
-                list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+                $duckTokens AS tk
               FROM documents)
         WHERE len(tk) >= 1),
       g AS (SELECT *, greatest(a, b) AS s FROM f),

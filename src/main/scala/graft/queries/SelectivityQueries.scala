@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Deterministic.cents
 import graft.functions.expressions.poly_hash
+import graft.queries.SqlMacros._
 
 /** Round-4 selectivity/storage operators: equi-width vs equi-depth
   * histogram selectivity q-errors, content-defined chunking dedup
@@ -197,15 +198,12 @@ object SelectivityQueries extends QueryGroup {
             .as("dedup_savings_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH docs AS (
         SELECT doc_id, source, text, len(text)::BIGINT AS len FROM documents),
       cand AS (
         SELECT doc_id, source, text, i,
-          list_reduce(list_prepend(0::BIGINT,
-            [ord(c)::BIGINT for c in str_split(substring(text,
-               CAST(i - 7 AS INTEGER), 8), '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) AS h
+          ${duckPolyHashOf("substring(text, CAST(i - 7 AS INTEGER), 8)")} AS h
         FROM docs, LATERAL (SELECT unnest(range(8, len + 1)) AS i) g),
       bounds AS (
         SELECT c.doc_id, c.source, c.text, c.i
@@ -218,13 +216,7 @@ object SelectivityQueries extends QueryGroup {
         SELECT source,
           i - coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i) + 1, 1) + 1
             AS clen,
-          list_reduce(list_prepend(0::BIGINT,
-            [ord(c)::BIGINT for c in str_split(substring(text,
-               CAST(coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i) + 1, 1)
-                 AS INTEGER),
-               CAST(i - coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i)
-                 + 1, 1) + 1 AS INTEGER)), '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) AS chash,
+          ${duckPolyHashOf("substring(text, CAST(coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i) + 1, 1) AS INTEGER), CAST(i - coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i) + 1, 1) + 1 AS INTEGER))")} AS chash,
           i, doc_id
         FROM bounds),
       ck AS (SELECT source, chash, clen FROM chunks WHERE clen >= 1),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-10 batch 5: an exact banded dynamic-time-warping alignment
   * (the first true DP alignment in the catalog — every prior series
@@ -167,10 +168,10 @@ object SeriesCodecPlanQueries extends QueryGroup {
           expr("ef_bits * 1000000 div raw_bits").as("ef_vs_raw_ppm"))
         .orderBy(col("log2_df"))
     },
-    Some("""
+    Some(s"""
       WITH postings AS (
         SELECT doc_id, unnest(list_distinct(
-          list_filter(str_split(text, ' '), t -> len(t) > 0))) AS token
+          $duckTokens)) AS token
         FROM documents),
       u AS MATERIALIZED (
         SELECT CAST(max(doc_id) + 1 AS BIGINT) AS u FROM postings),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.cents
+import graft.queries.SqlMacros._
 
 /** Round-4 signal/record operators: maximum-sum campaign window (Kadane
   * via prefix sums), golden-record survivorship merge, and binned
@@ -12,9 +13,6 @@ import graft.functions.Deterministic.cents
   * quantile-regression readouts, all integer-exact for the oracle gate.
   */
 object SignalQueries extends QueryGroup {
-
-  /** The shared whitespace tokenizer, as DuckDB SQL. */
-  private val duckTokens = "list_filter(str_split(text, ' '), t -> len(t) > 0)"
 
   // ---------------------------------------------------------------- q390
 
@@ -141,11 +139,11 @@ object SignalQueries extends QueryGroup {
           col("lang_majority"), col("source_majority"), col("max_chars"))
         .orderBy(col("canonical_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id, lang, source, n_chars,
           array_to_string(
-            list_filter(str_split(text, ' '), t -> len(t) > 0)[1:8], ' ') AS text
+            $duckTokens[1:8], ' ') AS text
         FROM documents),
       base AS (
         SELECT text, min(doc_id) AS canonical_id,
@@ -261,7 +259,7 @@ object SignalQueries extends QueryGroup {
     },
     Some(s"""
       WITH tk AS (
-        SELECT doc_id, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT doc_id, $duckTokens AS tk
         FROM documents),
       grams AS (
         SELECT unnest([array_to_string(t.tk[i:i+2], ' ')
@@ -335,12 +333,12 @@ object SignalQueries extends QueryGroup {
         .union(round2)
         .orderBy(col("round"), col("rk"))
     },
-    Some("""
+    Some(s"""
       WITH words AS (
         SELECT w, CAST(count(*) AS BIGINT) AS f,
           array_to_string([substring(w, CAST(i AS INTEGER), 1)
                            for i in range(1, len(w) + 1)], ' ') AS seq
-        FROM (SELECT unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS w
+        FROM (SELECT unnest($duckTokens) AS w
               FROM documents)
         GROUP BY w),
       p1 AS (

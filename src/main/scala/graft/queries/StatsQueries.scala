@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic._
+import graft.queries.SqlMacros._
 
 /** Distribution statistics and remaining grouping/windowing shapes:
   * exact rank-based percentiles, CUBE, and batch session windows. */
@@ -171,9 +172,9 @@ object StatsQueries extends QueryGroup {
         .orderBy(col("n").desc, col("token"))
         .limit(20)
     },
-    Some("""
+    Some(s"""
       SELECT token, count(*) AS n
-      FROM (SELECT unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS token
+      FROM (SELECT unnest($duckTokens) AS token
             FROM documents)
       GROUP BY token ORDER BY n DESC, token LIMIT 20
     """))

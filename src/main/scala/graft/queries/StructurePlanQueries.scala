@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-10 batch 4: access-structure probes — the MaxScore/WAND
   * pruning audit every disjunctive top-k engine runs before sizing its
@@ -67,10 +68,10 @@ object StructurePlanQueries extends QueryGroup {
         .crossJoin(broadcast(totals))
         .orderBy(col("ub"), col("token"))
     },
-    Some("""
+    Some(s"""
       WITH tokens AS (
         SELECT doc_id,
-          unnest(list_filter(str_split(text, ' '), t -> len(t) > 0))
+          unnest($duckTokens)
             AS token
         FROM documents),
       terms AS MATERIALIZED (

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-9 batch 3: stylometric source profiling — does each ingestion
   * source write like the others? Burrows-Delta-style fingerprint
@@ -55,10 +56,10 @@ object StylePlanQueries extends QueryGroup {
         .select(col("s1"), col("s2"), col("l1_ppm"))
         .orderBy(col("s1"), col("s2"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT source,
-          unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS tk
+          unnest($duckTokens) AS tk
         FROM documents),
       top8 AS (
         SELECT tk FROM tok GROUP BY tk
@@ -113,10 +114,10 @@ object StylePlanQueries extends QueryGroup {
           expr("n_poly3 * 1000000 div n_words").as("poly3_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT source,
-          unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS tk
+          unnest($duckTokens) AS tk
         FROM documents),
       words AS (
         SELECT source,
@@ -166,9 +167,9 @@ object StylePlanQueries extends QueryGroup {
           expr("n_exclusive * 1000000 div n_bigrams").as("exclusive_ppm"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS w
+        SELECT source, $duckTokens AS w
         FROM documents),
       inst AS (
         SELECT DISTINCT source, w[i] || ' ' || w[i+1] AS b

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-12 batch 1: variable-length exact-substring dedup — the
   * suffix-array-grade maximal-repeat form of Lee et al.'s
@@ -45,7 +46,7 @@ object SuffixDedupQueries extends QueryGroup {
   private val repeatSql: String = s"""
     tk AS MATERIALIZED (
       SELECT doc_id, source,
-        list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        $duckTokens AS tk
       FROM documents),
     tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
             CAST(sum(len(tk)) AS BIGINT) AS tokens FROM tk GROUP BY source),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.cents
+import graft.queries.SqlMacros._
 
 /** Round-4 synopsis/signal operators: HyperLogLog register sketching
   * (baked off against KMV and exact counts), Haar wavelet synopsis of
@@ -68,7 +69,7 @@ object SynopsisQueries extends QueryGroup {
     },
     Some(s"""
       WITH tk AS (
-        SELECT source, list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+        SELECT source, $duckTokens AS tk
         FROM documents),
       bg AS (
         SELECT source,
@@ -76,8 +77,7 @@ object SynopsisQueries extends QueryGroup {
         FROM tk WHERE len(tk) >= 2),
       ph AS (
         SELECT source,
-          list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in str_split(bg, '')]),
-                      (h, c) -> (h * 31 + c) % 1000000007) AS p
+          ${duckPolyHashOf("bg")} AS p
         FROM bg),
       hsrc AS (
         SELECT source, ((p % 2147483648) * 2654435761) % 4294967296 AS h

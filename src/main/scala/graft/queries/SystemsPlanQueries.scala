@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.cents
+import graft.queries.SqlMacros._
 
 /** Round-5 serving/storage-infrastructure planning operators: the
   * distributed-systems capacity math a 100 TB corpus platform runs over
@@ -504,10 +505,10 @@ object SystemsPlanQueries extends QueryGroup {
             .as("savings_ppm"))
         .orderBy(col("batch_size"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT doc_id,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+          CAST(len($duckTokens)
             AS BIGINT) AS tok
         FROM documents),
       batched AS (

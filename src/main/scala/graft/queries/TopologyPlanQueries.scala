@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 17: structure under pressure — dominant-resource-fair
   * allocation, bond-percolation robustness, and rich-club structure.
@@ -81,10 +82,10 @@ object TopologyPlanQueries extends QueryGroup {
             .as("binding_resource"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tenants AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-          CAST(sum(len(list_filter(str_split(text, ' '), t -> len(t) > 0)))
+          CAST(sum(len($duckTokens))
             AS BIGINT) AS toks,
           CAST(sum(n_chars) AS BIGINT) AS chars
         FROM documents GROUP BY source),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Deterministic.cents
+import graft.queries.SqlMacros._
 import graft.text.TextFunctions
 
 /** Round-4 training-data preparation operators: context-window chunking,
@@ -48,10 +49,10 @@ object TrainPrepQueries extends QueryGroup {
           element_at(col("chunk"), -1).as("last_tok"))
         .orderBy("doc_id", "chunk_idx")
     },
-    Some("""
+    Some(s"""
       WITH t AS (
         SELECT doc_id,
-          list_filter(str_split(text, ' '), x -> len(x) > 0) AS toks
+          $duckTokens AS toks
         FROM documents),
       n AS (
         SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n
@@ -92,9 +93,9 @@ object TrainPrepQueries extends QueryGroup {
         .orderBy(col("n").desc, col("pair"))
         .limit(50)
     },
-    Some("""
+    Some(s"""
       WITH w AS (
-        SELECT unnest(list_filter(str_split(text, ' '), t -> len(t) > 0)) AS w
+        SELECT unnest($duckTokens) AS w
         FROM documents),
       wc AS (SELECT w, count(*) AS wc FROM w GROUP BY w),
       p AS (
@@ -252,10 +253,10 @@ object TrainPrepQueries extends QueryGroup {
           greatest(col("quota") - col("n_tokens") * 4, lit(0L)).as("shortfall"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT source,
-          CAST(sum(len(list_filter(str_split(text, ' '), t -> len(t) > 0)))
+          CAST(sum(len($duckTokens))
             AS BIGINT) AS n_tokens
         FROM documents GROUP BY source),
       tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,

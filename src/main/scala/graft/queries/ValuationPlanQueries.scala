@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.SqlMacros._
 
 /** Round-6 batch 14: valuation and guarantee machinery — the two-pass
   * exact distributed median, KNN-Shapley data valuation, and
@@ -142,10 +143,10 @@ object ValuationPlanQueries extends QueryGroup {
         .orderBy(col("avg_shapley_nano").desc, col("vec_id"))
         .limit(20)
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
-          list_transform(embedding, x -> CAST(floor(x * 512 + 0.5) AS BIGINT)) AS v
+          $duckQuantVec AS v
         FROM embeddings),
       tests AS (SELECT vec_id AS tid, label AS tlabel, v AS tv
                 FROM base WHERE vec_id < 10),
@@ -234,15 +235,15 @@ object ValuationPlanQueries extends QueryGroup {
           expr("covered * 1000000 div n_test").as("coverage_ppm"))
         .orderBy(col("level_pml"))
     },
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT n_chars AS y,
-          CAST(len(list_filter(str_split(text, ' '), t -> len(t) > 0))
+          CAST(len($duckTokens)
             AS BIGINT) AS x,
           ((doc_id % 2147483648) * 2246822519) % 4294967296
             // 2147483648 AS is_test
         FROM documents
-        WHERE len(list_filter(str_split(text, ' '), t -> len(t) > 0)) >= 1),
+        WHERE len($duckTokens) >= 1),
       slope AS (
         SELECT CAST(sum(y) * 1000 // sum(x) AS BIGINT) AS m_milli,
           CAST(count(*) AS BIGINT) AS n_cal

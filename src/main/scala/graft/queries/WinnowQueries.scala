@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.expressions.{poly_hash, tokens_native}
+import graft.queries.SqlMacros._
 
 /** Round-4 fingerprint/eval/graph operators: minimizer (winnowing-style)
   * fingerprint sampling with a cross-document share census, the McNemar
@@ -73,10 +74,10 @@ object WinnowQueries extends QueryGroup {
           coalesce(col("n_shared_fps"), lit(0L)).as("n_shared_fps"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
         SELECT doc_id, source,
-          list_filter(str_split(text, ' '), t -> len(t) > 0) AS tk
+          $duckTokens AS tk
         FROM documents),
       sh AS (
         SELECT doc_id, source, i,
@@ -86,9 +87,7 @@ object WinnowQueries extends QueryGroup {
         WHERE len(tk) >= 4),
       ph AS (
         SELECT doc_id, source, i,
-          list_reduce(list_prepend(0::BIGINT,
-              [ord(c)::BIGINT for c in str_split(shingle, '')]),
-            (h, c) -> (h * 31 + c) % 1000000007) AS p
+          ${duckPolyHashOf("shingle")} AS p
         FROM sh),
       keyed AS (
         SELECT doc_id, source, i,
@@ -160,11 +159,11 @@ object WinnowQueries extends QueryGroup {
             .as("mcnemar_milli"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH flags AS (
         SELECT source,
           CASE WHEN n_chars >= 400 THEN 1 ELSE 0 END AS a,
-          CASE WHEN len(list_filter(str_split(text, ' '), t -> len(t) > 0)) >= 80
+          CASE WHEN len($duckTokens) >= 80
             THEN 1 ELSE 0 END AS b
         FROM documents),
       cells AS (

@@ -42,11 +42,6 @@ object Pipelines {
       .option("kafka.request.timeout.ms", "60000")
       .option("kafka.session.timeout.ms", "60000")
 
-  def kafkaOrderStream(spark: SparkSession, bootstrapServers: String,
-                       topic: String = "ecommerce-orders",
-                       maxOffsetsPerTrigger: Long = 1000L): DataFrame =
-    kafkaOrderReader(spark, bootstrapServers, topic, maxOffsetsPerTrigger).load()
-
   /** S2 — rate source + deterministic order synthesis
     * (ecommerce_streaming.py:171-184): the executable path. */
   def sampleOrderStream(spark: SparkSession, rowsPerSecond: Int = 10): DataFrame =
